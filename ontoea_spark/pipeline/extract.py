@@ -83,6 +83,9 @@ def extract_pages_text(pages: DataFrame, use_udf: bool = False) -> DataFrame:
     the whole-stage-codegen built-in beats shipping every page across
     the Python boundary (guide §4.1 — prefer built-ins when they exist;
     measured 2.7x on the replicated corpus, byte-identical output).
+    Both paths decode only the matched body as UTF-8: invalid bytes
+    outside the ``<p>`` body never fail the page, invalid bytes inside
+    it raise.
     ``use_udf=True`` keeps the Arrow-UDF seam for real-crawl extractors
     that need a Python library (trafilatura-style) behind the same
     signature — that is what :func:`extract_text_udf` exists for.
@@ -93,10 +96,14 @@ def extract_pages_text(pages: DataFrame, use_udf: bool = False) -> DataFrame:
         # Java regex: (?s) == re.DOTALL; leftmost shortest match —
         # identical semantics to _BODY_RE / the UDF's RE2 pattern for
         # this grammar (parity asserted in tests/test_entry.py and the
-        # extract_fidelity oracle)
-        text = F.regexp_extract(
-            F.decode(F.col("html"), "utf-8"), r"(?s)<p>(.*?)</p>", 1
+        # extract_fidelity oracle). ISO-8859-1 maps every byte to one
+        # char, so the match runs on the raw bytes; UTF-8 multi-byte
+        # sequences never contain ASCII, so the body bytes are the same
+        # as a whole-page UTF-8 decode would match
+        body = F.regexp_extract(
+            F.decode(F.col("html"), "ISO-8859-1"), r"(?s)<p>(.*?)</p>", 1
         )
+        text = F.decode(F.encode(body, "ISO-8859-1"), "utf-8")
     return pages.select("url", "warc_ts", "lang", text.alias("text"))
 
 

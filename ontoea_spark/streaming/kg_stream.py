@@ -9,27 +9,45 @@ O(delta + one scan) edge merge. The stream therefore converges to the
 same URI-level graph as a one-shot batch rebuild over the same pages
 (id ASSIGNMENT differs by arrival order — the documented incremental
 deviation from the batch interleave — but the decoded (s, p, o, kg)
-edge set is identical; asserted by tests/test_streaming.py).
+edge set is identical; asserted by tests/test_streaming.py). The same
+store also carries the host link graph, the canonical insert/delete
+log and the corpus profile sketches.
 
-State layout (the Iceberg-append analogue this sandbox can express in
-plain parquet): each micro-batch commits ONLY ITS DELTA —
-``{state_dir}/v{batch_id}/{ent_ids,rel_ids,edges}`` holds the NEW
-dictionary rows (ids above the parent's max — the frozen-append
-contract makes "new" a cheap id-range filter) and the NOVEL edges
-(``incremental_update`` already computes them for the anti-join merge).
-A batch's write cost is O(delta), never O(graph) — at 10^12 documents a
-full-table rewrite per micro-batch would be the scale killer. Reading
-state = union of committed deltas at or below a version (Iceberg's
-manifest-of-files, literally). foreachBatch may REPLAY a batch after a
-crash; delta dirs keyed by batch_id make the retry idempotent — a
-replayed batch re-reads deltas strictly below its own id and overwrites
-only its own. Long streams compact old deltas exactly as Iceberg
-compacts manifests; compaction changes file layout, not content.
+The versioned-delta store (the Iceberg-append analogue, in plain
+parquet) is one contract shared by all four kinds of state; each kind
+only names its tables and its merge-on-read:
+
+* **Layout.** Micro-batch ``n`` commits ONLY ITS DELTA as one parquet
+  dir per table, ``{state_dir}/v{n}/{table}/``. Write cost is O(delta),
+  never O(graph) — at 10^12 documents a full-table rewrite per
+  micro-batch would be the scale killer.
+* **Commit marker.** A version exists once EVERY table of its kind has
+  its parquet ``_SUCCESS`` marker; a half-written version from a crashed
+  batch is invisible.
+* **Read.** State = the kind's merge over one multi-path scan per table
+  of the committed versions (Iceberg's manifest-of-files, literally).
+  foreachBatch may REPLAY a batch after a crash: a replaying batch reads
+  only versions ``< before`` (its own id) and overwrites only its own
+  dir, so the retry is idempotent.
+* **Compaction** (offline, stream stopped — Iceberg's manifest
+  compaction): the merged view is written to ``_compact_v{max}``, every
+  older dir is removed and the temp dir is renamed to ``v{max}``.
+  Content and version numbering are unchanged (the stream's next
+  batch_id lives in its own Spark checkpoint and is strictly greater).
+  The swap is not atomic, so a COMPLETE ``_compact_v{n}`` already
+  replaces every ``v{m}`` with m <= n on read; an incomplete one is
+  ignored, and the next compaction finishes the swap.
+* **Local only.** Listing and the swap use ``os`` while Spark writes go
+  through Hadoop, so a ``state_dir`` with a URI scheme other than
+  ``file:`` is rejected with ``ValueError`` rather than read as empty.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,51 +57,116 @@ REL_SCHEMA = ENT_SCHEMA
 EDGE_SCHEMA = "s_id long, p_id long, o_id long, kg long"
 
 _STATE_TABLES = ("ent_ids", "rel_ids", "edges")
+_COMPACT = "_compact_"
+_VERSION_NAME = re.compile(rf"(?:{_COMPACT})?v(\d+)")
 
 
-def _committed_versions(
-    state_dir: str, tables: tuple[str, ...] = _STATE_TABLES
-) -> list[int]:
-    """Versions whose LAST table write finished (parquet _SUCCESS marker
-    on every table — a half-written snapshot from a crashed batch is
-    invisible and its replay overwrites it)."""
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for name in os.listdir(state_dir):
-        if not name.startswith("v"):
-            continue
-        base = os.path.join(state_dir, name)
-        if all(
-            os.path.exists(os.path.join(base, t, "_SUCCESS"))
-            for t in tables
+def _local_path(path: str) -> str:
+    """The ``os`` path of a state dir; ValueError unless it is local."""
+    uri = urlparse(path)
+    if uri.scheme not in ("", "file"):
+        raise ValueError(f"streaming state needs a local state_dir, got {path!r}")
+    return uri.path if uri.scheme else path
+
+
+def _version_dir(state_dir: str, v: int, compact: bool = False) -> str:
+    return os.path.join(state_dir, (_COMPACT if compact else "") + f"v{v}")
+
+
+def _committed_dirs(state_dir: str, tables, before: int | None = None) -> dict:
+    """Committed version -> its dir, ascending, for versions < ``before``.
+    The newest complete ``_compact_v{n}`` stands for every version <= n."""
+    local = _local_path(state_dir)
+    done = {}
+    for name in os.listdir(local) if os.path.isdir(local) else ():
+        m = _VERSION_NAME.fullmatch(name)
+        if m and all(
+            os.path.exists(os.path.join(local, name, t, "_SUCCESS")) for t in tables
         ):
-            out.append(int(name[1:]))
-    return sorted(out)
+            done[int(m[1]), name.startswith(_COMPACT)] = os.path.join(state_dir, name)
+    floor = max((v for v, compact in done if compact), default=-1)
+    return {
+        v: d
+        for (v, compact), d in sorted(done.items())
+        if (v > floor or compact and v == floor) and (before is None or v < before)
+    }
+
+
+def _committed_versions(state_dir: str, tables=_STATE_TABLES) -> list[int]:
+    return list(_committed_dirs(state_dir, tables))
+
+
+def _read(spark, state_dir: str, tables, before: int | None = None):
+    """One multi-path parquet scan per table over the committed versions
+    (the union is file listing, not a shuffle); None if there are none."""
+    dirs = _committed_dirs(state_dir, tables, before).values()
+    if not dirs:
+        return None
+    return tuple(
+        spark.read.parquet(*[os.path.join(d, t) for d in dirs]) for t in tables
+    )
+
+
+def _commit(state_dir: str, v: int, tables, frames, compact: bool = False) -> None:
+    _local_path(state_dir)  # reject a remote state_dir before anything lands
+    for t, df in zip(tables, frames):
+        path = os.path.join(_version_dir(state_dir, v, compact), t)
+        df.write.mode("overwrite").parquet(path)
+
+
+def _compact(state_dir: str, tables, merged) -> int:
+    """Write ``merged(vmax)`` (the merged view, one frame per table) as
+    ``_compact_v{vmax}``, drop every older dir, rename it to ``v{vmax}``.
+    A complete ``_compact_v{vmax}`` left by an interrupted run is
+    already the merged view, so only the swap is redone."""
+    dirs = _committed_dirs(state_dir, tables)
+    if not dirs:
+        raise ValueError(f"no committed state under {state_dir}")
+    vmax = max(dirs)
+    tmp = _version_dir(state_dir, vmax, compact=True)
+    if dirs[vmax] != tmp:
+        _commit(state_dir, vmax, tables, merged(vmax), compact=True)
+    local = _local_path(state_dir)
+    for name in os.listdir(local):
+        m = _VERSION_NAME.fullmatch(name)
+        if m and int(m[1]) <= vmax and name != os.path.basename(tmp):
+            shutil.rmtree(os.path.join(local, name))
+    os.rename(_local_path(tmp), _local_path(_version_dir(state_dir, vmax)))
+    return vmax
+
+
+def _drain(spark, pages_path, state_dir, checkpoint_dir, max_files_per_trigger, fold):
+    """Run ``fold(batch_df, batch_id)`` over a stream of pages files with
+    an availableNow trigger (drains everything currently present, then
+    stops — the bounded-source test mode; a production crawl drops the
+    trigger and runs forever). Returns the terminated query."""
+    from ontoea_spark.streaming.ingest import read_pages_stream
+
+    _local_path(state_dir)  # fail here, not inside the first micro-batch
+    stream = read_pages_stream(
+        spark, pages_path, max_files_per_trigger=max_files_per_trigger
+    )
+    q = (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+# ---------------------------------------------------------------------------
+# streaming KG: dictionary + edges
+# ---------------------------------------------------------------------------
 
 
 def read_kg_state(
     spark, state_dir: str, before: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
-    """(ent_ids, rel_ids, edges) as the UNION of committed deltas,
-    optionally restricted to versions < ``before`` (a replaying batch
-    must read strictly below its own id, never its own half-committed
-    delta). None if no snapshot exists yet. One multi-path parquet scan
-    per table — the union is file listing, not a shuffle."""
-    versions = _committed_versions(state_dir)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    return tuple(
-        spark.read.parquet(
-            *[
-                os.path.join(state_dir, f"v{v}", t)
-                for v in versions
-            ]
-        )
-        for t in _STATE_TABLES
-    )
+    """(ent_ids, rel_ids, edges) as the UNION of committed deltas below
+    ``before``. None if no snapshot exists yet."""
+    return _read(spark, state_dir, _STATE_TABLES, before)
 
 
 def _empty_state(spark) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -122,13 +205,9 @@ def ingest_pages_batch(
         triples.select("s", "p", "o"),
         F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2)),
     )
-    base = os.path.join(state_dir, f"v{batch_id}")
-    for name, df in (
-        ("ent_ids", inc.ent_ids.filter(F.col("id") > ent_max)),
-        ("rel_ids", inc.rel_ids.filter(F.col("id") > rel_max)),
-        ("edges", inc.novel_edges),
-    ):
-        df.write.mode("overwrite").parquet(os.path.join(base, name))
+    new_ent = inc.ent_ids.filter(F.col("id") > ent_max)
+    new_rel = inc.rel_ids.filter(F.col("id") > rel_max)
+    _commit(state_dir, batch_id, _STATE_TABLES, (new_ent, new_rel, inc.novel_edges))
 
 
 def streaming_kg_build(
@@ -138,56 +217,22 @@ def streaming_kg_build(
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
 ):
-    """Run the incremental KG build over a stream of pages files with an
-    availableNow trigger (drains everything currently present, then
-    stops — the bounded-source test mode; a production crawl drops the
-    trigger and runs forever). Returns the terminated query."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
+    """Run the incremental KG build over a stream of pages files
+    (availableNow drain). Returns the terminated query."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_pages_batch(batch_df, spark, state_dir, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, pages_path, state_dir, checkpoint_dir, max_files_per_trigger, fold
     )
-    q.awaitTermination()
-    return q
 
 
 def compact_kg_state(spark, state_dir: str) -> int:
-    """Offline maintenance (run while the stream is stopped — the
-    Iceberg compaction analogue): merge all committed deltas into one
-    delta dir under the CURRENT max version id, so reads scan one file
-    set instead of one per micro-batch. Content is unchanged; version
-    numbering is unchanged (the stream's next batch_id is tracked by its
-    own Spark checkpoint and is strictly greater, so no collision).
-    Returns the compacted version id.
-
-    Crash-safety note, honestly: the sandbox's parquet layout swaps
-    directories (write merged -> remove old -> rename), which is not
-    atomic end-to-end; production Iceberg expresses this as a single
-    snapshot commit. Run it as stop-the-world maintenance here."""
-    import shutil
-
-    versions = _committed_versions(state_dir)
-    if not versions:
-        raise ValueError(f"no committed state under {state_dir}")
-    vmax = versions[-1]
-    state = read_kg_state(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    for name, df in zip(_STATE_TABLES, state):
-        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    """Offline maintenance: merge all committed deltas into one delta
+    dir under the CURRENT max version id, so reads scan one file set
+    instead of one per micro-batch. Returns the compacted version id."""
+    return _compact(state_dir, _STATE_TABLES, lambda _: read_kg_state(spark, state_dir))
 
 
 def decoded_edges(
@@ -235,6 +280,11 @@ def decoded_edges(
 # ---------------------------------------------------------------------------
 # streaming host link graph (additive-state rollup)
 # ---------------------------------------------------------------------------
+#
+# Edge weight is a sum — a commutative monoid — so unlike the
+# dictionary-bearing KG state a batch commits its own partial counts
+# with NO read of parent state (O(batch), zero graph-sized scans), and
+# the merged view is a groupBy-sum over the committed deltas.
 
 _HOST_TABLES = ("host_edges",)
 
@@ -242,21 +292,11 @@ _HOST_TABLES = ("host_edges",)
 def ingest_links_batch(pages: DataFrame, state_dir: str, batch_id: int) -> None:
     """foreachBatch body for the streaming host link graph: this batch's
     pages -> href anchors -> host-edge PARTIAL counts, committed as the
-    batch's own delta dir.
-
-    Edge weight is a sum — a commutative-monoid state — so unlike the
-    dictionary-bearing KG state this delta needs NO read of parent state
-    at all: write cost is O(batch) with zero graph-sized scans, a
-    crash-replay overwrites only its own version dir, and the merged
-    view is a groupBy-sum over committed deltas at read time (the
-    metrics-rollup pattern every streaming engine special-cases; here it
-    falls out of the versioned-delta layout)."""
+    batch's own delta dir."""
     from ontoea_spark.pipeline.weblinks import extract_links, host_link_graph
 
-    g = host_link_graph(extract_links(pages))
-    g.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"v{batch_id}", "host_edges")
-    )
+    edges = host_link_graph(extract_links(pages))
+    _commit(state_dir, batch_id, _HOST_TABLES, (edges,))
 
 
 def read_host_graph(
@@ -264,15 +304,10 @@ def read_host_graph(
 ) -> DataFrame | None:
     """Merged host graph = groupBy-sum over committed partial-count
     deltas (one multi-path scan). None if nothing is committed yet."""
-    versions = _committed_versions(state_dir, tables=_HOST_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
+    state = _read(spark, state_dir, _HOST_TABLES, before)
+    if state is None:
         return None
-    df = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "host_edges") for v in versions]
-    )
-    return df.groupBy("src_host", "dst_host").agg(
+    return state[0].groupBy("src_host", "dst_host").agg(
         F.sum("n_links").cast("long").alias("n_links")
     )
 
@@ -285,48 +320,25 @@ def streaming_host_graph(
     max_files_per_trigger: int = 2,
 ):
     """Incremental host-graph maintenance over a stream of pages files
-    (availableNow drain for the bounded test mode; a production crawl
-    runs unbounded). Converges to exactly the batch
+    (availableNow drain). Converges to exactly the batch
     host_link_graph(extract_links(pages)) counts — addition is
-    arrival-order-free, so there is no incremental deviation at all
-    (asserted by tests/test_streaming.py)."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
+    arrival-order-free, so there is no incremental deviation at all."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_links_batch(batch_df, state_dir, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, pages_path, state_dir, checkpoint_dir, max_files_per_trigger, fold
     )
-    q.awaitTermination()
-    return q
 
 
 def compact_host_graph(spark, state_dir: str) -> int:
     """Merge all committed host-edge deltas into one PRE-AGGREGATED
-    delta under the current max version id (stop-the-world maintenance,
-    same contract as compact_kg_state). The merged view is unchanged:
-    read-time groupBy-sum over one pre-summed delta is the identity."""
-    import shutil
-
-    versions = _committed_versions(state_dir, tables=_HOST_TABLES)
-    if not versions:
-        raise ValueError(f"no committed host-graph state under {state_dir}")
-    vmax = versions[-1]
-    merged = read_host_graph(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "host_edges"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    delta under the current max version id: read-time groupBy-sum over
+    one pre-summed delta is the identity."""
+    return _compact(
+        state_dir, _HOST_TABLES, lambda _: (read_host_graph(spark, state_dir),)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -334,15 +346,12 @@ def compact_host_graph(spark, state_dir: str) -> int:
 # ---------------------------------------------------------------------------
 #
 # Canonicalization state is NOT an additive monoid (a batch whose links
-# dethrone a canonical RETRACTS previously-committed rows), so the
-# host-graph partial-sum trick doesn't apply. The versioned-delta layout
-# still does: each batch commits its CanonicalDelta change sets as an
-# insert/delete log (``triple_log``: s,p,o,op,v) plus latest-wins map
-# rows (``map_log``: entity,canonical,v) — exactly Iceberg's
-# merge-on-read delete files. Commit cost is O(delta + affected); the
-# merged view is ONE groupBy (max_by over the version) per table at read
-# time; a crash-replay re-reads strictly below its own version and
-# overwrites only its own dir, so replays are idempotent.
+# dethrone a canonical RETRACTS previously-committed rows). Each batch
+# commits its CanonicalDelta change sets as an insert/delete log
+# (``triple_log``: s,p,o,op,v) plus latest-wins map rows (``map_log``:
+# entity,canonical,v) — Iceberg's merge-on-read delete files. Commit
+# cost is O(delta + affected); the merged view is ONE groupBy (max_by
+# over the version) per table.
 
 _CANON_TABLES = ("triple_log", "map_log")
 TRIPLE_LOG_SCHEMA = "s string, p string, o string, op string, v long"
@@ -355,17 +364,10 @@ def read_canonical_state(
     """(triples, mapping) from the log: the latest op per (s,p,o) wins
     (a delete tombstone drops the row), the latest canonical per entity
     wins. None before the first commit."""
-    versions = _committed_versions(state_dir, tables=_CANON_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
+    state = _read(spark, state_dir, _CANON_TABLES, before)
+    if state is None:
         return None
-    tl = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "triple_log") for v in versions]
-    )
-    ml = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "map_log") for v in versions]
-    )
+    tl, ml = state
     triples = (
         tl.groupBy("s", "p", "o")
         .agg(F.max_by("op", "v").alias("op"))
@@ -417,16 +419,12 @@ def ingest_canonical_stream_batch(
             d.changed_map_rows,
         )
     try:
-        base = os.path.join(state_dir, f"v{batch_id}")
+        v = F.lit(batch_id).cast("long")
         log = novel.withColumn("op", F.lit("insert")).unionByName(
             retracted.withColumn("op", F.lit("delete"))
         )
-        log.withColumn("v", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "triple_log"))
-        changed_map.withColumn("v", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "map_log"))
+        frames = (log.withColumn("v", v), changed_map.withColumn("v", v))
+        _commit(state_dir, batch_id, _CANON_TABLES, frames)
     finally:
         if cur_t is not None:
             cur_t.unpersist()
@@ -434,44 +432,31 @@ def ingest_canonical_stream_batch(
 
 def compact_canonical_state(spark, state_dir: str) -> int:
     """Collapse the insert/delete log into one all-inserts base version
-    (Iceberg's MoR compaction): read the merged view, rewrite it as a
-    single delta under the current max version, drop the rest. The
-    merged view is unchanged by construction."""
-    import shutil
+    (Iceberg's MoR compaction). The merged view is unchanged by
+    construction."""
 
-    versions = _committed_versions(state_dir, tables=_CANON_TABLES)
-    if not versions:
-        raise ValueError(f"no committed canonical state under {state_dir}")
-    vmax = versions[-1]
-    triples, mapping = read_canonical_state(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    triples.withColumn("op", F.lit("insert")).withColumn(
-        "v", F.lit(vmax).cast("long")
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "triple_log"))
-    mapping.withColumn("v", F.lit(vmax).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp, "map_log"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    def base(vmax: int) -> tuple[DataFrame, DataFrame]:
+        triples, mapping = read_canonical_state(spark, state_dir)
+        v = F.lit(vmax).cast("long")
+        return (
+            triples.withColumn("op", F.lit("insert")).withColumn("v", v),
+            mapping.withColumn("v", v),
+        )
+
+    return _compact(state_dir, _CANON_TABLES, base)
 
 
 # ---------------------------------------------------------------------------
 # streaming corpus profile: sketch state (additive CMS + semilattice KMV)
 # ---------------------------------------------------------------------------
 #
-# The profiling sketches (operators/sketches.py) are the two easiest
-# kinds of streaming state there are, and for opposite algebraic
-# reasons: count-min cells are an additive monoid (the host-graph
-# partial-sum shape — read = groupBy-sum over deltas) and KMV minima are
-# a semilattice (merge = k-smallest-of-union — read = k-minima over the
-# flattened deltas). Both mean a micro-batch commits ONLY its own
-# batch-local sketch: zero parent reads, O(batch) write cost, and the
-# merged view equals the one-shot sketch of all rows EXACTLY (monoid /
-# semilattice laws — asserted by tests/test_streaming.py), so a crawl's
-# running cardinality and hot-key profile stays current per micro-batch
-# without ever rescanning the corpus.
+# Count-min cells are an additive monoid (read = groupBy-sum, the host
+# graph shape) and KMV minima a semilattice (read = k smallest of the
+# flattened deltas). Either way a micro-batch commits ONLY its own
+# batch-local sketch — zero parent reads, O(batch) — and the merged view
+# equals the one-shot sketch of all rows EXACTLY (monoid / semilattice
+# laws), so a crawl's running cardinality and hot-key profile stays
+# current per micro-batch without rescanning the corpus.
 
 _PROFILE_TABLES = ("kmv_minima", "cms_cells")
 
@@ -487,17 +472,12 @@ def ingest_profile_batch(
     w: int = 1024,
 ) -> None:
     """foreachBatch body: this batch's rows -> its OWN KMV + CMS sketches,
-    committed as the batch's versioned delta dir (replay overwrites only
-    its own version — idempotent)."""
+    committed as the batch's versioned delta dir."""
     from ontoea_spark.operators.sketches import cms_sketch, kmv_sketch
 
-    base = os.path.join(state_dir, f"v{batch_id}")
-    kmv_sketch(df, list(key_cols), value_col, k).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "kmv_minima"))
-    cms_sketch(df, value_col, d, w).write.mode("overwrite").parquet(
-        os.path.join(base, "cms_cells")
-    )
+    kmv = kmv_sketch(df, list(key_cols), value_col, k)
+    cms = cms_sketch(df, value_col, d, w)
+    _commit(state_dir, batch_id, _PROFILE_TABLES, (kmv, cms))
 
 
 def read_profile(
@@ -511,32 +491,19 @@ def read_profile(
     k smallest of the union of the batch minima (collect_list state is
     bounded at k * n_versions per key; compaction resets it), CMS is the
     host-graph groupBy-sum. None if nothing committed yet."""
-    versions = _committed_versions(state_dir, tables=_PROFILE_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
+    state = _read(spark, state_dir, _PROFILE_TABLES, before)
+    if state is None:
         return None
-    kmv = (
-        spark.read.parquet(
-            *[os.path.join(state_dir, f"v{v}", "kmv_minima") for v in versions]
-        )
-        .groupBy(*key_cols)
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("minima")))
-                ),
-                1,
-                k,
-            ).alias("minima")
-        )
+    kmv_minima, cms_cells = state
+    kmv = kmv_minima.groupBy(*key_cols).agg(
+        F.slice(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("minima")))),
+            1,
+            k,
+        ).alias("minima")
     )
-    cms = (
-        spark.read.parquet(
-            *[os.path.join(state_dir, f"v{v}", "cms_cells") for v in versions]
-        )
-        .groupBy("row", "col")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    cms = cms_cells.groupBy("row", "col").agg(
+        F.sum("cnt").cast("long").alias("cnt")
     )
     return kmv, cms
 
@@ -553,54 +520,25 @@ def streaming_corpus_profile(
 ):
     """Running crawl profile over a stream of pages files: per-lang
     distinct-URL KMV + URL-frequency CMS (recrawl hot-key detector),
-    maintained per micro-batch at O(batch) cost. availableNow drain for
-    the bounded test mode; a production crawl runs unbounded."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
+    maintained per micro-batch at O(batch) cost (availableNow drain)."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_profile_batch(
-            batch_df.select("lang", "url"),
-            state_dir,
-            batch_id,
-            ("lang",),
-            "url",
-            k,
-            d,
-            w,
-        )
+        rows = batch_df.select("lang", "url")
+        ingest_profile_batch(rows, state_dir, batch_id, ("lang",), "url", k, d, w)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, pages_path, state_dir, checkpoint_dir, max_files_per_trigger, fold
     )
-    q.awaitTermination()
-    return q
 
 
 def compact_profile(
     spark, state_dir: str, key_cols: tuple[str, ...], k: int = 64
 ) -> int:
-    """Merge all committed sketch deltas into one (stop-the-world
-    maintenance, same contract as compact_host_graph): semilattice and
+    """Merge all committed sketch deltas into one: semilattice and
     monoid merges are idempotent/associative, so re-reading the single
     compacted delta reproduces the merged view exactly."""
-    import shutil
 
-    versions = _committed_versions(state_dir, tables=_PROFILE_TABLES)
-    if not versions:
-        raise ValueError(f"no committed profile state under {state_dir}")
-    vmax = versions[-1]
-    kmv, cms = read_profile(spark, state_dir, key_cols, k)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    kmv.write.mode("overwrite").parquet(os.path.join(tmp, "kmv_minima"))
-    cms.write.mode("overwrite").parquet(os.path.join(tmp, "cms_cells"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    def merged(vmax: int) -> tuple[DataFrame, DataFrame]:
+        return read_profile(spark, state_dir, key_cols, k)
+
+    return _compact(state_dir, _PROFILE_TABLES, merged)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -37,9 +38,49 @@ def test_extraction_jvm_udf_parity(spark):
     lets the pipeline run the built-in path (guide §4.1) while keeping
     the UDF signature for real-crawl extractors; also covers link-laden
     pages (with_links=True), where the non-greedy match must stop at
-    the FIRST </p>."""
+    the FIRST </p>, and a hand-made malformed-bytes page set: invalid
+    UTF-8 outside the <p> body extracts identically on both paths,
+    invalid UTF-8 inside it fails both."""
+    import datetime
+
     from ontoea_spark.pipeline.extract import extract_pages_text
     from ontoea_spark.pipeline.pages import synthesize_pages
+
+    ts = datetime.datetime(2024, 1, 1)
+    schema = "url string, warc_ts timestamp, lang string, html binary"
+    bad_outside = spark.createDataFrame(
+        [
+            (f"u{i}", ts, "en", bytearray(h))
+            for i, h in enumerate(
+                [
+                    b"<title>\xff\xfe</title><p>caf\xc3\xa9 ok</p>",
+                    b"<p>plain</p>\xc3(\x80 tail",
+                    "<p>na\u00efve \u2014 \u65e5\u672c</p>".encode(),
+                    b"\xff no body \xfe",
+                    b"<p></p><p>second</p>",
+                ]
+            )
+        ],
+        schema,
+    )
+    jvm = {r.url: r.text for r in extract_pages_text(bad_outside).collect()}
+    udf = {
+        r.url: r.text
+        for r in extract_pages_text(bad_outside, use_udf=True).collect()
+    }
+    assert jvm == udf == {
+        "u0": "caf\u00e9 ok",
+        "u1": "plain",
+        "u2": "na\u00efve \u2014 \u65e5\u672c",
+        "u3": "",
+        "u4": "",
+    }
+    bad_inside = spark.createDataFrame(
+        [("u", ts, "en", bytearray(b"<p>bad \xff\xfe body</p>"))], schema
+    )
+    for use_udf in (False, True):
+        with pytest.raises(Exception):
+            extract_pages_text(bad_inside, use_udf=use_udf).collect()
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for with_links in (False, True):

@@ -385,3 +385,136 @@ def test_streaming_profile_sketches_converge_to_batch(spark, tmp_path):
     assert _committed_versions(state, tables=("kmv_minima", "cms_cells")) == [vmax]
     kmv_c, cms_c = read_profile(spark, state, ("lang",), k=16)
     assert kmv_rows(kmv_c) == want_kmv and cms_rows(cms_c) == want_cms
+
+
+def _canon_batches(spark):
+    """Two small (triples, links) canonicalization batches; the second
+    merges the first batch's two components."""
+    triples = "s string, p string, o string"
+    links = "e1 string, e2 string"
+    return [
+        (
+            spark.createDataFrame(
+                [("kg1:a", "p", "kg1:c"), ("kg2:x", "p", "kg2:w")], triples
+            ),
+            spark.createDataFrame([("kg1:a", "kg2:x")], links),
+        ),
+        (
+            spark.createDataFrame([("kg1:b", "q", "kg1:a")], triples),
+            spark.createDataFrame([("kg1:b", "kg2:w")], links),
+        ),
+    ]
+
+
+def _canon_rows(state):
+    triples, mapping = state
+    return (
+        sorted(tuple(r) for r in triples.collect()),
+        sorted(tuple(r) for r in mapping.collect()),
+    )
+
+
+def test_streaming_half_written_version_is_invisible(spark, tmp_path):
+    """A version counts only once EVERY table of its kind has its
+    _SUCCESS marker: a batch that crashed between its two log writes
+    reads as if it never ran, and its replay completes it."""
+    import os
+
+    from ontoea_spark.streaming.kg_stream import (
+        ingest_canonical_stream_batch,
+        read_canonical_state,
+    )
+
+    (t0, l0), (t1, l1) = _canon_batches(spark)
+    state = str(tmp_path / "canon_half")
+    ingest_canonical_stream_batch(spark, t0, l0, state, 0)
+    after0 = _canon_rows(read_canonical_state(spark, state))
+    ingest_canonical_stream_batch(spark, t1, l1, state, 1)
+    after1 = _canon_rows(read_canonical_state(spark, state))
+    assert after1 != after0
+
+    os.remove(os.path.join(state, "v1", "map_log", "_SUCCESS"))
+    assert _canon_rows(read_canonical_state(spark, state)) == after0
+
+    ingest_canonical_stream_batch(spark, t1, l1, state, 1)
+    assert _canon_rows(read_canonical_state(spark, state)) == after1
+
+
+def test_streaming_compaction_crash_keeps_state(spark, tmp_path, monkeypatch):
+    """A compaction that dies after removing the old version dirs but
+    before renaming its merged dir into place must not lose the state:
+    the complete _compact_v{n} replaces every v{m<=n} on read, and the
+    next compaction finishes the swap."""
+    from ontoea_spark.pipeline.pages import synthesize_pages
+    from ontoea_spark.pipeline.weblinks import extract_links, host_link_graph
+    from ontoea_spark.streaming import kg_stream
+    from ontoea_spark.streaming.kg_stream import (
+        _committed_versions,
+        compact_host_graph,
+        ingest_links_batch,
+        read_host_graph,
+    )
+
+    pages = synthesize_pages(
+        spark.read.parquet(f"{SF_SMOKE}/documents.parquet"), with_links=True
+    )
+    state = str(tmp_path / "host_crash")
+    half = F.xxhash64("url") % 2 == 0
+    ingest_links_batch(pages.filter(half), state, 0)
+    ingest_links_batch(pages.filter(~half), state, 1)
+
+    def rows(df):
+        return {(r.src_host, r.dst_host, r.n_links) for r in df.collect()}
+
+    want = rows(host_link_graph(extract_links(pages)))
+    assert rows(read_host_graph(spark, state)) == want and len(want) > 0
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(kg_stream.os, "rename", crash)
+        with pytest.raises(OSError):
+            compact_host_graph(spark, state)
+    assert rows(read_host_graph(spark, state)) == want
+
+    assert compact_host_graph(spark, state) == 1
+    assert _committed_versions(state, ("host_edges",)) == [1]
+    assert rows(read_host_graph(spark, state)) == want
+
+
+def test_streaming_state_dir_must_be_local(spark, tmp_path):
+    """Version listing uses the local filesystem, so a remote state_dir
+    would read as empty while its writes still land: it is rejected.
+    A file: URI is the same local store as the plain path."""
+    from ontoea_spark.streaming.kg_stream import (
+        compact_canonical_state,
+        ingest_canonical_stream_batch,
+        ingest_profile_batch,
+        read_canonical_state,
+        streaming_host_graph,
+    )
+
+    (t0, l0), _ = _canon_batches(spark)
+    urls = spark.createDataFrame([("en", "u")], "lang string, url string")
+    for remote in ("hdfs://namenode:8020/kg_state", "s3a://bucket/kg_state"):
+        with pytest.raises(ValueError, match="local state_dir"):
+            read_canonical_state(spark, remote)
+        with pytest.raises(ValueError, match="local state_dir"):
+            ingest_canonical_stream_batch(spark, t0, l0, remote, 0)
+        with pytest.raises(ValueError, match="local state_dir"):
+            compact_canonical_state(spark, remote)
+        with pytest.raises(ValueError, match="local state_dir"):
+            ingest_profile_batch(urls, remote, 0, ("lang",), "url")
+        with pytest.raises(ValueError, match="local state_dir"):
+            streaming_host_graph(
+                spark, str(tmp_path / "no_pages"), remote, str(tmp_path / "cp")
+            )
+
+    state = tmp_path / "canon_uri"
+    ingest_canonical_stream_batch(spark, t0, l0, state.as_uri(), 0)
+    assert _canon_rows(read_canonical_state(spark, str(state))) == _canon_rows(
+        read_canonical_state(spark, state.as_uri())
+    )
+    assert compact_canonical_state(spark, state.as_uri()) == 0
+    assert (state / "v0" / "map_log" / "_SUCCESS").exists()
