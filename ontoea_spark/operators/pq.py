@@ -19,31 +19,30 @@ replay stays independent of the coarse stage — a documented deviation
 of the ORACLED configuration only, not of the operator surface.
 
 Everything is deterministic and DuckDB-replayable: per-subspace
-codebooks via :func:`ontoea_spark.operators.kmeans.kmeans_fit` (hash-
-seeded init, fixed iterations, per-iteration ``round_to`` pinning),
-code assignment argmin by (round(d2,12), cid), ADC from 9dp-rounded
-per-subspace lookup entries summed in fixed subspace order.
+codebooks via the Lloyd's behind
+:func:`ontoea_spark.operators.kmeans.kmeans_fit` (hash-seeded init,
+fixed iterations, per-iteration ``round_to`` pinning), code assignment
+argmin by (round(d2,12), cid), ADC from 9dp-rounded per-subspace lookup
+entries summed in fixed subspace order.
 
 Scale shape: codebooks are m*k rows (collected — they must broadcast
-anyway); encoding is one broadcast join + per-(id, subspace) argmin;
-candidate generation is the IVF cell equi-join (never all-pairs); ADC
-scoring joins candidates to ONE code-array row per corpus vector and
-ONE lut-array row per query, then computes the distance as a static
-m-term ``element_at`` sum — a pure whole-stage-codegen projection with
-no per-(pair, subspace) shuffle (a pivot-based form would shuffle
-candidates x m rows through a groupBy; the array form shuffles only the
-linear-size code/LUT tables, once). Nothing O(corpus) collects.
+anyway); encoding is one per-row pass of the shared nearest-centroid
+kernel; candidate generation is the IVF cell equi-join (never
+all-pairs); ADC scoring joins candidates to ONE code-array row per
+corpus vector and ONE lut-array row per query, then computes the
+distance as a static m-term array-lookup sum — a pure whole-stage-codegen
+projection with no per-(pair, subspace) shuffle (a pivot-based form
+would shuffle candidates x m rows through a groupBy; the array form
+shuffles only the linear-size code/LUT tables, once). Nothing
+O(corpus) collects.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ontoea_spark.operators.kmeans import _d2
+from ontoea_spark.operators.kmeans import _lloyd, _nearest
 
 
 def subvectors(
@@ -89,100 +88,22 @@ def pq_train_codebooks(
     distributed Lloyd's. Returns DataFrame[j, cid, cvec] (m*k rows —
     driver-resident by necessity: every scoring step broadcasts it).
 
-    All ``m`` chains run FUSED as one Lloyd's over (id, j, sv) rows with
-    centroids keyed (j, cid): one assignment pass + one means collect
-    per iteration for every subspace together, instead of m sequential
-    ``kmeans_fit`` loops (m x fewer blocking driver round-trips — the
-    dominant cost of training, since per-job data is tiny). Bit-equal to
-    the per-subspace loops: the hash-ordered seed ids are the same for
-    every j (the hash keys the id, not the subspace), and assignment /
-    mean rounding are per-(j, cid) exactly as in ``kmeans_fit`` — the
-    NumPy goldens and the per-subspace oracle CTE chains pin this."""
+    All ``m`` chains run FUSED as one Lloyd's with centroids keyed (j,
+    cid): one kernel pass + one means collect per iteration for every
+    subspace together, instead of m sequential ``kmeans_fit`` loops (m x
+    fewer blocking driver round-trips — the dominant cost of training,
+    since per-job data is tiny). Bit-equal to the per-subspace loops:
+    the hash-ordered seed ids are the same for every j (the hash keys
+    the id, not the subspace), and assignment / mean rounding are
+    per-(j, cid) exactly as in ``kmeans_fit`` — the NumPy goldens and
+    the per-subspace oracle CTE chains pin this."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    spark = emb.sparkSession
-
-    # seed ids: smallest (portable_hash, id) — identical for every j, so
-    # ONE collect of the k full vectors, sliced per subspace driver-side
-    from ontoea_spark.functions.hashing import portable_hash64
-
-    seed_rows = (
-        emb.select(
-            F.col(id_col).cast("long").alias("sid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            portable_hash64(F.col(id_col).cast("string")).alias("h"),
-        )
-        .orderBy("h", "sid")
-        .limit(k)
-        .collect()
-    )
-    cents = {
-        (j, cid): list(r.v[j * sub : (j + 1) * sub])
-        for j in range(m)
-        for cid, r in enumerate(seed_rows)
-    }
-
-    # no checkpoint of the subvector view: materializing it would pin an
-    # O(corpus) intermediate; Lloyd's standard shape re-scans the input
-    # per iteration (2 scans here), which is strictly cheaper than one
-    # full materialization + 2 reads
-    sv = subvectors(emb, m, dim, id_col, vec_col)
-    m_expr = F.avg("val") if round_to is None else F.round(F.avg("val"), round_to)
-    for _ in range(n_iter):
-        cdf = spark.createDataFrame(
-            [(j, cid, v) for (j, cid), v in sorted(cents.items())],
-            "j int, cid long, cvec array<double>",
-        )
-        scored = sv.join(F.broadcast(cdf), "j").withColumn(
-            "d2", F.round(_d2("sv", "cvec"), 12)
-        )
-        assigned = scored.groupBy("id", "j").agg(
-            F.min(F.struct("d2", "cid", "sv")).alias("b")
-        )
-        # ONE per-dimension mean aggregate, assembled into centroid
-        # vectors driver-side (m*k*sub rows — centroid-matrix sized):
-        # the second groupBy+collect_list shuffle the old chain paid
-        # bought nothing the driver can't do with a dict.
-        means_rows = (
-            assigned.select(
-                "j",
-                F.col("b.cid").alias("cid"),
-                F.posexplode("b.sv").alias("pos", "val"),
-            )
-            .groupBy("j", "cid", "pos")
-            .agg(m_expr.alias("m"))
-            .collect()
-        )
-        acc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means_rows:
-            acc.setdefault((r.j, r.cid), {})[r.pos] = r.m
-        # empty (j, cid) clusters keep their previous centroid
-        for key, d in acc.items():
-            cents[key] = [d[i] for i in range(sub)]
-    return spark.createDataFrame(
+    cents = _lloyd(emb, k, n_iter, id_col, vec_col, round_to, m=m, dim=dim)
+    return emb.sparkSession.createDataFrame(
         [(j, cid, v) for (j, cid), v in sorted(cents.items())],
         "j int, cid long, cvec array<double>",
     )
-
-
-def pq_encode(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Assign each subspace its nearest codebook entry: DataFrame[id, j,
-    code]. Argmin by (round(d2, 12), cid) — the assign_cells tie-break,
-    partition-layout-independent."""
-    sv = subvectors(emb, m, dim, id_col, vec_col)
-    scored = sv.join(F.broadcast(codebooks), "j").withColumn(
-        "d2", F.round(_d2("sv", "cvec"), 12)
-    )
-    best = scored.groupBy("id", "j").agg(F.min(F.struct("d2", "cid")).alias("b"))
-    return best.select("id", "j", F.col("b.cid").cast("int").alias("code"))
 
 
 def residualize(
@@ -247,233 +168,81 @@ def ivfpq_topk_join(
 
     ADC determinism: each (query, subspace, code) lookup distance is
     rounded to 9dp; the m per-subspace terms are summed in fixed
-    subspace order (a static left-to-right ``element_at`` expression,
-    not an unordered SUM), and the total is rounded to ``round_to`` —
+    subspace order (a static left-to-right sum of array lookups, not an
+    unordered SUM), and the total is rounded to ``round_to`` —
     bit-reproducible in any engine (the oracle's CASE-pivot sum adds
     the same 9dp values in the same j order).
 
     Plan shape: centroids and codebooks are collected once (both are
     driver-resident by contract — every scoring strategy broadcasts
     them); cell assignment, code assignment and the query LUT are
-    per-row projections, not join+groupBy chains. The whole search is
-    one equi-join on ``cell`` plus the final top-k window — the r5
-    shape paid ~8 exchanges (two window cell-assignments, a two-stage
-    encode, an explode+join+groupBy LUT, and a three-way candidate
-    join).
-
-    Distance evaluation is a HYBRID split chosen for bit-exactness
-    (guide §4.2): the RAW squared distances are computed per batch in a
-    NumPy kernel — ``cumsum(diff*diff)[-1]`` is the identical
-    left-to-right float64 fold as the old per-element
-    ``zip_with/aggregate`` (products are never -0.0, so the 0.0-init
-    fold equals the first-element fold bitwise) — while every ROUNDING
-    (HALF_UP ``round``) and tie-break stays in JVM expressions, because
-    NumPy's scaled-multiply round is not decimal-exact. This removes
-    the O(candidates × dim) interpreted higher-order-function work per
-    row (measured 65 s for cell assignment alone at 20k vectors x 400
-    centroids — identical cost in the r5 join shape) and leaves O(
-    candidates) JVM work per row.
+    per-row passes of the shared nearest-centroid kernel
+    (:func:`ontoea_spark.operators.kmeans._nearest`), not join+groupBy
+    chains. The whole search is one equi-join on ``cell`` plus the final
+    top-k window; residual mode adds a broadcast equi-join on ``cell``
+    per side for the exact elementwise ``v - centroid[cell]``.
     """
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    lv = left.select(
-        F.col(left_id).cast("long").alias("id"),
-        F.col(left_vec).cast("array<double>").alias("vec"),
-    )
-    rv = right.select(
-        F.col(right_id).cast("long").alias("id"),
-        F.col(right_vec).cast("array<double>").alias("vec"),
-    )
-    cent_rows = sorted(
-        (int(r["cid"]), [float(x) for x in r["cvec"]])
+    cents = {
+        (0, int(r["cid"])): r["cvec"]
         for r in centroids.select("cid", "cvec").collect()
-    )
-    book_rows = sorted(
-        (int(r["j"]), int(r["cid"]), [float(x) for x in r["cvec"]])
+    }
+    books = {
+        (int(r["j"]), int(r["cid"])): r["cvec"]
         for r in codebooks.select("j", "cid", "cvec").collect()
-    )
-    k_codes = len({cid for _, cid, _ in book_rows})
-    books_by_j: dict[int, list[tuple[int, list[float]]]] = {}
-    for j, cid, cv in book_rows:
-        books_by_j.setdefault(j, []).append((cid, cv))
-    if sorted(books_by_j) != list(range(m)) or any(
-        [cid for cid, _ in books_by_j[j]] != list(range(k_codes))
-        for j in range(m)
-    ):
+    }
+    k_codes = len({cid for _, cid in books})
+    if sorted(books) != [(j, c) for j in range(m) for c in range(k_codes)]:
         raise ValueError("codebooks must cover j in [0,m) x cid in [0,k)")
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    C = len(cent_rows)
-    cent_ids = [cid for cid, _ in cent_rows]
-    cents_mat = np.array([cv for _, cv in cent_rows], dtype=np.float64)
-    # book matrix in (j, cid) position order
-    books_mat = np.array([cv for _, _, cv in book_rows], dtype=np.float64)
-    cent_by_id = {cid: i for i, cid in enumerate(cent_ids)}
-
-    def _raw_d2(V: np.ndarray, mat: np.ndarray, col_lo: int, col_hi: int) -> np.ndarray:
-        """Raw squared distances of every batch row against every
-        constant row of ``mat`` (over vector columns [col_lo, col_hi)) —
-        cumsum is the identical left-to-right fold as the interpreted
-        zip_with/aggregate (see docstring)."""
-        out = np.empty((V.shape[0], mat.shape[0]))
-        Vs = V[:, col_lo:col_hi]
-        for i in range(mat.shape[0]):
-            diff = Vs - mat[i]
-            out[:, i] = np.cumsum(diff * diff, axis=1)[:, -1]
-        return out
-
-    def _book_d2(V: np.ndarray) -> np.ndarray:
-        """(rows, m*k) raw book distances: subspace j's entries against
-        the j-th slice of the vectors, in (j, cid) position order."""
-        cols = [
-            _raw_d2(V, books_mat[j * k_codes : (j + 1) * k_codes, :],
-                    j * sub, (j + 1) * sub)
-            for j in range(m)
-        ]
-        return np.concatenate(cols, axis=1)
-
-    # no pd.Series annotations: module-level `from __future__ import
-    # annotations` stringifies them and pandas_udf can't resolve the
-    # function-local `pd`; annotation-free defaults to the scalar form
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def raw_all(vec):
-        V = np.stack(vec.to_numpy())
-        out = np.concatenate([_raw_d2(V, cents_mat, 0, dim), _book_d2(V)], axis=1)
-        return pd.Series(list(out))
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def raw_cent(vec):
-        V = np.stack(vec.to_numpy())
-        return pd.Series(list(_raw_d2(V, cents_mat, 0, dim)))
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def raw_book_residual(vec, cell):
-        V = np.stack(vec.to_numpy())
-        idx = np.array([cent_by_id[int(c)] for c in cell.to_numpy()])
-        return pd.Series(list(_book_d2(V - cents_mat[idx])))
-
-    # asNondeterministic: the kernels ARE deterministic, but the
-    # optimizer otherwise substitutes the UDF expression into every
-    # consumer when collapsing projections — the plan showed SIX
-    # ArrowEvalPython nodes for two logical kernel passes (guide §4.4);
-    # the marker pins one evaluation per side
-    raw_all = raw_all.asNondeterministic()
-    raw_cent = raw_cent.asNondeterministic()
-    raw_book_residual = raw_book_residual.asNondeterministic()
-
-    # JVM side: rounding + tie-breaks over the raw arrays — O(candidates)
-    # interpreted work per row instead of O(candidates x dim). SQL built
-    # as text (the py4j node-by-node construction measured ~6 s of
-    # driver time for this operator — the r5 isin lesson).
-    cid_arr = "array(" + ",".join(f"{cid}L" for cid in cent_ids) + ")"
-
-    def cells_sql(raw_name: str, n_cells: int) -> str:
-        """Top-``n_cells`` centroid cells by (round(d2,9), cid asc) —
-        array_sort (or array_min for the single-cell case: O(C), not
-        O(C log C) struct comparisons per row) is the same lexicographic
-        order the r5 window used."""
-        cands = (
-            f"transform(sequence(1,{C}),i->struct("
-            f"round(element_at({raw_name},i),9) AS cd2,"
-            f"element_at({cid_arr},i) AS cid))"
+    def side(df, id_col, vec_col, key, n_cells):
+        return _nearest(
+            df.select(
+                F.col(id_col).cast("long").alias(key),
+                F.col(vec_col).cast("array<double>").alias("vec"),
+            ),
+            "vec",
+            cents,
+            9,
+            n_cells,
+            "cells",
         )
-        if n_cells == 1:
-            return f"array(array_min({cands}).cid)"
-        return f"transform(slice(array_sort({cands}),1,{n_cells}),s->s.cid)"
 
-    def codes_sql(raw_name: str, off: int) -> str:
-        """m codes, each the argmin codebook entry by (round(d2,12),
-        cid asc) — array_min over structs is the r5 min(struct) order.
-        ``off``: index of the first book entry inside the raw array."""
-        outs = []
-        for j in range(m):
-            cands = (
-                f"transform(sequence(1,{k_codes}),c->struct("
-                f"round(element_at({raw_name},{off + j * k_codes}+c),12) AS d2,"
-                f"CAST(c-1 AS BIGINT) AS cid))"
-            )
-            outs.append(f"CAST(array_min({cands}).cid AS INT)")
-        return "array(" + ",".join(outs) + ")"
-
-    def lut_sql(raw_name: str, off: int) -> str:
-        """m*k 9dp lookup entries in (j, cid) position order."""
-        return f"transform(slice({raw_name},{off + 1},{m * k_codes}),d->round(d,9))"
-
+    lq = side(left, left_id, left_vec, "lid", nprobe)
+    rq = side(right, right_id, right_vec, "rid", 1)
     if residual:
         # corpus codes quantize v - centroid[cell]; the query LUT is
         # built PER PROBED CELL from the query's residual w.r.t. that
-        # cell (FAISS IVFADC semantics) — a second kernel pass computes
-        # the residual book distances given the JVM-chosen cell
-        rq = (
-            rv.select(
-                F.col("id").alias("rid"),
-                "vec",
-                raw_cent(F.col("vec")).alias("rawc"),
+        # cell (FAISS IVFADC semantics)
+        base = F.broadcast(
+            left.sparkSession.createDataFrame(
+                [(cid, v) for (_, cid), v in cents.items()],
+                "cell long, cvec array<double>",
             )
-            .select(
-                "rid",
-                "vec",
-                F.expr(f"element_at({cells_sql('rawc', 1)},1)").alias("cell"),
-            )
-            .select(
-                "rid",
-                "cell",
-                raw_book_residual(F.col("vec"), F.col("cell")).alias("rawb"),
-            )
-            .select("rid", "cell", F.expr(codes_sql("rawb", 0)).alias("codes"))
         )
-        lq = (
-            lv.select(
-                F.col("id").alias("lid"),
-                "vec",
-                raw_cent(F.col("vec")).alias("rawc"),
-            )
-            .select(
-                "lid",
-                "vec",
-                F.explode(F.expr(cells_sql("rawc", nprobe))).alias("cell"),
-            )
-            .select(
-                "lid",
-                "cell",
-                raw_book_residual(F.col("vec"), F.col("cell")).alias("rawb"),
-            )
-            .select("lid", "cell", F.expr(lut_sql("rawb", 0)).alias("lut"))
+        resid = F.zip_with("vec", "cvec", lambda a, b: a - b).alias("vec")
+        lq, rq = (
+            q.select(key, F.explode("cells").alias("cell"), "vec")
+            .join(base, "cell")
+            .select(key, "cell", resid)
+            for q, key in ((lq, "lid"), (rq, "rid"))
         )
+        lq = _nearest(lq, "vec", books, 9, None, "lut")
     else:
-        rq = rv.select(
-            F.col("id").alias("rid"), raw_all(F.col("vec")).alias("raw")
-        ).select(
-            "rid",
-            F.expr(f"element_at({cells_sql('raw', 1)},1)").alias("cell"),
-            F.expr(codes_sql("raw", C)).alias("codes"),
-        )
         # raw-mode LUT is cell-independent: computed once per query row,
         # before the probe explode
-        lq = lv.select(
-            F.col("id").alias("lid"), raw_all(F.col("vec")).alias("raw")
-        ).select(
-            "lid",
-            F.expr(lut_sql("raw", C)).alias("lut"),
-            F.explode(F.expr(cells_sql("raw", nprobe))).alias("cell"),
+        lq = _nearest(lq, "vec", books, 9, None, "lut").select(
+            "lid", "lut", F.explode("cells").alias("cell")
         )
+        rq = rq.select("rid", "vec", F.explode("cells").alias("cell"))
+    rq = _nearest(rq, "vec", books, 12, 1, "codes")
 
-    # fixed-subspace-order sum as a static projection: lut is 1-indexed,
-    # entry for (j, code) sits at j*k + code + 1 — no per-pair shuffle
-    adc = reduce(
-        lambda a, b: a + b,
-        [
-            F.element_at(
-                "lut", (F.lit(j * k_codes) + F.element_at("codes", j + 1) + 1)
-            )
-            for j in range(m)
-        ],
-    )
+    # fixed-subspace-order sum as a static projection: the 0-based lut
+    # entry for (j, code) sits at j*k + code — no per-pair shuffle
+    adc = F.expr(" + ".join(f"lut[{j * k_codes} + codes[{j}]]" for j in range(m)))
     scored = lq.join(rq, "cell").select(
         "lid", "rid", F.round(adc, round_to).alias("adc_d2")
     )

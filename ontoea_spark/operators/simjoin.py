@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoea_spark.functions.hashing import portable_hash64
+from ontoea_spark.operators.kmeans import _nearest
 
 
 def _block_scores(lm, rm, metric: str):
@@ -343,34 +344,20 @@ def ivf_topk_join(
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
 
-    def assign(df, id_col, vec_col, out_id, n_cells=1):
-        j = df.select(
-            F.col(id_col).cast("long").alias(out_id),
-            F.col(vec_col).alias("v"),
-        ).crossJoin(F.broadcast(centroids))
-        d2 = F.aggregate(
-            F.zip_with(
-                F.col("v").cast("array<double>"),
-                F.col("cvec").cast("array<double>"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    cents = {
+        (0, r["cid"]): r["cvec"] for r in centroids.select("cid", "cvec").collect()
+    }
+
+    def assign(df, id_col, vec_col, key, vec, n_cells=1):
+        keyed = df.select(
+            F.col(id_col).cast("long").alias(key), F.col(vec_col).alias(vec)
         )
-        w = Window.partitionBy(out_id).orderBy(
-            F.round(d2, 9).asc(), F.col("cid").asc()
-        )
-        return (
-            j.withColumn("d2", d2)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n_cells)
-            .select(out_id, "v", "cid")
+        return _nearest(keyed, vec, cents, 9, n_cells).select(
+            key, vec, F.explode("cids").alias("cid")
         )
 
-    l = assign(left, left_id, left_vec, "lid", n_cells=nprobe).withColumnRenamed(
-        "v", "lvec"
-    )
-    r = assign(right, right_id, right_vec, "rid").withColumnRenamed("v", "rvec")
+    l = assign(left, left_id, left_vec, "lid", "lvec", nprobe)
+    r = assign(right, right_id, right_vec, "rid", "rvec")
     cand = l.join(r, "cid").select(
         "lid", "rid", cosine(F.col("lvec"), F.col("rvec")).alias("sim")
     )

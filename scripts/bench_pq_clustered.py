@@ -33,6 +33,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     import __spark_entry__ as entrymod
     from ontoea_spark.session import get_spark
+    from ontoea_spark.operators.kmeans import _nearest
     from ontoea_spark.operators.pq import (
         ivfpq_topk_join,
         pq_train_codebooks,
@@ -81,6 +82,7 @@ def main() -> None:
             [(i, v.tolist()) for i, v in enumerate(cents_np)],
             "cid long, cvec array<double>",
         )
+        cent_rows = {(0, i): v.tolist() for i, v in enumerate(cents_np)}
         # exact global top-1 by L2 (NumPy — ground truth)
         d2 = (
             (queries**2).sum(1)[:, None]
@@ -93,18 +95,8 @@ def main() -> None:
             for residual in (False, True):
                 t0 = time.perf_counter()
                 if residual:
-                    from ontoea_spark.operators.kmeans import _d2 as _d2e
-
-                    scored = corpus_df.crossJoin(F.broadcast(cents_df)).withColumn(
-                        "cd2", F.round(_d2e("vec", "cvec"), 9)
-                    )
-                    from pyspark.sql import Window
-
-                    w = Window.partitionBy("id").orderBy("cd2", "cid")
-                    cells = (
-                        scored.withColumn("rn", F.row_number().over(w))
-                        .filter("rn = 1")
-                        .select("id", F.col("cid").alias("cell"))
+                    cells = _nearest(corpus_df, "vec", cent_rows, 9).select(
+                        "id", F.col("cids")[0].alias("cell")
                     )
                     train = residualize(corpus_df, cells, cents_df)
                 else:

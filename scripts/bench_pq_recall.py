@@ -44,7 +44,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from ontoea_spark.operators.kmeans import _d2
+    from ontoea_spark.operators.kmeans import _nearest
     from ontoea_spark.operators.pq import (
         ivfpq_topk_join,
         pq_train_codebooks,
@@ -68,14 +68,19 @@ def main() -> None:
     n_corpus = right.count()
 
     # cells, as ivfpq_topk_join assigns them (round(d2,9), cid-asc ties)
+    cent_rows = {(0, r.cid): r.cvec for r in cents.collect()}
+
     def cell_of(df):
-        scored = df.crossJoin(F.broadcast(cents)).withColumn(
-            "cd2", F.round(_d2("vec", "cvec"), 9)
+        return _nearest(df, "vec", cent_rows, 9).select(
+            "id", F.col("cids")[0].alias("cell")
         )
-        return (
-            scored.groupBy("id")
-            .agg(F.min(F.struct("cd2", "cid")).alias("b"))
-            .select("id", F.col("b.cid").alias("cell"))
+
+    # reference: exact squared L2 as an interpreted left fold
+    def exact_d2(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
         )
 
     lcell = cell_of(left)
@@ -94,7 +99,7 @@ def main() -> None:
             ),
             "cell",
         )
-        .withColumn("d2", F.round(_d2("lvec", "rvec"), 9))
+        .withColumn("d2", F.round(exact_d2("lvec", "rvec"), 9))
     )
     w = Window.partitionBy("lid").orderBy(F.col("d2").asc(), F.col("rid").asc())
     t0 = time.perf_counter()
@@ -111,7 +116,7 @@ def main() -> None:
         F.col("id").alias("lid"), F.col("vec").alias("lvec")
     ).crossJoin(
         right.select(F.col("id").alias("rid"), F.col("vec").alias("rvec"))
-    ).withColumn("d2", F.round(_d2("lvec", "rvec"), 9))
+    ).withColumn("d2", F.round(exact_d2("lvec", "rvec"), 9))
     t0 = time.perf_counter()
     exact_glob = (
         allp.withColumn("rk", F.row_number().over(w))

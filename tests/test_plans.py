@@ -53,24 +53,24 @@ def test_lsh_topk_is_equi_join(spark):
 
 
 def test_ivfpq_scoring_is_projection_not_pivot(spark):
-    """IVF-PQ ADC scoring must be a static element_at projection over the
-    candidate equi-join — no CartesianProduct anywhere, and no aggregate
-    ON THE CANDIDATE PAIRS (the pivot regression would shuffle
-    candidates x m rows through a groupBy(lid, rid))."""
-    from ontoea_spark import driver_queries as DQ
-
-    df = DQ.queries()["ann_ivfpq_top1"](spark, SF_CORRECT)
-    plan = _plan(df)
-    # BroadcastNestedLoopJoin appears ONLY as the bounded centroid
-    # fan-out (same shape as ivf_topk_join: n_rows x n_cells against a
-    # broadcast side); a row-level cartesian would print CartesianProduct
-    assert "CartesianProduct" not in plan, plan
-    # every HashAggregate keys on a single id (cells/codes/lut builds);
-    # a pair-keyed aggregate would print both lid and rid in its keys
+    """IVF-PQ ADC scoring must be a static array-lookup projection over
+    the candidate equi-join — no aggregate ON THE CANDIDATE PAIRS (the
+    pivot regression would shuffle candidates x m rows through a
+    groupBy(lid, rid)). Cell assignment on all three IVF paths is a
+    per-row projection: no nested-loop or cartesian fan-out of the
+    rows against the centroids."""
     import re
 
-    for keys in re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan):
-        assert not ("lid" in keys and "rid" in keys), keys
+    from ontoea_spark import driver_queries as DQ
+
+    for name in ("ann_ivfpq_top1", "ann_ivf_top1", "ann_ivf_kmeans_top1"):
+        plan = _plan(DQ.queries()[name](spark, SF_CORRECT))
+        assert "CartesianProduct" not in plan, (name, plan)
+        assert "BroadcastNestedLoopJoin" not in plan, (name, plan)
+        # every HashAggregate keys on a single id; a pair-keyed
+        # aggregate would print both lid and rid in its keys
+        for keys in re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan):
+            assert not ("lid" in keys and "rid" in keys), keys
 
 
 def test_source_cap_first_window_is_salt_partitioned(spark):

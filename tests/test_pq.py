@@ -116,6 +116,18 @@ def test_ivfpq_top1_matches_numpy(spark):
     assert got == want
     assert len(got) > 0
 
+    # a corpus vector exactly between two codebook entries takes the
+    # lower cid as its code, so its ADC is the query's lut[0] = 4.0
+    tie_books = spark.createDataFrame(
+        [(0, 1, [1.0, 0.0]), (0, 0, [-1.0, 0.0])],
+        "j int, cid long, cvec array<double>",
+    )
+    one_cell = spark.createDataFrame([(0, [0.0, 0.0])], "cid long, cvec array<double>")
+    query = spark.createDataFrame([(0, [1.0, 0.0])], "id long, vec array<double>")
+    corpus = spark.createDataFrame([(1, [0.0, 3.0])], "id long, vec array<double>")
+    tie = ivfpq_topk_join(query, corpus, one_cell, tie_books, k=1, m=1, dim=2)
+    assert [tuple(r) for r in tie.collect()] == [(0, 1, 4.0)]
+
 
 def _numpy_ivfpq_top1_nprobe(pts, ids, m, sub, k_codes, n_iter, cent_ids, nprobe):
     """Raw-vector IVF-PQ with the query probing its nprobe nearest

@@ -94,6 +94,19 @@ def test_ivf_nprobe_all_cells_equals_exact(spark):
     with pytest.raises(ValueError, match="nprobe"):
         SJ.ivf_topk_join(left_df, right_df, cents, k=1, nprobe=0)
 
+    # a query exactly between two centroids probes the lower cid at
+    # nprobe=1 (cell 1 holds rid 10); both cells hold the better rid 20
+    tie_cents = spark.createDataFrame(
+        [(2, [-1.0, 0.0]), (1, [1.0, 0.0])], "cid long, cvec array<double>"
+    )
+    query = spark.createDataFrame([(0, [0.0, 1.0])], "id long, vec array<double>")
+    corpus = spark.createDataFrame(
+        [(10, [2.0, 0.1]), (20, [-2.0, 0.5])], "id long, vec array<double>"
+    )
+    for np_, want in ((1, 10), (2, 20)):
+        top = SJ.ivf_topk_join(query, corpus, tie_cents, k=1, nprobe=np_)
+        assert [r.rid for r in top.collect()] == [want]
+
 
 def test_csls_candidates_degenerate_equals_full(spark):
     """csls_candidate_scores with k_cand >= |right| must reproduce the
