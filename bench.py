@@ -30,6 +30,45 @@ if REPO not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: The headline queries bench_queries times, in order.
+HEADLINE_QUERIES = [
+    "extract_triples",
+    "dict_encode_triples",
+    "kg_canonical_edges",
+    "links_fixpoint",
+    "q1_pricing",
+    "q3_top_revenue",
+    "topk_orders_per_customer",
+    "events_sessionize",
+    "dedup_minhash",
+    "dedup_simhash",
+    "dedup_clusters",
+    "doc_fingerprint",
+    "pii_scrub",
+    "repetition",
+    "contamination",
+    "ann_topk",
+    "ann_ivfpq_top1",
+    "host_pagerank",
+    "csls_top1",
+    "hits_metrics",
+    "para_dedup",
+    "span_dedup",
+    "curation_pipeline",
+]
+
+#: Queries whose core work is a memoized fixture derivation -> the memo
+#: key bench_queries clears before every timed sample. kg_canonical_edges:
+#: the canonicalization chain (components -> rewrite -> unified
+#: dictionary -> encode) is memoized under 'canonical_kg'; clearing it
+#: times the operator chain, not a localCheckpoint read. The upstream
+#: triples fixture stays warm — canonicalization starts where
+#: extraction ends.
+COLD_FIXTURE = {
+    "extract_triples": "triples_",
+    "kg_canonical_edges": "canonical_kg",
+}
+
 
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
@@ -114,51 +153,17 @@ def bench_queries(spark, sf_dir: str, runs: int = 3) -> tuple[dict[str, float], 
 
     from ontoea_spark import driver_queries as DQ
 
-    # kg_canonical_edges: the canonicalization chain (components ->
-    # rewrite -> unified dictionary -> encode) is memoized under
-    # 'canonical_kg'; clear it per sample so the timed work is the
-    # operator chain, not a localCheckpoint read. The upstream triples
-    # fixture stays warm — canonicalization starts where extraction ends.
-    cold_fixture = {
-        "extract_triples": "triples_",
-        "kg_canonical_edges": "canonical_kg",
-    }
     qs = entrymod.queries()
-    headline = [
-        "extract_triples",
-        "dict_encode_triples",
-        "kg_canonical_edges",
-        "links_fixpoint",
-        "q1_pricing",
-        "q3_top_revenue",
-        "topk_orders_per_customer",
-        "events_sessionize",
-        "dedup_minhash",
-        "dedup_simhash",
-        "dedup_clusters",
-        "doc_fingerprint",
-        "pii_scrub",
-        "repetition",
-        "contamination",
-        "ann_topk",
-        "ann_ivfpq_top1",
-        "host_pagerank",
-        "csls_top1",
-        "hits_metrics",
-        "para_dedup",
-        "span_dedup",
-        "curation_pipeline",
-    ]
     out: dict[str, float] = {}
     spread: dict[str, dict] = {}
-    for name in headline:
+    for name in HEADLINE_QUERIES:
         fn = qs.get(name)
         if fn is None:
             continue
         samples: list[float] = []
         for _ in range(runs):
-            if name in cold_fixture:
-                DQ.reset_memo(cold_fixture[name])
+            if name in COLD_FIXTURE:
+                DQ.reset_memo(COLD_FIXTURE[name])
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

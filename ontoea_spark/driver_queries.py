@@ -263,8 +263,7 @@ def q_dict_interleaved_ids(spark, sf_dir):
 
 def q_dict_encode_triples(spark, sf_dir):
     """D5: triples -> int ids via broadcast dictionary joins, both KGs.
-    Dictionaries come from the one-pass combined builder (identical
-    values to per-call interleaved_ids — parity-tested); D1/D2 stay
+    Dictionaries come from the one-pass combined builder; D1/D2 stay
     directly exercised by q_dict_freq_rank / q_dict_interleaved_ids."""
     t1 = _triples(spark, sf_dir, "kg1")
     t2 = _triples(spark, sf_dir, "kg2")

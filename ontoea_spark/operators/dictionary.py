@@ -9,19 +9,28 @@ Reproduces the reference's id-assignment semantics relationally:
   KGs — KG1 rank-i -> 2i, KG2 rank-i -> 2i+1 for i < min(n1, n2); the
   longer KG's tail continues sequentially at 2*min(n1, n2).
 * D3 ``generate_mapping_id_oneKG`` (read.py:99-117): rank -> id.
+* D4 ``generate_sharing_id`` (read.py:29-61): linked pairs share an id.
 * D5-D7 ``uris_*_2ids`` (read.py:120-163): dictionary joins; the entity
   dictionary is broadcast (per-KG vocab ≪ triples at web scale: the
   dictionary is |entities|, triples are |mentions|).
 
-Scale notes: the only shuffles are the groupBy count and the global
-row_number. The global rank is a single-partition window by necessity
-(ids are globally dense); at 100 TB the dictionary itself is still only
-|distinct entities| rows after the distributed count, and if that
-outgrows one partition the two-phase variant (partition ranks + offset
-by cumulative partition counts) drops in without changing the contract.
+Every D1-D4 builder (and ``pipeline/incremental.extend_dictionary``) is
+a thin caller of ONE private core: occurrence rows ``(group…, kg,
+elem)`` -> :func:`_frequencies` (one groupBy count; NULL elements are
+dropped here, so they get no freq and no id) -> :func:`_rank` (one
+grouped two-phase exact rank) -> :func:`_interleave` (the read.py:72-83
+arithmetic per group). D5 has one gated three-join builder,
+:func:`_encode`, whose only variant is whether ``kg`` is in the key.
+
+Scale notes: the only shuffles are the groupBy count and the range
+repartition of the rank. Ids are globally dense, but no step funnels
+the dictionary through one task: the rank is row_number within range
+partitions plus the cumulative count of earlier partitions.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,6 +43,9 @@ from pyspark.sql import functions as F
 #: comfortably inside a 4 GB driver; same default as
 #: ``pipeline/incremental.py`` uses for its delta-merge gate.
 BROADCAST_ROW_THRESHOLD = 5_000_000
+
+#: Range partitions of :func:`_rank`'s sort shuffle.
+_RANGE_PARTITIONS = 32
 
 
 def _gated_broadcast(df: DataFrame, small: bool) -> DataFrame:
@@ -75,6 +87,115 @@ def anti_join_keep_small(
     return small.join(big.select(*key), key, "left_anti")
 
 
+def _occurrences(
+    triples: DataFrame, roles: tuple[str, ...], kg=None
+) -> DataFrame:
+    """One row per element occurrence in the given triple positions:
+    DataFrame[kg, elem], or DataFrame[elem] when ``kg`` (a Column giving
+    the row's KG) is None."""
+    tag = [] if kg is None else [kg.cast("long").alias("kg")]
+    return reduce(
+        DataFrame.unionAll,
+        [triples.select(*tag, F.col(r).alias("elem")) for r in roles],
+    )
+
+
+def _frequencies(occs: DataFrame, keys: list[str]) -> DataFrame:
+    """Occurrence rows -> DataFrame[keys…, elem, freq]. A NULL element
+    is no element: it is dropped before the count, so it never takes a
+    rank slot or an id that no encode join could ever use."""
+    return (
+        occs.filter(F.col("elem").isNotNull())
+        .groupBy(*keys, "elem")
+        .agg(F.count("*").alias("freq"))
+    )
+
+
+def _rank(freqs: DataFrame, keys: list[str]) -> DataFrame:
+    """Exact 0-based rank by (freq desc, elem desc) within each ``keys``
+    group: DataFrame[keys…, elem, freq] -> DataFrame[keys…, elem, freq,
+    rank].
+
+    Two-phase instead of a single-partition window (which would funnel
+    the whole dictionary through one task):
+
+      1. range-repartition on (keys…, sort key): within a group,
+         partition i holds sort keys strictly above partition i+1
+         (elem is unique per group);
+      2. ``row_number`` *within* each range partition (parallel);
+      3. rank = local rank + cumulative count of the group's earlier
+         partitions (a window over at most ``_RANGE_PARTITIONS`` rows
+         per group — trivial).
+
+    One range shuffle ranks every group. The rank values are independent
+    of where the sampled range bounds land; the partitioned frame is
+    cached so the pid column is consistent across the two branches that
+    consume it.
+    """
+    order = [F.desc("freq"), F.desc("elem")]
+    part = (
+        freqs.repartitionByRange(_RANGE_PARTITIONS, *keys, *order)
+        .withColumn("pid", F.spark_partition_id())
+        .cache()
+    )
+    wl = Window.partitionBy(*keys, "pid").orderBy(*order)
+    local = part.withColumn("lrank", F.row_number().over(wl))
+    counts = part.groupBy(*keys, "pid").agg(F.count("*").alias("cnt"))
+    # ungrouped, partition the offset window on a column-derived
+    # constant (pmod(pid,1)=0): a bare lit(0) gets constant-folded to an
+    # empty spec and re-triggers the WindowExec no-partition warning
+    woff = (
+        Window.partitionBy(*(keys or [F.pmod(F.col("pid"), F.lit(1))]))
+        .orderBy("pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = counts.withColumn(
+        "off", F.coalesce(F.sum("cnt").over(woff), F.lit(0))
+    ).select(*keys, "pid", "off")
+    return local.join(F.broadcast(offsets), [*keys, "pid"]).select(
+        *keys,
+        "elem",
+        "freq",
+        (F.col("off") + F.col("lrank") - 1).cast("long").alias("rank"),
+    )
+
+
+def _interleave(ranked: DataFrame, group: list[str]) -> DataFrame:
+    """D2 ids (read.py:72-83) within each ``group``: KG1 rank-i -> 2i,
+    KG2 rank-i -> 2i+1 for i < min(n1, n2); the tail continues
+    sequentially at 2*min. A KG with no partner in its group has
+    n_other = 0, so its id degenerates to its rank (D3).
+
+    DataFrame[group…, kg, elem, freq, rank] -> adds ``id``. Stays lazy:
+    the other KG's size joins in as a broadcast aggregate, not a
+    driver-side count().
+    """
+    keys = [*group, "kg"]
+    sizes = ranked.groupBy(*keys).agg(F.count("*").alias("n"))
+    n_other = sizes.select(
+        *group,
+        F.when(F.col("kg") == 1, F.lit(2)).otherwise(F.lit(1)).cast("long").alias("kg"),
+        F.col("n").alias("n_other"),
+    )
+    joined = ranked.join(F.broadcast(n_other), keys, "left").withColumn(
+        "n_other", F.coalesce(F.col("n_other"), F.lit(0))
+    )
+    ident = F.when(
+        F.col("rank") < F.col("n_other"),
+        F.lit(2) * F.col("rank") + (F.col("kg") - F.lit(1)),
+    ).otherwise(F.lit(2) * F.col("n_other") + (F.col("rank") - F.col("n_other")))
+    return joined.select(
+        *keys, "elem", "freq", "rank", ident.cast("long").alias("id")
+    )
+
+
+def _dictionary(occs: DataFrame, group: list[str]) -> DataFrame:
+    """The core: occurrence rows (group…, kg, elem) -> DataFrame[group…,
+    kg, elem, freq, rank, id] — one count, one rank, one interleave."""
+    keys = [*group, "kg"]
+    return _interleave(_rank(_frequencies(occs, keys), keys), group)
+
+
 def element_frequencies(
     triples: DataFrame, roles: tuple[str, ...] = ("s", "o")
 ) -> DataFrame:
@@ -83,66 +204,18 @@ def element_frequencies(
 
     Returns DataFrame[elem: string, freq: bigint].
     """
-    parts = [triples.select(F.col(r).alias("elem")) for r in roles]
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionAll(p)
-    return unioned.groupBy("elem").agg(F.count("*").alias("freq"))
+    return _frequencies(_occurrences(triples, roles), [])
 
 
 def ranked_elements(
-    triples: DataFrame,
-    roles: tuple[str, ...] = ("s", "o"),
-    range_partitions: int = 32,
+    triples: DataFrame, roles: tuple[str, ...] = ("s", "o")
 ) -> DataFrame:
-    """D1: rank elements by (freq desc, elem desc); rank is 0-based.
-
-    Scalable exact global rank — two-phase instead of a single-partition
-    window (which would funnel the whole dictionary through one task):
-
-      1. ``repartitionByRange`` on the sort key: partition i holds keys
-         strictly above partition i+1 (keys are unique: elem is distinct);
-      2. ``row_number`` *within* each range partition (parallel);
-      3. global rank = local rank + cumulative count of earlier
-         partitions (a window over ``range_partitions`` rows — trivial).
-
-    The rank values are independent of where the sampled range bounds
-    land; the partitioned frame is cached so the pid column is consistent
-    across the two branches that consume it.
+    """D1: rank elements by (freq desc, elem desc); rank is 0-based
+    (the ungrouped :func:`_rank`).
 
     Returns DataFrame[elem, freq, rank].
     """
-    return _rank_freqs(element_frequencies(triples, roles), range_partitions)
-
-
-def _rank_freqs(freqs: DataFrame, range_partitions: int = 32) -> DataFrame:
-    """Two-phase exact rank over a (elem, freq) frame (see
-    :func:`ranked_elements` for the strategy)."""
-    part = freqs.repartitionByRange(
-        range_partitions, F.desc("freq"), F.desc("elem")
-    ).withColumn("pid", F.spark_partition_id())
-    part = part.cache()
-    wl = Window.partitionBy("pid").orderBy(F.desc("freq"), F.desc("elem"))
-    local = part.withColumn("lrank", F.row_number().over(wl))
-    counts = part.groupBy("pid").agg(F.count("*").alias("cnt"))
-    # counts has exactly range_partitions rows (one per pid), so a
-    # single-partition window is genuinely fine; partition on a
-    # column-derived constant (pmod(pid,1)=0) because a bare lit(0) gets
-    # constant-folded to an empty spec and re-triggers the WindowExec
-    # no-partition warning.
-    woff = (
-        Window.partitionBy(F.pmod(F.col("pid"), F.lit(1)))
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "off", F.coalesce(F.sum("cnt").over(woff), F.lit(0))
-    ).select("pid", "off")
-    return local.join(F.broadcast(offsets), "pid").select(
-        "elem",
-        "freq",
-        (F.col("off") + F.col("lrank") - 1).cast("long").alias("rank"),
-    )
+    return _rank(element_frequencies(triples, roles), [])
 
 
 def single_kg_ids(
@@ -152,22 +225,12 @@ def single_kg_ids(
     return ranked_elements(triples, roles).withColumnRenamed("rank", "id")
 
 
-def _interleave(r1: DataFrame, r2: DataFrame) -> DataFrame:
-    """Interleave two ranked frames (read.py:72-83 arithmetic): KG1
-    rank-i -> 2i, KG2 rank-i -> 2i+1 for i < min(n1, n2); tails continue
-    sequentially at 2*min. Input frames: (elem, freq, rank); output adds
-    kg and id."""
-    a = r1.withColumn("kg", F.lit(1).cast("long"))
-    b = r2.withColumn("kg", F.lit(2).cast("long"))
-    n1 = a.agg(F.count("*").alias("n_other")).withColumn("kg", F.lit(2).cast("long"))
-    n2 = b.agg(F.count("*").alias("n_other")).withColumn("kg", F.lit(1).cast("long"))
-    joined = a.unionByName(b).join(F.broadcast(n1.unionByName(n2)), "kg")
-    ident = F.when(
-        F.col("rank") < F.col("n_other"),
-        F.lit(2) * F.col("rank") + (F.col("kg") - F.lit(1)),
-    ).otherwise(F.lit(2) * F.col("n_other") + (F.col("rank") - F.col("n_other")))
-    return joined.select(
-        "kg", "elem", "freq", "rank", ident.cast("long").alias("id")
+def _two_kg_occurrences(
+    triples1: DataFrame, triples2: DataFrame, roles: tuple[str, ...]
+) -> DataFrame:
+    """Occurrences of two triple sets, tagged kg 1 and kg 2."""
+    return _occurrences(triples1, roles, F.lit(1)).unionAll(
+        _occurrences(triples2, roles, F.lit(2))
     )
 
 
@@ -195,12 +258,13 @@ def sharing_ids(
     """
     links_m = train_links.localCheckpoint(eager=False)
     lsmall = links_m.count() <= broadcast_threshold
-    r1 = ranked_elements(triples1, roles)
-    f2 = element_frequencies(triples2, roles)
-    linked2 = links_m.select(F.col("e2").alias("elem")).distinct()
-    f2_unlinked = f2.join(_gated_broadcast(linked2, lsmall), "elem", "left_anti")
-    r2 = _rank_freqs(f2_unlinked)
-    base = _interleave(r1, r2)
+    linked2 = links_m.select(
+        F.lit(2).cast("long").alias("kg"), F.col("e2").alias("elem")
+    ).distinct()
+    freqs = _frequencies(
+        _two_kg_occurrences(triples1, triples2, roles), ["kg"]
+    ).join(_gated_broadcast(linked2, lsmall), ["kg", "elem"], "left_anti")
+    base = _interleave(_rank(freqs, ["kg"]), [])
     e1s = links_m.select("e1").distinct()
     ids1 = (
         base.filter("kg = 1")
@@ -228,30 +292,18 @@ def interleaved_ids(
     """D2: interleaved two-KG id assignment (read.py:72-83 semantics).
 
     Returns DataFrame[kg: bigint (1|2), elem: string, freq, rank, id].
-    Stays lazy: the n1/n2 scalars join in via a broadcast 1-row aggregate
-    instead of driver-side count() actions.
     """
-    return _interleave(
-        ranked_elements(triples1, roles), ranked_elements(triples2, roles)
-    )
+    return _dictionary(_two_kg_occurrences(triples1, triples2, roles), [])
 
 
-def combined_dictionary_frame(
-    all_triples: DataFrame,
-    kg_expr,
-    range_partitions: int = 32,
-) -> DataFrame:
+def combined_dictionary_frame(all_triples: DataFrame, kg_expr) -> DataFrame:
     """D1+D2 for BOTH dictionaries of BOTH KGs in one pass — the lazy
     combined frame DataFrame[grp, kg, elem, freq, rank, id].
 
-    ``interleaved_ids`` called separately for entities and relations
-    costs four frequency aggregations + four range shuffles, each
-    re-reading the triple stream. At 100 TB the triple stream is the
-    expensive thing to touch; this builder tags every occurrence with
-    (grp, kg) — grp 'ent' from the s/o positions, 'rel' from p — and
-    runs ONE groupBy count + ONE range repartition + grouped two-phase
-    rank for everything. Output values are identical to the per-call
-    operator (asserted by tests/test_dictionary_combined.py).
+    Every occurrence is tagged with (grp, kg) — grp 'ent' from the s/o
+    positions, 'rel' from p — so ONE groupBy count + ONE range
+    repartition rank everything, instead of re-reading the triple
+    stream (the expensive thing to touch at 100 TB) once per dictionary.
 
     ``kg_expr``: Column mapping a triple row to its KG (1 or 2). An
     intermediate frame is cache()d (two consumers inside the rank);
@@ -261,76 +313,26 @@ def combined_dictionary_frame(
     """
     base = all_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     occs = (
-        base.select("kg", F.col("s").alias("elem"))
-        .unionAll(base.select("kg", F.col("o").alias("elem")))
+        _occurrences(base, ("s", "o"), F.col("kg"))
         .withColumn("grp", F.lit("ent"))
         .unionByName(
-            base.select("kg", F.col("p").alias("elem")).withColumn(
-                "grp", F.lit("rel")
-            )
+            _occurrences(base, ("p",), F.col("kg")).withColumn("grp", F.lit("rel"))
         )
     )
-    freqs = occs.groupBy("grp", "kg", "elem").agg(F.count("*").alias("freq"))
-    # grouped two-phase exact rank: the group cols lead the range key, so
-    # within each (grp, kg) the partition order still carries the global
-    # sort — same offset argument as _rank_freqs, one shuffle for all four
-    part = freqs.repartitionByRange(
-        range_partitions, F.col("grp"), F.col("kg"), F.desc("freq"), F.desc("elem")
-    ).withColumn("pid", F.spark_partition_id())
-    part = part.cache()
-    wl = Window.partitionBy("grp", "kg", "pid").orderBy(
-        F.desc("freq"), F.desc("elem")
-    )
-    local = part.withColumn("lrank", F.row_number().over(wl))
-    counts = part.groupBy("grp", "kg", "pid").agg(F.count("*").alias("cnt"))
-    woff = (
-        Window.partitionBy("grp", "kg")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "off", F.coalesce(F.sum("cnt").over(woff), F.lit(0))
-    ).select("grp", "kg", "pid", "off")
-    ranked = local.join(F.broadcast(offsets), ["grp", "kg", "pid"]).select(
-        "grp",
-        "kg",
-        "elem",
-        "freq",
-        (F.col("off") + F.col("lrank") - 1).cast("long").alias("rank"),
-    )
-    # interleave arithmetic per grp (read.py:72-83): n_other = the OTHER
-    # KG's dictionary size within the same grp
-    sizes = ranked.groupBy("grp", "kg").agg(F.count("*").alias("n"))
-    n_other = sizes.select(
-        "grp",
-        F.when(F.col("kg") == 1, F.lit(2)).otherwise(F.lit(1)).cast("long").alias("kg"),
-        F.col("n").alias("n_other"),
-    )
-    joined = ranked.join(F.broadcast(n_other), ["grp", "kg"], "left").withColumn(
-        "n_other", F.coalesce(F.col("n_other"), F.lit(0))
-    )
-    ident = F.when(
-        F.col("rank") < F.col("n_other"),
-        F.lit(2) * F.col("rank") + (F.col("kg") - F.lit(1)),
-    ).otherwise(F.lit(2) * F.col("n_other") + (F.col("rank") - F.col("n_other")))
-    return joined.select(
-        "grp", "kg", "elem", "freq", "rank", ident.cast("long").alias("id")
-    )
+    return _dictionary(occs, ["grp"])
 
 
 def two_kg_dictionaries(
     all_triples: DataFrame,
     kg_expr,
-    range_partitions: int = 32,
     with_sizes: bool = False,
 ) -> tuple:
     """:func:`combined_dictionary_frame`, materialized once and split.
 
     The localCheckpoint truncates lineage so downstream every
     broadcast-encode join reads materialized dictionary rows; without it
-    each broadcast build re-runs the whole grouped rank (the round-1
-    plan-subtree-duplication lesson). The frame is |vocab| rows —
-    exactly the thing you want materialized.
+    each broadcast build re-runs the whole grouped rank. The frame is
+    |vocab| rows — exactly the thing you want materialized.
 
     Returns (ent_ids, rel_ids), each DataFrame[kg, elem, freq, rank, id].
     With ``with_sizes=True`` additionally returns (n_ent, n_rel) row
@@ -341,9 +343,9 @@ def two_kg_dictionaries(
     # with_sizes: lazy checkpoint — the sizes aggregate right below is
     # the materializing job. Without sizes the eager materialization
     # stays: callers fan straight out into broadcast builds.
-    out = combined_dictionary_frame(
-        all_triples, kg_expr, range_partitions
-    ).localCheckpoint(eager=not with_sizes)
+    out = combined_dictionary_frame(all_triples, kg_expr).localCheckpoint(
+        eager=not with_sizes
+    )
     cols = ["kg", "elem", "freq", "rank", "id"]
     ent = out.filter("grp = 'ent'").select(*cols)
     rel = out.filter("grp = 'rel'").select(*cols)
@@ -354,6 +356,47 @@ def two_kg_dictionaries(
         }
         return ent, rel, sizes.get("ent", 0), sizes.get("rel", 0)
     return ent, rel
+
+
+def single_kg_dictionaries(triples: DataFrame, with_sizes: bool = False) -> tuple:
+    """D3 for BOTH the entity (roles s/o) and relation (role p)
+    dictionaries of ONE triple set in a single pass: the one-KG case
+    (kg ≡ 1) of :func:`two_kg_dictionaries`. With no partner KG the
+    interleave degenerates to ``id == rank`` — D3's exact contract.
+
+    Returns (ent_ids, rel_ids), each DataFrame[elem, freq, id],
+    localCheckpoint-materialized; ``with_sizes=True`` adds (n_ent,
+    n_rel) from one aggregate job (the materializing job) for
+    downstream broadcast gates.
+    """
+    ent, rel, *sizes = two_kg_dictionaries(triples, F.lit(1), with_sizes)
+    cols = ["elem", "freq", "id"]
+    return (ent.select(*cols), rel.select(*cols), *sizes)
+
+
+def _encode(
+    triples: DataFrame,
+    ent_ids: DataFrame,
+    rel_ids: DataFrame,
+    key: list[str],
+    broadcast_threshold: int,
+    ent_small: bool | None,
+    rel_small: bool | None,
+) -> DataFrame:
+    """The three gated dictionary joins of D5: adds s_id, p_id, o_id to
+    ``triples``, joining each role on (key…, elem). ``key`` is [] for
+    one dictionary, ["kg"] to keep each triple in its own KG's."""
+    e = ent_ids.select(*key, "elem", "id")
+    r = rel_ids.select(*key, "elem", "id")
+    if ent_small is None:
+        ent_small = e.count() <= broadcast_threshold
+    if rel_small is None:
+        rel_small = r.count() <= broadcast_threshold
+    out = triples
+    for role, d, small in (("s", e, ent_small), ("p", r, rel_small), ("o", e, ent_small)):
+        side = d.withColumnRenamed("elem", role).withColumnRenamed("id", f"{role}_id")
+        out = out.join(_gated_broadcast(side, small), [*key, role])
+    return out
 
 
 def encode_triples(
@@ -382,38 +425,9 @@ def encode_triples(
 
     Returns DataFrame[s_id, p_id, o_id] (bigint).
     """
-    e = ent_ids.select("elem", "id")
-    r = rel_ids.select("elem", "id")
-    if ent_small is None:
-        ent_small = e.count() <= broadcast_threshold
-    if rel_small is None:
-        rel_small = r.count() <= broadcast_threshold
-    e_small = ent_small
-    r_small = rel_small
-    return (
-        triples.join(
-            _gated_broadcast(
-                e.withColumnRenamed("elem", "s").withColumnRenamed("id", "s_id"),
-                e_small,
-            ),
-            "s",
-        )
-        .join(
-            _gated_broadcast(
-                r.withColumnRenamed("elem", "p").withColumnRenamed("id", "p_id"),
-                r_small,
-            ),
-            "p",
-        )
-        .join(
-            _gated_broadcast(
-                e.withColumnRenamed("elem", "o").withColumnRenamed("id", "o_id"),
-                e_small,
-            ),
-            "o",
-        )
-        .select("s_id", "p_id", "o_id")
-    )
+    return _encode(
+        triples, ent_ids, rel_ids, [], broadcast_threshold, ent_small, rel_small
+    ).select("s_id", "p_id", "o_id")
 
 
 def encode_triples_two_kg(
@@ -435,72 +449,10 @@ def encode_triples_two_kg(
 
     Returns DataFrame[s_id, p_id, o_id, kg] (bigint).
     """
-    e = ent_ids.select("kg", "elem", "id")
-    r = rel_ids.select("kg", "elem", "id")
-    if ent_small is None:
-        ent_small = e.count() <= broadcast_threshold
-    if rel_small is None:
-        rel_small = r.count() <= broadcast_threshold
     t = triples.select(F.col(kg_col).cast("long").alias("kg"), "s", "p", "o")
-    return (
-        t.join(
-            _gated_broadcast(
-                e.withColumnRenamed("elem", "s").withColumnRenamed("id", "s_id"),
-                ent_small,
-            ),
-            ["kg", "s"],
-        )
-        .join(
-            _gated_broadcast(
-                r.withColumnRenamed("elem", "p").withColumnRenamed("id", "p_id"),
-                rel_small,
-            ),
-            ["kg", "p"],
-        )
-        .join(
-            _gated_broadcast(
-                e.withColumnRenamed("elem", "o").withColumnRenamed("id", "o_id"),
-                ent_small,
-            ),
-            ["kg", "o"],
-        )
-        .select("s_id", "p_id", "o_id", "kg")
-    )
-
-
-def single_kg_dictionaries(
-    triples: DataFrame,
-    range_partitions: int = 32,
-    with_sizes: bool = False,
-) -> tuple:
-    """D3 for BOTH the entity (roles s/o) and relation (role p)
-    dictionaries of ONE triple set in a single pass — one groupBy count
-    + one range shuffle + one grouped two-phase rank, instead of two
-    full :func:`single_kg_ids` scans of the triple stream.
-
-    Implemented as the one-KG case of :func:`combined_dictionary_frame`
-    (kg ≡ 1): with no partner KG, ``n_other`` coalesces to 0 and the
-    interleave arithmetic degenerates to ``id == rank`` — D3's exact
-    contract — so there is ONE grouped-rank implementation to maintain
-    (review r6: an earlier copy duplicated the two-phase machinery).
-
-    Returns (ent_ids, rel_ids), each DataFrame[elem, freq, id],
-    localCheckpoint-materialized; ``with_sizes=True`` adds (n_ent,
-    n_rel) from one aggregate job (the materializing job) for
-    downstream broadcast gates.
-    """
-    out = combined_dictionary_frame(
-        triples, F.lit(1), range_partitions
-    ).localCheckpoint(eager=not with_sizes)
-    ent = out.filter("grp = 'ent'").select("elem", "freq", "id")
-    rel = out.filter("grp = 'rel'").select("elem", "freq", "id")
-    if with_sizes:
-        sizes = {
-            r["grp"]: r["n"]
-            for r in out.groupBy("grp").agg(F.count("*").alias("n")).collect()
-        }
-        return ent, rel, sizes.get("ent", 0), sizes.get("rel", 0)
-    return ent, rel
+    return _encode(
+        t, ent_ids, rel_ids, ["kg"], broadcast_threshold, ent_small, rel_small
+    ).select("s_id", "p_id", "o_id", "kg")
 
 
 def encode_pairs(

@@ -203,7 +203,7 @@ def run_pipeline_checkpointed(
     """
     from ontoea_spark.operators.dictionary import (
         combined_dictionary_frame,
-        encode_triples,
+        encode_triples_two_kg,
     )
     from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
     from ontoea_spark.pipeline.kg_build import gold_links, split_two_kgs
@@ -228,8 +228,7 @@ def run_pipeline_checkpointed(
     t1 = triples.filter("kgn = 1").select("s", "p", "o")
     t2 = triples.filter("kgn = 2").select("s", "p", "o")
     # one pass over the triple snapshot builds BOTH dictionaries for
-    # BOTH KGs (values identical to per-call interleaved_ids — parity
-    # tested); the ent/rel stages are then cheap filters of the snapshot
+    # BOTH KGs; the ent/rel stages are then cheap filters of the snapshot
     dicts = cp.run_stage(
         "dictionaries",
         lambda: combined_dictionary_frame(triples, F.col("kgn")),
@@ -241,25 +240,15 @@ def run_pipeline_checkpointed(
     rel_ids = cp.run_stage(
         "rel_ids", lambda: dicts.filter("grp = 'rel'").select(*cols)
     )
-
-    def _edges() -> DataFrame:
-        e = (
-            encode_triples(t1, ent_ids.filter("kg = 1"), rel_ids.filter("kg = 1"))
-            .withColumn("kg", F.lit(1).cast("long"))
-            .unionByName(
-                encode_triples(
-                    t2, ent_ids.filter("kg = 2"), rel_ids.filter("kg = 2")
-                ).withColumn("kg", F.lit(2).cast("long"))
-            )
-        )
-        return e
-
     edges = cp.run_stage(
-        "edges", _edges, partition_by="kg", repartition=(partitions, "s_id")
+        "edges",
+        lambda: encode_triples_two_kg(triples, ent_ids, rel_ids),
+        partition_by="kg",
+        repartition=(partitions, "s_id"),
     )
     if "rows_dropped" not in cp.manifest()["stages"].get("edges", {}):
         cp.record_drop_metrics(
-            "edges", rows_in=t1.count() + t2.count(), rows_out=edges.count()
+            "edges", rows_in=triples.count(), rows_out=edges.count()
         )
     vertices = cp.run_stage(
         "vertices",

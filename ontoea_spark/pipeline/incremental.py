@@ -30,7 +30,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontoea_spark.operators.dictionary import _rank_freqs
+from ontoea_spark.operators.dictionary import (
+    BROADCAST_ROW_THRESHOLD,
+    _frequencies,
+    _occurrences,
+    _rank,
+    anti_join_keep_small,
+    encode_triples_two_kg,
+)
 
 
 @dataclass
@@ -66,30 +73,27 @@ def extend_dictionary(
     broadcast(delta vocab) and the unseen set comes from a broadcast
     anti-join against the matched keys; past the gate (a backfill) it
     degrades to the shuffled anti-join.
-    """
-    from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
-        anti_join_keep_small,
-    )
 
+    NULL delta elements are dropped by the dictionary core's frequency
+    step: they get no id (and are not re-appended on every delta).
+    """
     if broadcast_threshold is None:
         broadcast_threshold = BROADCAST_ROW_THRESHOLD
-    freqs = delta_occurrences.groupBy("kg", "elem").agg(
-        F.count("*").alias("freq")
-    )
+    freqs = _frequencies(delta_occurrences, ["kg"])
     unseen = anti_join_keep_small(
         freqs, existing, ["kg", "elem"], broadcast_threshold
     )
-    # rank the unseen tail; kg rides through the rank key via elem
-    # uniqueness per (kg, elem) — rank within the whole unseen set so
-    # ids stay globally dense
-    ranked = _rank_freqs(
+    # rank the unseen tail ungrouped; kg rides through the rank key via
+    # the "kg\telem" elem — rank within the whole unseen set so ids stay
+    # globally dense
+    ranked = _rank(
         unseen.select(
             F.concat(F.col("kg").cast("string"), F.lit("\t"), "elem").alias(
                 "elem"
             ),
             "freq",
-        )
+        ),
+        [],
     )
     base = existing.agg(F.coalesce(F.max("id"), F.lit(-1)).alias("m"))
     split = F.split(F.col("elem"), "\t", 2)
@@ -127,24 +131,15 @@ def incremental_update(
     so above the threshold the merge degrades gracefully to a plain
     shuffled anti-join of the delta against the edge table.
     """
-    from ontoea_spark.operators.dictionary import encode_triples
-
     d = delta_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     d = d.localCheckpoint(eager=True)
-    ent_occ = d.select("kg", F.col("s").alias("elem")).unionAll(
-        d.select("kg", F.col("o").alias("elem"))
-    )
-    rel_occ = d.select("kg", F.col("p").alias("elem"))
-    ent2 = extend_dictionary(ent_ids, ent_occ).localCheckpoint(eager=True)
-    rel2 = extend_dictionary(rel_ids, rel_occ).localCheckpoint(eager=True)
-    new_edges = None
-    for kg in (1, 2):
-        enc = encode_triples(
-            d.filter(F.col("kg") == kg).select("s", "p", "o"),
-            ent2.filter(F.col("kg") == kg),
-            rel2.filter(F.col("kg") == kg),
-        ).withColumn("kg", F.lit(kg).cast("long"))
-        new_edges = enc if new_edges is None else new_edges.unionByName(enc)
+    ent2 = extend_dictionary(
+        ent_ids, _occurrences(d, ("s", "o"), F.col("kg"))
+    ).localCheckpoint(eager=True)
+    rel2 = extend_dictionary(
+        rel_ids, _occurrences(d, ("p",), F.col("kg"))
+    ).localCheckpoint(eager=True)
+    new_edges = encode_triples_two_kg(d, ent2, rel2, kg_col="kg")
     # Append-only merge: the existing edge table is never shuffled in
     # the normal regime.
     # 1. dedup WITHIN the (small) delta;

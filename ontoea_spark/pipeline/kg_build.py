@@ -1,16 +1,18 @@
 """End-to-end KG construction DAG (the rebuild of SURVEY.md §3.2).
 
 pages (url, warc_ts, html, text, lang)
-  -> extract text (Arrow UDF; byte-identical per url)
+  -> extract text (JVM decode + regexp_extract by default; the Arrow UDF
+     behind ``use_udf=True`` is byte-identical per url)
   -> mention detection -> (s, p, o) per KG (lang-split: 'en' -> kg1,
      rest -> kg2 — the two-corpus analogue of OpenEA's two KGs)
   -> dedup (set semantics) -> deterministic interleaved dictionary ids
   -> edge table (s_id, p_id, o_id, kg) + vertex table (id, uri, kg, freq)
   -> gold alignment links (shared surface form across KGs)
 
-Everything below the UDF is JVM-side; the only shuffles are the dedup,
-the dictionary count/rank, and the final repartition-by-key for the
-partitioned sinks. Broadcast joins everywhere a dictionary is involved.
+Everything is JVM-side; the only shuffles are the dedup, the
+dictionary count/rank, and the final repartition-by-key for the
+partitioned sinks. Gated broadcast joins everywhere a dictionary is
+involved.
 """
 
 from __future__ import annotations

@@ -86,8 +86,7 @@ def prepare_from_parts(
     from ontoea_spark.ontology import fixture as OF
     from ontoea_spark.ontology import tree as OT
 
-    # one pass over the triple stream for both dictionaries (values
-    # identical to per-call interleaved_ids — parity-tested); the
+    # one pass over the triple stream for both dictionaries; the
     # builder localCheckpoints the result, so no extra cache needed
     both = triples1.withColumn("kgn", F.lit(1)).unionByName(
         triples2.withColumn("kgn", F.lit(2))

@@ -16,12 +16,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-COLD_FIXTURE = {
-    "extract_triples": "triples_",
-    "kg_canonical_edges": "canonical_kg",
-}
+from bench import COLD_FIXTURE, SF_DIR, run_pipeline_once, scaling_job  # noqa: E402
 
 
 def main() -> None:
@@ -46,13 +41,9 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"bench_quick:{name}")
             t0 = time.perf_counter()
             if name == "kg_pipeline":
-                import bench
-
-                bench.run_pipeline_once(spark, SF_DIR)
+                run_pipeline_once(spark, SF_DIR)
             elif name == "scaling":
-                import bench
-
-                secs, n = bench.scaling_job(spark, SF_DIR, replicate=80)
+                secs, n = scaling_job(spark, SF_DIR, replicate=80)
                 samples.append(secs)
                 out.setdefault("_scaling_tput", []).append(round(n / secs, 1))
                 continue

@@ -15,22 +15,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "extract_triples", "dict_encode_triples", "kg_canonical_edges",
-    "links_fixpoint", "q1_pricing", "q3_top_revenue",
-    "topk_orders_per_customer", "events_sessionize", "dedup_minhash",
-    "dedup_simhash", "dedup_clusters", "doc_fingerprint", "pii_scrub",
-    "repetition", "contamination", "ann_topk", "ann_ivfpq_top1",
-    "host_pagerank", "csls_top1", "hits_metrics", "para_dedup",
-    "span_dedup", "curation_pipeline",
-]
+from bench import HEADLINE_QUERIES, SF_DIR  # noqa: E402
 
 
 def main() -> None:
     tag = sys.argv[1]
-    names = sys.argv[2:] or HEADLINE + ["kg_pipeline"]
+    names = sys.argv[2:] or HEADLINE_QUERIES + ["kg_pipeline"]
     import __spark_entry__ as entrymod
     from ontoea_spark.session import get_spark
 

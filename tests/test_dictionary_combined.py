@@ -1,8 +1,11 @@
-"""two_kg_dictionaries must produce byte-identical dictionaries to the
-per-call interleaved_ids operator (same D1/D2 semantics, 4x fewer passes
-over the triple stream)."""
+"""The D1-D5 dictionary builders: the one-pass two_kg_dictionaries and
+the per-call interleaved_ids must both match a plain-Python D1/D2
+reference (count, sort by (freq desc, elem desc), read.py:72-83
+interleave); NULL elements get no id; the encode joins are gated."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -12,6 +15,28 @@ from tests.conftest import SF_CORRECT
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _reference_ids(rows1, rows2, roles):
+    """Plain-Python D1 + D2: (kg, elem, freq, rank, id) rows, sorted."""
+    ranked = []
+    for rows in (rows1, rows2):
+        freq = Counter(r[role] for r in rows for role in roles)
+        ranked.append(
+            sorted(freq.items(), key=lambda kv: (kv[1], kv[0]), reverse=True)
+        )
+    r1, r2 = ranked
+    m = min(len(r1), len(r2))
+    out = []
+    for i in range(m):  # alternate: KG1 rank-i -> 2i, KG2 rank-i -> 2i+1
+        out.append((1, *r1[i], i, 2 * i))
+        out.append((2, *r2[i], i, 2 * i + 1))
+    nxt = 2 * m  # the longer KG's tail continues sequentially
+    for kg, r in ((1, r1), (2, r2)):
+        for i in range(m, len(r)):
+            out.append((kg, *r[i], i, nxt))
+            nxt += 1
+    return sorted(out)
 
 
 def test_combined_matches_per_call(spark):
@@ -34,6 +59,15 @@ def test_combined_matches_per_call(spark):
     assert _rows(ent_c) == _rows(interleaved_ids(t1, t2, roles=("s", "o")))
     assert _rows(rel_c) == _rows(interleaved_ids(t1, t2, roles=("p",)))
 
+    # both builders share one core, so also pin them to an independent
+    # plain-Python D1/D2
+    rows1, rows2 = t1.collect(), t2.collect()
+    ent_ref = _reference_ids(rows1, rows2, ("s", "o"))
+    rel_ref = _reference_ids(rows1, rows2, ("p",))
+    assert len(ent_ref) > 10 and len(rel_ref) > 1
+    assert _rows(ent_c) == ent_ref
+    assert _rows(rel_c) == rel_ref
+
 
 def test_combined_empty_second_kg(spark):
     tri = spark.createDataFrame(
@@ -48,6 +82,75 @@ def test_combined_empty_second_kg(spark):
     # equal freqs tie-break by elem DESC => 'kg1:b' ranks first
     assert rows == {("kg1:b", 0), ("kg1:a", 1)}
     assert [r.id for r in rel.collect()] == [0]
+
+
+def test_null_elements_get_no_id(spark):
+    """A NULL s/p/o is no element: no builder gives it a freq, rank or id
+    (encode's inner joins could never use one), and extend_dictionary
+    does not append it (NULL never matches the unseen anti-join, so it
+    would be re-appended on every delta). Empty frames give empty
+    dictionaries."""
+    from ontoea_spark.operators.dictionary import (
+        ranked_elements,
+        sharing_ids,
+        single_kg_dictionaries,
+    )
+    from ontoea_spark.pipeline.incremental import extend_dictionary
+
+    schema = "s string, p string, o string"
+    t1 = spark.createDataFrame(
+        [("kg1:a", "p:x", None), (None, "p:x", "kg1:a"), ("kg1:b", None, "kg1:a")],
+        schema,
+    )
+    t2 = spark.createDataFrame([("kg2:c", "p:y", None)], schema)
+    links = spark.createDataFrame([("kg1:b", "kg2:c")], "e1 string, e2 string")
+    both = t1.withColumn("kgn", F.lit(1)).unionByName(
+        t2.withColumn("kgn", F.lit(2))
+    )
+
+    ent_ref = [(1, "kg1:a", 3, 0, 0), (1, "kg1:b", 1, 1, 2), (2, "kg2:c", 1, 0, 1)]
+    ranked = ranked_elements(t1).collect()
+    assert None not in {r.elem for r in ranked}, ranked
+    assert sorted(map(tuple, ranked)) == [("kg1:a", 3, 0), ("kg1:b", 1, 1)]
+    ent_il = interleaved_ids(t1, t2)
+    assert _rows(ent_il) == ent_ref
+    assert _rows(interleaved_ids(t1, t2, roles=("p",))) == [
+        (1, "p:x", 2, 0, 0),
+        (2, "p:y", 1, 0, 1),
+    ]
+    ent, rel, n_ent, n_rel = two_kg_dictionaries(
+        both, F.col("kgn"), with_sizes=True
+    )
+    assert _rows(ent) == ent_ref and (n_ent, n_rel) == (3, 2)
+    assert _rows(rel) == [(1, "p:x", 2, 0, 0), (2, "p:y", 1, 0, 1)]
+    ent1, rel1 = single_kg_dictionaries(t1)
+    assert _rows(ent1) == [("kg1:a", 3, 0), ("kg1:b", 1, 1)]
+    assert _rows(rel1) == [("p:x", 2, 0)]
+    # kg2:c is linked, so it leaves the interleave and takes kg1:b's id
+    assert _rows(sharing_ids(t1, t2, links).select("kg", "elem", "id")) == [
+        (1, "kg1:a", 0),
+        (1, "kg1:b", 1),
+        (2, "kg2:c", 1),
+    ]
+    existing = ent_il.localCheckpoint(eager=True)
+    delta = spark.createDataFrame(
+        [(1, None), (1, "kg1:new"), (2, None)], "kg long, elem string"
+    )
+    merged = extend_dictionary(existing, delta)
+    assert _rows(merged) == sorted(ent_ref + [(1, "kg1:new", 1, 0, 3)])
+
+    empty = spark.createDataFrame([], schema)
+    no_links = spark.createDataFrame([], "e1 string, e2 string")
+    assert ranked_elements(empty).count() == 0
+    assert interleaved_ids(empty, empty).count() == 0
+    ent, rel, n_ent, n_rel = two_kg_dictionaries(
+        empty.withColumn("kgn", F.lit(1)), F.col("kgn"), with_sizes=True
+    )
+    assert (ent.count(), rel.count(), n_ent, n_rel) == (0, 0, 0, 0)
+    assert [df.count() for df in single_kg_dictionaries(empty)] == [0, 0]
+    assert sharing_ids(empty, empty, no_links).count() == 0
+    no_delta = spark.createDataFrame([], "kg long, elem string")
+    assert _rows(extend_dictionary(existing, no_delta)) == ent_ref
 
 
 def test_encode_broadcast_gate(spark):
