@@ -277,8 +277,8 @@ def q_dict_encode_triples(spark, sf_dir):
         both,
         ent,
         rel,
-        ent_small=n_ent <= DICT.BROADCAST_ROW_THRESHOLD,
-        rel_small=n_rel <= DICT.BROADCAST_ROW_THRESHOLD,
+        ent_small=DICT._fits_broadcast(n_ent),
+        rel_small=DICT._fits_broadcast(n_rel),
     )
 
 

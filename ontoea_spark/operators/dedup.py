@@ -58,7 +58,6 @@ def incremental_exact_dedup(
     delta: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Ingest-time dedup for a growing corpus: new (delta) documents are
     deduped within the delta (min-id canonical per content hash), then
@@ -71,11 +70,11 @@ def incremental_exact_dedup(
     anti-join delta bands against it.
 
     The index check never shuffles the index while the deduped delta
-    fits ``broadcast_threshold`` rows: a naive ``delta LEFT ANTI index``
-    puts the big index on the build side (unbroadcastable), so it runs
-    as index LEFT SEMI broadcast(delta) — one index scan emitting at
-    most |delta| matched hashes — then delta LEFT ANTI
-    broadcast(matched), both broadcast-hash joins. Past the threshold it
+    fits the dictionary joins' broadcast gate: a naive ``delta LEFT
+    ANTI index`` puts the big index on the build side (unbroadcastable),
+    so it runs as index LEFT SEMI broadcast(delta) — one index scan
+    emitting at most |delta| matched hashes — then delta LEFT ANTI
+    broadcast(matched), both broadcast-hash joins. Past the gate it
     degrades to the shuffled anti-join.
 
     Returns DataFrame[doc_id, content_hash] — the surviving (novel)
@@ -95,9 +94,9 @@ def incremental_exact_dedup(
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("doc_id"))
     )
-    return anti_join_keep_small(
-        canon, ex_hashes, ["content_hash"], broadcast_threshold
-    ).select("doc_id", "content_hash")
+    return anti_join_keep_small(canon, ex_hashes, ["content_hash"]).select(
+        "doc_id", "content_hash"
+    )
 
 
 def chunk_dup_signals(
@@ -283,7 +282,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (id1 < id2, jaccard >= threshold).
 
@@ -301,13 +299,8 @@ def ngram_jaccard_pairs(
         # keep-set into a left_semi — an OOM at scale; the inverted
         # anti-join produces identical rows with the bounded build side,
         # and the hint stays row-count-gated for pathological caps.
-        from ontoea_spark.operators.dictionary import (
-            BROADCAST_ROW_THRESHOLD,
-            _gated_broadcast,
-        )
+        from ontoea_spark.operators.dictionary import _gated_broadcast
 
-        if broadcast_threshold is None:
-            broadcast_threshold = BROADCAST_ROW_THRESHOLD
         hot = (
             sh.groupBy("shingle")
             .agg(F.count("*").alias("df"))
@@ -315,11 +308,7 @@ def ngram_jaccard_pairs(
             .select("shingle")
             .localCheckpoint(eager=False)
         )
-        sh = sh.join(
-            _gated_broadcast(hot, hot.count() <= broadcast_threshold),
-            "shingle",
-            "left_anti",
-        )
+        sh = sh.join(_gated_broadcast(hot), "shingle", "left_anti")
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id1"), "shingle")
     b = sh.select(F.col("id").alias("id2"), "shingle")

@@ -35,34 +35,55 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Row-count ceiling for the dictionary side of an encode join to be
-#: broadcast.  The entity dictionary is corpus-derived vocab — it grows
-#: with the crawl (10^8-10^9 distinct URIs at 100 TB), and ``F.broadcast``
-#: is a hard hint Spark obeys regardless of size, so an un-gated hint
-#: OOMs driver and executors at scale.  5M rows x ~40 B/URI ≈ 200 MB,
-#: comfortably inside a 4 GB driver; same default as
-#: ``pipeline/incremental.py`` uses for its delta-merge gate.
+#: Row-count ceiling for a size-gated broadcast hint: the one policy
+#: behind every dictionary join (D5-D7), link/entity filter (P6/P7/J2/J4)
+#: and set difference whose build side grows with the corpus.  The entity
+#: dictionary is corpus-derived vocab — 10^8-10^9 distinct URIs at
+#: 100 TB — and ``F.broadcast`` is a hard hint Spark obeys regardless of
+#: size, so an un-gated hint OOMs driver and executors at scale.  5M rows
+#: x ~40 B/URI ≈ 200 MB, comfortably inside a 4 GB driver.  Read only by
+#: :func:`_fits_broadcast`, at call time.
 BROADCAST_ROW_THRESHOLD = 5_000_000
 
 #: Range partitions of :func:`_rank`'s sort shuffle.
 _RANGE_PARTITIONS = 32
 
 
-def _gated_broadcast(df: DataFrame, small: bool) -> DataFrame:
-    """Apply the broadcast hint only when the caller measured the frame
-    small; otherwise return the frame unhinted and let AQE pick
-    sort-merge / shuffled-hash (or the bucketed-table path via
-    ``sources.tables.write_bucketed`` for repeated encode joins)."""
+def _fits_broadcast(rows: int) -> bool:
+    """The broadcast gate: may a side measured at ``rows`` rows take a
+    hard broadcast hint?"""
+    return rows <= BROADCAST_ROW_THRESHOLD
+
+
+def _gated_broadcast(df: DataFrame, small: bool | None = None) -> DataFrame:
+    """Apply the broadcast hint only when the frame fits the gate;
+    otherwise return the frame unhinted and let AQE pick sort-merge /
+    shuffled-hash (or the bucketed-table path via
+    ``sources.tables.write_bucketed`` for repeated encode joins).
+    ``small`` is the caller's verdict when it already holds a count;
+    without one, ``df`` is counted here (one job)."""
+    if small is None:
+        small = _fits_broadcast(df.count())
     return F.broadcast(df) if small else df
 
 
-def anti_join_keep_small(
-    small: DataFrame,
-    big: DataFrame,
-    key: list[str],
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
+def _set_join(
+    left: DataFrame, right: DataFrame, key: list[str], how: str
 ) -> DataFrame:
-    """``small LEFT ANTI big`` without ever shuffling ``big``.
+    """``left`` semi/anti ``right`` on ``key`` with set semantics: a NULL
+    key column matches a NULL, as in ``distinct`` and ``EXCEPT``. Still
+    an equi-join, so it plans as a hash join."""
+    r = right.select(*[F.col(c).alias(f"_r_{c}") for c in key])
+    on = reduce(
+        lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"_r_{c}")) for c in key]
+    )
+    return left.join(r, on, how)
+
+
+def anti_join_keep_small(
+    small: DataFrame, big: DataFrame, key: list[str]
+) -> DataFrame:
+    """``small`` minus ``big`` on ``key`` without ever shuffling ``big``.
 
     A LEFT ANTI join can only broadcast its build (right) side, so the
     naive form shuffles the big table every time. While ``small`` fits
@@ -71,7 +92,9 @@ def anti_join_keep_small(
     |small| matched keys — then small LEFT ANTI broadcast(matched).
     Past the gate it degrades to the shuffled anti-join. The one shared
     implementation of the pattern used by incremental dedup, dictionary
-    extension, negative sampling, and incremental canonicalization.
+    extension, the incremental edge merge, negative sampling, and
+    incremental canonicalization. Keys compare null-safely (set
+    difference: a NULL key already in ``big`` is not new).
 
     ``small`` is materialized here (the gate needs its count and both
     joins reuse it — lazy checkpoint, so the count job is also the
@@ -79,12 +102,12 @@ def anti_join_keep_small(
     whose ``key`` is absent from ``big``.
     """
     small = small.localCheckpoint(eager=False)
-    if small.count() <= broadcast_threshold:
-        matched = big.select(*key).join(
-            F.broadcast(small.select(*key)), key, "left_semi"
+    if _fits_broadcast(small.count()):
+        matched = _set_join(
+            big.select(*key), F.broadcast(small.select(*key)), key, "left_semi"
         )
-        return small.join(F.broadcast(matched), key, "left_anti")
-    return small.join(big.select(*key), key, "left_anti")
+        return _set_join(small, F.broadcast(matched), key, "left_anti")
+    return _set_join(small, big.select(*key), key, "left_anti")
 
 
 def _occurrences(
@@ -239,14 +262,14 @@ def sharing_ids(
     triples2: DataFrame,
     train_links: DataFrame,
     roles: tuple[str, ...] = ("s", "o"),
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> DataFrame:
     """D4 ``generate_sharing_id`` ordered path (read.py:29-61): aligned
     train-link pairs share one id — KG2's linked elements are removed
     before ranking/interleaving, then each linked e2 inherits its e1
     partner's id.
 
-    train_links: DataFrame[e1, e2]. Returns (kg, elem, id); ``rank`` and
+    train_links: DataFrame[e1, e2]; a link with a NULL side links
+    nothing and is dropped. Returns (kg, elem, id); ``rank`` and
     ``freq`` only cover the elements that went through the interleave
     (linked e2 rows carry NULLs there).
 
@@ -256,8 +279,8 @@ def sharing_ids(
     count — broadcasting the full interleaved dictionary would OOM at
     crawl scale.
     """
-    links_m = train_links.localCheckpoint(eager=False)
-    lsmall = links_m.count() <= broadcast_threshold
+    links_m = train_links.dropna(subset=["e1", "e2"]).localCheckpoint(eager=False)
+    lsmall = _fits_broadcast(links_m.count())
     linked2 = links_m.select(
         F.lit(2).cast("long").alias("kg"), F.col("e2").alias("elem")
     ).distinct()
@@ -379,7 +402,6 @@ def _encode(
     ent_ids: DataFrame,
     rel_ids: DataFrame,
     key: list[str],
-    broadcast_threshold: int,
     ent_small: bool | None,
     rel_small: bool | None,
 ) -> DataFrame:
@@ -389,9 +411,9 @@ def _encode(
     e = ent_ids.select(*key, "elem", "id")
     r = rel_ids.select(*key, "elem", "id")
     if ent_small is None:
-        ent_small = e.count() <= broadcast_threshold
+        ent_small = _fits_broadcast(e.count())
     if rel_small is None:
-        rel_small = r.count() <= broadcast_threshold
+        rel_small = _fits_broadcast(r.count())
     out = triples
     for role, d, small in (("s", e, ent_small), ("p", r, rel_small), ("o", e, ent_small)):
         side = d.withColumnRenamed("elem", role).withColumnRenamed("id", f"{role}_id")
@@ -403,7 +425,6 @@ def encode_triples(
     triples: DataFrame,
     ent_ids: DataFrame,
     rel_ids: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
     ent_small: bool | None = None,
     rel_small: bool | None = None,
 ) -> DataFrame:
@@ -412,22 +433,21 @@ def encode_triples(
     dictionary drop silently (reference read.py:141-149 asserts full
     coverage instead; use :func:`encode_coverage` to assert/meter).
 
-    The dictionary sides are broadcast only while they measure at or
-    under ``broadcast_threshold`` rows — the pipeline's dictionaries
-    come out of :func:`two_kg_dictionaries` already localCheckpoint-
-    materialized, so the count here is a cheap scan of materialized
-    rows, and past the threshold the joins degrade to AQE-planned
-    shuffled joins instead of an OOM-guaranteed forced broadcast
-    (same gate as ``pipeline/incremental.py``'s delta merge). Callers
-    that already measured the dictionaries (``two_kg_dictionaries
-    with_sizes=True``) pass ``ent_small``/``rel_small`` to skip the
+    The dictionary sides are broadcast only while they fit the gate
+    (:func:`_fits_broadcast`) — the pipeline's dictionaries come out of
+    :func:`two_kg_dictionaries` already localCheckpoint-materialized, so
+    the count here is a cheap scan of materialized rows, and past the
+    gate the joins degrade to AQE-planned shuffled joins instead of an
+    OOM-guaranteed forced broadcast. Callers that already measured the dictionaries
+    (``two_kg_dictionaries with_sizes=True``) pass
+    ``_fits_broadcast(n)`` as ``ent_small``/``rel_small`` to skip the
     count jobs.
 
     Returns DataFrame[s_id, p_id, o_id] (bigint).
     """
-    return _encode(
-        triples, ent_ids, rel_ids, [], broadcast_threshold, ent_small, rel_small
-    ).select("s_id", "p_id", "o_id")
+    return _encode(triples, ent_ids, rel_ids, [], ent_small, rel_small).select(
+        "s_id", "p_id", "o_id"
+    )
 
 
 def encode_triples_two_kg(
@@ -435,7 +455,6 @@ def encode_triples_two_kg(
     ent_ids: DataFrame,
     rel_ids: DataFrame,
     kg_col: str = "kgn",
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
     ent_small: bool | None = None,
     rel_small: bool | None = None,
 ) -> DataFrame:
@@ -450,35 +469,32 @@ def encode_triples_two_kg(
     Returns DataFrame[s_id, p_id, o_id, kg] (bigint).
     """
     t = triples.select(F.col(kg_col).cast("long").alias("kg"), "s", "p", "o")
-    return _encode(
-        t, ent_ids, rel_ids, ["kg"], broadcast_threshold, ent_small, rel_small
-    ).select("s_id", "p_id", "o_id", "kg")
+    return _encode(t, ent_ids, rel_ids, ["kg"], ent_small, rel_small).select(
+        "s_id", "p_id", "o_id", "kg"
+    )
 
 
 def encode_pairs(
     pairs: DataFrame,
     ids1: DataFrame,
     ids2: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> DataFrame:
     """D6 (uris_pair_2ids, read.py:129-138): pairs with either side missing
     from its dictionary are silently dropped (inner-join semantics — the
     reference does the same with an `if in` filter).
 
-    Dictionary sides broadcast only while they measure at or under
-    ``broadcast_threshold`` rows (see :func:`encode_triples`)."""
+    Dictionary sides broadcast only while they fit the gate (see
+    :func:`encode_triples`)."""
     return (
         pairs.join(
             _gated_broadcast(
-                ids1.select(F.col("elem").alias("e1"), F.col("id").alias("id1")),
-                ids1.count() <= broadcast_threshold,
+                ids1.select(F.col("elem").alias("e1"), F.col("id").alias("id1"))
             ),
             "e1",
         )
         .join(
             _gated_broadcast(
-                ids2.select(F.col("elem").alias("e2"), F.col("id").alias("id2")),
-                ids2.count() <= broadcast_threshold,
+                ids2.select(F.col("elem").alias("e2"), F.col("id").alias("id2"))
             ),
             "e2",
         )
@@ -490,25 +506,22 @@ def encode_attribute_triples(
     attr_triples: DataFrame,
     ent_ids: DataFrame,
     attr_ids: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> DataFrame:
     """D7 (read.py:152-163): heads without an entity id drop silently;
     the literal passes through unchanged.
 
-    Dictionary sides broadcast only while they measure at or under
-    ``broadcast_threshold`` rows (see :func:`encode_triples`)."""
+    Dictionary sides broadcast only while they fit the gate (see
+    :func:`encode_triples`)."""
     return (
         attr_triples.join(
             _gated_broadcast(
-                ent_ids.select(F.col("elem").alias("e"), F.col("id").alias("e_id")),
-                ent_ids.count() <= broadcast_threshold,
+                ent_ids.select(F.col("elem").alias("e"), F.col("id").alias("e_id"))
             ),
             "e",
         )
         .join(
             _gated_broadcast(
-                attr_ids.select(F.col("elem").alias("a"), F.col("id").alias("a_id")),
-                attr_ids.count() <= broadcast_threshold,
+                attr_ids.select(F.col("elem").alias("a"), F.col("id").alias("a_id"))
             ),
             "a",
         )

@@ -13,6 +13,12 @@ Reference semantics:
   (e1,e2) substitute the aligned entity into the partner KG's adjacency.
 * J4 ``generate_sup_cv_links`` (read.py:184-200): propagate class
   membership across alignment links where one side is missing/different.
+
+Link and entity sets GROW WITH THE CORPUS — a hard broadcast hint on
+them is an OOM at crawl scale — so every hint in this module goes
+through the dictionary joins' gate (``dictionary._gated_broadcast``):
+one count job of the lazy frame, no checkpoint pin, so downstream plans
+stay fused.
 """
 
 from __future__ import annotations
@@ -20,23 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _gate_small(df: DataFrame, broadcast_threshold: int | None) -> bool:
-    """Decide a broadcast gate by counting the (lazy) frame. Link/entity
-    sets GROW WITH THE CORPUS — a hard broadcast hint on them is an OOM
-    at crawl scale, so every hint in this module goes through this gate
-    (the dictionary-encode pattern, operators/dictionary.py). One count
-    job, no checkpoint pin: the frame stays lazy so downstream plans
-    fuse exactly as they did before the gate existed."""
-    from ontoea_spark.operators.dictionary import BROADCAST_ROW_THRESHOLD
-
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
-    return df.count() <= broadcast_threshold
-
-
-def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
-    return F.broadcast(df) if small else df
+from ontoea_spark.operators.dictionary import _fits_broadcast, _gated_broadcast
 
 
 def parse_entities(triples: DataFrame) -> DataFrame:
@@ -60,7 +50,6 @@ def linked_entity_set(links: DataFrame, side: str) -> DataFrame:
 def remove_unlinked_triples(
     triples: DataFrame,
     linked: DataFrame,
-    broadcast_threshold: int | None = None,
     small: bool | None = None,
 ) -> DataFrame:
     """P6: keep triples with BOTH endpoints in ``linked`` (col: entity).
@@ -68,9 +57,7 @@ def remove_unlinked_triples(
     row-count gate (it is O(|links|) — corpus-growing). Callers that
     already know the verdict (the fixpoint loop) pass ``small`` to skip
     the count."""
-    if small is None:
-        small = _gate_small(linked, broadcast_threshold)
-    le = _maybe_broadcast(linked, small)
+    le = _gated_broadcast(linked, small)
     return triples.join(
         le.withColumnRenamed("entity", "s"), "s", "left_semi"
     ).join(le.withColumnRenamed("entity", "o"), "o", "left_semi").select(
@@ -82,7 +69,6 @@ def remove_no_triples_link(
     links: DataFrame,
     triples1: DataFrame,
     triples2: DataFrame,
-    broadcast_threshold: int | None = None,
     small1: bool | None = None,
     small2: bool | None = None,
 ) -> DataFrame:
@@ -92,16 +78,12 @@ def remove_no_triples_link(
     row-count-gated; past the gate AQE plans the semi-joins."""
     ents1 = parse_entities(triples1)
     ents2 = parse_entities(triples2)
-    if small1 is None:
-        small1 = _gate_small(ents1, broadcast_threshold)
-    if small2 is None:
-        small2 = _gate_small(ents2, broadcast_threshold)
     return links.join(
-        _maybe_broadcast(ents1.withColumnRenamed("entity", "e1"), small1),
+        _gated_broadcast(ents1.withColumnRenamed("entity", "e1"), small1),
         "e1",
         "left_semi",
     ).join(
-        _maybe_broadcast(ents2.withColumnRenamed("entity", "e2"), small2),
+        _gated_broadcast(ents2.withColumnRenamed("entity", "e2"), small2),
         "e2",
         "left_semi",
     )
@@ -112,7 +94,6 @@ def links_triples_fixpoint(
     triples1: DataFrame,
     triples2: DataFrame,
     max_iter: int = 3,
-    broadcast_threshold: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """P6+P7 iterated (kgs.py:598-615). Bounded driver loop; each pass is a
     handful of semi-joins, and intermediate frames are the loop-carried
@@ -127,10 +108,6 @@ def links_triples_fixpoint(
     a side under its thresholds. In-loop plans stay lazily fused
     (nothing is checkpointed or pinned; bounded max_iter keeps lineage
     shallow)."""
-    if broadcast_threshold is None:
-        from ontoea_spark.operators.dictionary import BROADCAST_ROW_THRESHOLD
-
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
     # all three gate counts in ONE job: tag each set, count per tag
     # (three separate count() actions each pay a full job round-trip;
     # the union scans the same inputs once and returns 3 rows)
@@ -140,9 +117,9 @@ def links_triples_fixpoint(
         .unionAll(links.select(F.lit("lk").alias("t")))
     )
     cnts = {r["t"]: r["n"] for r in tagged.groupBy("t").agg(F.count("*").alias("n")).collect()}
-    s1 = cnts.get("e1", 0) <= broadcast_threshold
-    s2 = cnts.get("e2", 0) <= broadcast_threshold
-    sl = cnts.get("lk", 0) <= broadcast_threshold  # bounds |l1| and |l2|
+    s1 = _fits_broadcast(cnts.get("e1", 0))
+    s2 = _fits_broadcast(cnts.get("e2", 0))
+    sl = _fits_broadcast(cnts.get("lk", 0))  # bounds |l1| and |l2|
     for _ in range(max_iter):
         links = remove_no_triples_link(
             links, triples1, triples2, small1=s1, small2=s2
@@ -168,11 +145,11 @@ def sup_relation_triples(links: DataFrame, triples: DataFrame, swap_from: str = 
     triples at head and tail positions (read.py:166-181).
 
     ``swap_from``: which link column matches this KG's entities; the other
-    column is substituted in.
+    column is substituted in. A link with a NULL side links nothing and
+    is dropped.
     """
     other = "e2" if swap_from == "e1" else "e1"
-    lk_df = links.select(swap_from, other)
-    lk = _maybe_broadcast(lk_df, _gate_small(lk_df, None))
+    lk = _gated_broadcast(links.select(swap_from, other).dropna())
     head = (
         triples.join(lk, triples["s"] == lk[swap_from])
         .select(F.col(other).alias("s"), "p", "o")
@@ -195,7 +172,7 @@ def sup_cv_links(align_links: DataFrame, cv_links: DataFrame) -> DataFrame:
 
     Returns DataFrame[entity, cls] of NEW links, deduplicated.
     """
-    cv = _maybe_broadcast(cv_links, _gate_small(cv_links, None))
+    cv = _gated_broadcast(cv_links)
     j = (
         align_links.join(
             cv.select(F.col("entity").alias("e1"), F.col("cls").alias("c1")),

@@ -23,33 +23,30 @@ def corrupt_triples(
     ent_ids: DataFrame,
     neg_per_pos: int = 2,
     salt: str = "neg",
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """edges: (s_id, p_id, o_id); ent_ids: (rank, id) for the replacement
     pool. For copy i of each edge: h = hash64(s:p:o:i:salt); corrupt the
     head when h is even else the tail; replacement = the entity whose
     rank == h mod |pool| — a broadcast join on rank only while the pool
-    (the full entity dictionary, corpus-growing) fits the row-count
-    gate; past it the rank join shuffles, and rank uniformity from the
-    hash keeps that shuffle skew-free.
+    (the full entity dictionary, corpus-growing) fits the dictionary
+    joins' row-count gate; past it the rank join shuffles, and rank
+    uniformity from the hash keeps that shuffle skew-free.
 
     Returns DataFrame[h_id, r_id, t_id] — corrupted candidates, possibly
     colliding with true triples (filter via :func:`neg_antijoin`).
     """
     from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
+        _fits_broadcast,
         _gated_broadcast,
     )
 
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
     # one materialization serves the gate count, the modulus, and the
     # rank join (previously three separate evaluations of the pool plan)
     pool = ent_ids.select(
         "rank", F.col("id").alias("repl_id")
     ).localCheckpoint(eager=True)
     n = pool.count()
-    psmall = n <= broadcast_threshold
+    psmall = _fits_broadcast(n)
     copies = edges.crossJoin(
         F.broadcast(
             edges.sparkSession.range(neg_per_pos).select(F.col("id").alias("i"))
@@ -86,7 +83,6 @@ def corrupt_triples(
 def neg_antijoin(
     candidates: DataFrame,
     edges: DataFrame,
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """J10: drop corrupted triples that exist as true triples
     (batch.py:166 set difference -> distributed left_anti).
@@ -96,18 +92,11 @@ def neg_antijoin(
     the gate this runs as the semi+anti broadcast pair
     (dictionary.anti_join_keep_small) — one edge-table scan, no
     shuffle; past the gate, the shuffled anti-join."""
-    from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
-        anti_join_keep_small,
-    )
+    from ontoea_spark.operators.dictionary import anti_join_keep_small
 
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
     true_t = edges.select(
         F.col("s_id").alias("h_id"),
         F.col("p_id").alias("r_id"),
         F.col("o_id").alias("t_id"),
     )
-    return anti_join_keep_small(
-        candidates, true_t, ["h_id", "r_id", "t_id"], broadcast_threshold
-    )
+    return anti_join_keep_small(candidates, true_t, ["h_id", "r_id", "t_id"])

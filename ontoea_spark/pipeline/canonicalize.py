@@ -44,8 +44,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
-    BROADCAST_ROW_THRESHOLD,
+    _fits_broadcast,
     _gated_broadcast,
+    _set_join,
     anti_join_keep_small,
     encode_triples,
     single_kg_dictionaries,
@@ -94,14 +95,12 @@ def canonical_entity_map(
     )
 
 
-def _prepared_map(
-    mapping: DataFrame, broadcast_threshold: int
-) -> tuple[DataFrame, bool]:
+def _prepared_map(mapping: DataFrame) -> tuple[DataFrame, bool]:
     """Materialize the map once (it feeds several joins) and decide the
     broadcast gate from its actual row count. Lazy checkpoint + count:
     one blocking job, not a materialize job followed by a count job."""
     mapping = mapping.localCheckpoint(eager=False)
-    return mapping, mapping.count() <= broadcast_threshold
+    return mapping, _fits_broadcast(mapping.count())
 
 
 def _rewrite_so(df: DataFrame, mapping: DataFrame, small: bool) -> DataFrame:
@@ -131,20 +130,16 @@ def _rewrite_so(df: DataFrame, mapping: DataFrame, small: bool) -> DataFrame:
     )
 
 
-def rewrite_triples(
-    triples: DataFrame,
-    mapping: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
-) -> DataFrame:
+def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite s/o through the canonical map; distinct.
 
     Two left joins (subject, object) against the non-identity map —
-    broadcast while the map fits under ``broadcast_threshold`` rows,
-    shuffled otherwise — then one set-semantics distinct (parallel
+    broadcast while the map fits the broadcast gate, shuffled
+    otherwise — then one set-semantics distinct (parallel
     edges collapse when their endpoints merge). Predicates are left
     untouched: entity alignment merges nodes, not relations.
     """
-    mapping, small = _prepared_map(mapping, broadcast_threshold)
+    mapping, small = _prepared_map(mapping)
     return _rewrite_so(triples, mapping, small).select("s", "p", "o").distinct()
 
 
@@ -155,7 +150,6 @@ def canonical_triple_provenance(
     namespace_col: str | None = None,
     url_col: str = "url",
     ts_col: str = "warc_ts",
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> DataFrame:
     """Crawl provenance of the CANONICAL graph: every canonical (s,p,o)
     with exact distinct-page corroboration, mention count, and crawl-time
@@ -172,14 +166,13 @@ def canonical_triple_provenance(
     from ontoea_spark.pipeline.extract import provenance_agg, provenance_mentions
 
     m = provenance_mentions(pages_text, text_col, namespace_col, url_col, ts_col)
-    mapping, small = _prepared_map(mapping, broadcast_threshold)
+    mapping, small = _prepared_map(mapping)
     return provenance_agg(_rewrite_so(m, mapping, small))
 
 
 def vertex_provenance(
     entities: DataFrame,
     mapping: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
     small: bool | None = None,
 ) -> DataFrame:
     """(canonical uri -> srcs): which source KGs merged into each node.
@@ -190,14 +183,7 @@ def vertex_provenance(
     merged node, single-prefix otherwise. One groupBy over the entity
     set (not the edge table).
     """
-    if small is None:
-        small = mapping.count() <= broadcast_threshold
-    m = _gated_broadcast(
-        mapping.select(
-            F.col("entity"), F.col("canonical")
-        ),
-        small,
-    )
+    m = _gated_broadcast(mapping.select("entity", "canonical"), small)
     return (
         entities.join(m, "entity", "left")
         .select(
@@ -231,7 +217,6 @@ def ingest_canonical_batch(
     mapping: DataFrame,
     delta_triples: DataFrame,
     delta_links: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> CanonicalDelta:
     """Extend a canonical graph with a batch of new triples + alignment
     links WITHOUT re-running global connected components — the crawl
@@ -268,7 +253,7 @@ def ingest_canonical_batch(
     Disjoint keys by construction: map keys are never canonicals, remap
     keys never map keys, so the unions need no dedup.
     """
-    mapping, msmall = _prepared_map(mapping, broadcast_threshold)
+    mapping, msmall = _prepared_map(mapping)
 
     # 1. resolve delta link endpoints through the existing map, then
     #    components over the resolved O(batch) link set only
@@ -281,7 +266,7 @@ def ingest_canonical_batch(
     # O(batch) by construction, but gate anyway (a pathological
     # mega-batch should degrade, not OOM) — the count is a metadata
     # read on the checkpointed frame
-    rsmall = remap.count() <= broadcast_threshold
+    rsmall = _fits_broadcast(remap.count())
 
     # 2. map maintenance: rows whose canonical lost its status follow it
     #    to the new minimum; the remap rows join the map themselves
@@ -328,16 +313,11 @@ def ingest_canonical_batch(
     # 4. delta triples rewrite through the UPDATED map, then the novel
     #    view: candidates are O(delta + affected) rows, anti-joined
     #    against the previous corpus
-    mapping2_small = (
-        mapping2.count() <= broadcast_threshold
-    )
-    new_canon = _rewrite_so(delta_triples, mapping2, mapping2_small).select(
-        "s", "p", "o"
-    )
+    new_canon = _rewrite_so(
+        delta_triples, mapping2, _fits_broadcast(mapping2.count())
+    ).select("s", "p", "o")
     candidates = rewritten_old.unionByName(new_canon).distinct()
-    novel = anti_join_keep_small(
-        candidates, triples, ["s", "p", "o"], broadcast_threshold
-    )
+    novel = anti_join_keep_small(candidates, triples, ["s", "p", "o"])
 
     # updated = (prev \ touched) ∪ novel, EXACTLY and without a corpus
     # distinct: prev is a set, novel is deduped and disjoint from prev
@@ -345,9 +325,10 @@ def ingest_canonical_batch(
     # touched row (its endpoints are new canonicals, never remap keys) —
     # so the union is already duplicate-free. The touched anti-join's
     # build side is O(affected); AQE broadcasts it, leaving one corpus
-    # SCAN as the whole update plan.
-    updated_triples = triples.join(
-        touched.select("s", "p", "o"), ["s", "p", "o"], "left_anti"
+    # SCAN as the whole update plan. Keys compare null-safely, as the
+    # set difference needs: a touched row with a NULL endpoint goes too.
+    updated_triples = _set_join(
+        triples, touched, ["s", "p", "o"], "left_anti"
     ).unionByName(novel)
     return CanonicalDelta(
         triples=updated_triples,
@@ -401,7 +382,6 @@ def canonicalize_kg(
     triples1: DataFrame,
     triples2: DataFrame,
     links: DataFrame,
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> CanonicalKG:
     """Full canonicalization: links -> components -> rewrite -> unified
     dictionary -> edge/vertex tables.
@@ -412,7 +392,7 @@ def canonicalize_kg(
     exactly the property the downstream adjacency/degree consumers want.
     """
     all_t = triples1.unionByName(triples2)
-    mapping, small = _prepared_map(canonical_entity_map(links), broadcast_threshold)
+    mapping, small = _prepared_map(canonical_entity_map(links))
     canon = (
         _rewrite_so(all_t, mapping, small)
         .select("s", "p", "o")
@@ -434,16 +414,15 @@ def canonicalize_kg(
         canon,
         ent_ids,
         rel_ids,
-        broadcast_threshold,
-        ent_small=n_ent <= broadcast_threshold,
-        rel_small=n_rel <= broadcast_threshold,
+        ent_small=_fits_broadcast(n_ent),
+        rel_small=_fits_broadcast(n_rel),
     )
     pre_entities = (
         all_t.select(F.col("s").alias("entity"))
         .unionAll(all_t.select(F.col("o").alias("entity")))
         .distinct()
     )
-    prov = vertex_provenance(pre_entities, mapping, broadcast_threshold, small)
+    prov = vertex_provenance(pre_entities, mapping, small)
     vertices = ent_ids.select(
         F.col("id"), F.col("elem").alias("uri"), F.col("freq")
     ).join(prov, "uri").select("id", "uri", "freq", "srcs")

@@ -316,7 +316,6 @@ def domain_quality_prior(
     host_ranks: DataFrame,
     w_prior: float = 0.1,
     rank_cap: float = 4.0,
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """Fuse the per-document quality score with a DOMAIN-level prior
     derived from the crawl's own link graph (CCNet/RefinedWeb-style
@@ -343,7 +342,7 @@ def domain_quality_prior(
     build side are a broadcast, immune to the src0-style hub skew.
     """
     from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
+        _fits_broadcast,
         _gated_broadcast,
     )
 
@@ -351,9 +350,7 @@ def domain_quality_prior(
     # assumption thins at CC scale, so the host-rank side's hint is
     # row-count-gated (one count of the |hosts|-sized frame) instead of
     # forced; past the gate AQE plans the join.
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
-    hosts_small = host_ranks.count() <= broadcast_threshold
+    hosts_small = _fits_broadcast(host_ranks.count())
     n_hosts = host_ranks.agg(F.count("*").cast("long").alias("n_hosts"))
     rel = host_ranks.crossJoin(F.broadcast(n_hosts)).select(
         "host",

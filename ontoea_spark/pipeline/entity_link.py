@@ -24,8 +24,8 @@ Spark shape (all JVM-side, zero UDF):
   reproducible across partitionings.
 * :func:`link_mentions` — equi-join of a mention stream against the
   top-1 dictionary. The dictionary has ONE row per key, so the join is
-  map-side whenever the dictionary measures small (same
-  ``_gated_broadcast`` gate as operators/dictionary.py — a web-scale
+  map-side whenever the dictionary measures small (the dictionary
+  joins' ``_gated_broadcast`` gate, operators/dictionary.py — a web-scale
   surface-form vocabulary can exceed driver RAM, in which case the
   hint is dropped and AQE plans a shuffled join; head-mention skew on
   the probe side is AQE-skew-join territory, not salting, because the
@@ -49,10 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ontoea_spark.operators.dictionary import (
-    BROADCAST_ROW_THRESHOLD,
-    _gated_broadcast,
-)
+from ontoea_spark.operators.dictionary import _gated_broadcast
 
 
 def mention_entity_prior(alias_index: DataFrame) -> DataFrame:
@@ -89,7 +86,6 @@ def link_mentions(
     mentions: DataFrame,
     top1: DataFrame,
     mention_col: str = "anchor_text",
-    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> DataFrame:
     """Link a mention stream to canonical entities via the top-1 dict.
 
@@ -101,8 +97,7 @@ def link_mentions(
     dict_df = top1.select(
         F.col("anchor_text").alias(mention_col), "entity_url", "prior"
     ).localCheckpoint(eager=True)
-    small = dict_df.count() <= broadcast_threshold
-    return mentions.join(_gated_broadcast(dict_df, small), on=mention_col)
+    return mentions.join(_gated_broadcast(dict_df), on=mention_col)
 
 
 def anchor_linking_accuracy(

@@ -16,11 +16,13 @@ contract instead:
 * delta edges are encoded against the merged dictionary and unioned
   onto the existing edge table (an append-only Iceberg write at scale).
 
-Shapes: the delta's unseen-element set is found WITHOUT shuffling the
-dictionary — dictionary LEFT SEMI broadcast(delta vocab), then a
-broadcast anti-join against the matched keys (size-gated; a backfill
-degrades to the shuffled anti-join); id assignment reuses the same
-two-phase exact rank as the batch path; nothing touches existing rows.
+Shapes: the delta's unseen-element set and its novel edges are both
+found by ``dictionary.anti_join_keep_small`` WITHOUT shuffling the
+dictionary or the edge table — big LEFT SEMI broadcast(delta), then a
+broadcast anti-join against the matched keys (gated by the dictionary
+joins' broadcast gate; a backfill degrades to the shuffled anti-join);
+id assignment reuses the same two-phase exact rank as the batch path;
+nothing touches existing rows.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
-    BROADCAST_ROW_THRESHOLD,
     _frequencies,
     _occurrences,
     _rank,
@@ -53,7 +54,6 @@ class IncrementalResult:
 def extend_dictionary(
     existing: DataFrame,
     delta_occurrences: DataFrame,
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """Append unseen elements to a dictionary with frozen existing ids.
 
@@ -77,12 +77,8 @@ def extend_dictionary(
     NULL delta elements are dropped by the dictionary core's frequency
     step: they get no id (and are not re-appended on every delta).
     """
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
     freqs = _frequencies(delta_occurrences, ["kg"])
-    unseen = anti_join_keep_small(
-        freqs, existing, ["kg", "elem"], broadcast_threshold
-    )
+    unseen = anti_join_keep_small(freqs, existing, ["kg", "elem"])
     # rank the unseen tail ungrouped; kg rides through the rank key via
     # the "kg\telem" elem — rank within the whole unseen set so ids stay
     # globally dense
@@ -116,7 +112,6 @@ def incremental_update(
     edges: DataFrame,
     delta_triples: DataFrame,
     kg_expr,
-    broadcast_threshold: int = 5_000_000,
 ) -> IncrementalResult:
     """Fold a delta triple batch (s, p, o) into an existing encoded KG.
 
@@ -124,12 +119,11 @@ def incremental_update(
     Existing ids are frozen; delta edges are encoded against the merged
     dictionaries and appended.
 
-    ``broadcast_threshold``: max deduped-delta row count for the
-    broadcast merge path. Small deltas (the normal ingest regime) take
-    the broadcast semi/anti plan — one scan of ``edges``, no exchange.
-    A larger delta (a backfill) would OOM the driver if force-broadcast,
-    so above the threshold the merge degrades gracefully to a plain
-    shuffled anti-join of the delta against the edge table.
+    The merge is ``anti_join_keep_small`` of the deduped delta against
+    the edge table: small deltas (the normal ingest regime) take the
+    broadcast semi/anti plan — one scan of ``edges``, no exchange; a
+    delta past the broadcast gate (a backfill) would OOM the driver if
+    force-broadcast, so it degrades to a plain shuffled anti-join.
     """
     d = delta_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     d = d.localCheckpoint(eager=True)
@@ -140,30 +134,12 @@ def incremental_update(
         rel_ids, _occurrences(d, ("p",), F.col("kg"))
     ).localCheckpoint(eager=True)
     new_edges = encode_triples_two_kg(d, ent2, rel2, kg_col="kg")
-    # Append-only merge: the existing edge table is never shuffled in
-    # the normal regime.
-    # 1. dedup WITHIN the (small) delta;
-    # 2. broadcast the delta and semi-join the big table against it —
-    #    one scan of `edges`, no exchange — to find already-present keys;
-    # 3. anti-join the delta against that (tiny) match set and append
-    #    only the novel rows.  A unionByName + dropDuplicates here would
-    #    re-shuffle the ENTIRE edge table on every delta, making delta
-    #    cost O(full table) instead of O(delta + one scan).
-    # The broadcast is SIZE-GATED: the delta is already materialized
-    # (localCheckpoint), so the count is a metadata read; past the
-    # threshold a forced broadcast would OOM, and one shuffled
-    # anti-join is the correct degraded plan for a backfill.
+    # Append-only merge of only the novel rows, deduped WITHIN the
+    # (small) delta: a unionByName + dropDuplicates here would
+    # re-shuffle the ENTIRE edge table on every delta, making delta
+    # cost O(full table) instead of O(delta + one scan).
     key = ["s_id", "p_id", "o_id", "kg"]
-    delta_edges = new_edges.dropDuplicates(key).localCheckpoint(eager=True)
-    if delta_edges.count() <= broadcast_threshold:
-        already = edges.join(
-            F.broadcast(delta_edges.select(*key)), on=key, how="leftsemi"
-        )
-        novel = delta_edges.join(
-            F.broadcast(already.select(*key)), on=key, how="left_anti"
-        )
-    else:
-        novel = delta_edges.join(edges.select(*key), on=key, how="left_anti")
+    novel = anti_join_keep_small(new_edges.dropDuplicates(key), edges, key)
     merged = edges.unionByName(novel)
     return IncrementalResult(
         ent_ids=ent2, rel_ids=rel2, edges=merged, novel_edges=novel

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
-    BROADCAST_ROW_THRESHOLD,
+    _fits_broadcast,
     encode_triples_two_kg,
     two_kg_dictionaries,
 )
@@ -93,8 +93,8 @@ def build_kg(pages: DataFrame) -> KGBuildResult:
         all_triples.withColumn("kgn", kg_expr),
         ent_ids,
         rel_ids,
-        ent_small=n_ent <= BROADCAST_ROW_THRESHOLD,
-        rel_small=n_rel <= BROADCAST_ROW_THRESHOLD,
+        ent_small=_fits_broadcast(n_ent),
+        rel_small=_fits_broadcast(n_rel),
     )
     vertices = ent_ids.select(
         F.col("id"), F.col("elem").alias("uri"), F.col("kg"), F.col("freq")

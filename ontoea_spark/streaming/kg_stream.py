@@ -243,17 +243,14 @@ def decoded_edges(
     builds. The dictionaries are corpus-vocab-sized, so their broadcast
     hints are row-count-gated like every dictionary join (past the gate
     AQE plans the decode joins)."""
-    from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
-        _gated_broadcast,
-    )
+    from ontoea_spark.operators.dictionary import _gated_broadcast
 
     ent_m = ent_ids.select("kg", "elem", "id").localCheckpoint(eager=True)
     rel_m = rel_ids.select("kg", "elem", "id").localCheckpoint(eager=True)
     # independent gates: the relation vocab is typically tiny even when
     # the entity vocab is way past the threshold
-    ent = _gated_broadcast(ent_m, ent_m.count() <= BROADCAST_ROW_THRESHOLD)
-    rel = _gated_broadcast(rel_m, rel_m.count() <= BROADCAST_ROW_THRESHOLD)
+    ent = _gated_broadcast(ent_m)
+    rel = _gated_broadcast(rel_m)
     return (
         edges.join(
             ent.select(

@@ -347,7 +347,6 @@ def _fuse_type_scores(
     data: AlignmentData,
     compat: DataFrame,
     gamma: float,
-    broadcast_threshold: int | None = None,
 ) -> DataFrame:
     """sim + gamma * type_score over (lid, rid, sim) rows. ``compat``
     is class x class — always broadcast; ``lcls``/``rcls`` are
@@ -355,13 +354,11 @@ def _fuse_type_scores(
     row-count-gated on the measured cv_ids size — a hard hint OOMs at
     10^8 entities; past the gate AQE plans the joins."""
     from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
+        _fits_broadcast,
         _gated_broadcast,
     )
 
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_ROW_THRESHOLD
-    cls_small = data.cv_ids.count() <= broadcast_threshold
+    cls_small = _fits_broadcast(data.cv_ids.count())
     lcls = data.cv_ids.withColumnRenamed("ent_id", "lid").join(
         data.cls_ids, "cls_id"
     ).select("lid", F.col("cls").alias("c1"))

@@ -343,9 +343,7 @@ class SparkEntStore:
         touched = sorted(
             r["b"]
             for r in grad_df.select(
-                F.least(
-                    (F.col("idx") / bw).cast("long"), F.lit(nb - 1)
-                ).alias("b")
+                F.least(F.expr(f"idx DIV {bw}"), F.lit(nb - 1)).alias("b")
             )
             .distinct()
             .collect()

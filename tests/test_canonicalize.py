@@ -12,6 +12,7 @@ from ontoea_spark.pipeline.canonicalize import (
     canonicalize_kg,
     rewrite_triples,
 )
+from tests.conftest import past_broadcast_gate
 
 
 def _rows(df):
@@ -66,7 +67,8 @@ def test_rewrite_broadcast_gate(spark):
         return df._jdf.queryExecution().optimizedPlan().toString().lower()
 
     hinted = rewrite_triples(tri, mapping)
-    gated = rewrite_triples(tri, mapping, broadcast_threshold=0)
+    with past_broadcast_gate():
+        gated = rewrite_triples(tri, mapping)
     assert "broadcast" in _plan(hinted), _plan(hinted)
     assert "broadcast" not in _plan(gated), _plan(gated)
     expect = [("kg1:a", "p", "kg1:a"), ("kg1:a", "q", "kg1:b")]
@@ -150,6 +152,43 @@ def test_ingest_canonical_batch_equals_rebuild(spark):
     assert again.retracted_triples.count() == 0
     assert again.changed_map_rows.count() == 0
     assert _rows(again.triples) == _rows(delta.triples)
+
+
+def test_ingest_canonical_batch_null_endpoint_equals_rebuild(spark):
+    """NULL endpoints keep the rebuild contract: like the rebuild's
+    distinct, both set differences treat NULL as one value — (i) a delta
+    row already present (NULL object) is not novel and not duplicated;
+    (ii) a row with a NULL object whose subject merges is retracted, not
+    kept next to its rewritten form."""
+    from collections import Counter
+
+    from ontoea_spark.pipeline.canonicalize import ingest_canonical_batch
+
+    schema = "s string, p string, o string"
+    cases = [
+        (
+            [("kg1:a", "p", "kg1:b"), ("kg1:b", "p", None)],
+            [("kg1:b", "p", None)],
+            [],
+        ),
+        (
+            [("kg1:b", "p", None), ("kg1:a", "q", "kg1:c")],
+            [],
+            [("kg1:a", "kg1:b")],
+        ),
+    ]
+    no_map = spark.createDataFrame([], "entity string, canonical string")
+    bag = lambda df: Counter(tuple(r) for r in df.collect())
+    for t, dt, dl in cases:
+        prev = spark.createDataFrame(t, schema).localCheckpoint(eager=True)
+        dt_df = spark.createDataFrame(dt, schema)
+        dl_df = spark.createDataFrame(dl, "e1 string, e2 string")
+        delta = ingest_canonical_batch(prev, no_map, dt_df, dl_df)
+        full = rewrite_triples(prev.unionByName(dt_df), canonical_entity_map(dl_df))
+        assert bag(delta.triples) == bag(full), (t, dt, dl)
+        assert set(bag(delta.triples)) == (
+            set(bag(prev)) - set(bag(delta.retracted_triples))
+        ) | set(bag(delta.novel_triples))
 
 
 def test_materialize_canonical_colocated_consumers(spark, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, past_broadcast_gate
 
 
 def _anchors(spark):
@@ -106,6 +106,7 @@ def test_link_mentions_broadcast_gate(spark):
 
     small = link_mentions(mentions, top1)
     assert "broadcast" in _plan(small), _plan(small)
-    gated = link_mentions(mentions, top1, broadcast_threshold=0)
+    with past_broadcast_gate():
+        gated = link_mentions(mentions, top1)
     assert "broadcast" not in _plan(gated), _plan(gated)
     assert small.count() == gated.count() == mentions.count()

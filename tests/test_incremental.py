@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, past_broadcast_gate
 
 
 def _decode(edges, ent_ids, rel_ids):
@@ -68,7 +68,7 @@ def test_incremental_matches_full_rebuild(spark):
 
 
 def test_large_delta_takes_non_broadcast_merge(spark):
-    """The delta-merge broadcast is size-gated: above broadcast_threshold
+    """The delta-merge broadcast is size-gated: past the broadcast gate
     the plan must degrade to a plain (non-hinted) anti-join instead of
     force-broadcasting an unbounded backfill, with identical results."""
     from ontoea_spark.pipeline.incremental import incremental_update
@@ -89,9 +89,8 @@ def test_large_delta_takes_non_broadcast_merge(spark):
     )
 
     inc_small = incremental_update(ent, rel, edges, delta, F.lit(1))
-    inc_big = incremental_update(
-        ent, rel, edges, delta, F.lit(1), broadcast_threshold=0
-    )
+    with past_broadcast_gate():
+        inc_big = incremental_update(ent, rel, edges, delta, F.lit(1))
     # the delta is localCheckpointed before the merge, so the merged
     # plan contains ONLY the merge joins — broadcast hints must appear
     # in the small-delta plan and be absent from the gated one

@@ -4,7 +4,7 @@ joins staying equi-joins (never a row-level cartesian product)."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, past_broadcast_gate
 
 
 def _plan(df) -> str:
@@ -120,7 +120,8 @@ def test_filter_ops_broadcast_gate(spark):
         return df._jdf.queryExecution().optimizedPlan().toString().lower()
 
     hinted = remove_unlinked_triples(triples, linked)
-    gated = remove_unlinked_triples(triples, linked, broadcast_threshold=0)
+    with past_broadcast_gate():
+        gated = remove_unlinked_triples(triples, linked)
     assert "broadcast" in plan(hinted), plan(hinted)
     assert "broadcast" not in plan(gated), plan(gated)
     rows = lambda df: sorted(tuple(r) for r in df.collect())
@@ -129,12 +130,135 @@ def test_filter_ops_broadcast_gate(spark):
     links = spark.createDataFrame([("a", "x"), ("z", "y")], "e1 string, e2 string")
     t2 = spark.createDataFrame([("x", "p", "y")], "s string, p string, o string")
     h2 = remove_no_triples_link(links, triples, t2)
-    g2 = remove_no_triples_link(links, triples, t2, broadcast_threshold=0)
+    with past_broadcast_gate():
+        g2 = remove_no_triples_link(links, triples, t2)
     assert "broadcast" in plan(h2), plan(h2)
     assert "broadcast" not in plan(g2), plan(g2)
     assert (
         rows(h2.select("e1", "e2")) == rows(g2.select("e1", "e2")) == [("a", "x")]
     )
+
+
+def _gate_hints(spark, build):
+    """(broadcast hints, result rows) of one operator call. Hints are
+    counted over the optimized plans of the returned frames and of every
+    frame the call localCheckpoints on the way (a checkpoint hides the
+    plan it materializes)."""
+    import pytest
+
+    seen = []
+    frame_cls = type(spark.range(0))
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(df, eager=True):
+        seen.append(df)
+        return checkpoint(df, eager)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(frame_cls, "localCheckpoint", spy)
+        frames = build()
+    hints = sum(
+        df._jdf.queryExecution().optimizedPlan().toString().lower().count("broadcast")
+        for df in seen + list(frames)
+    )
+    rows = [sorted(repr(tuple(r)) for r in df.collect()) for df in frames]
+    return hints, rows
+
+
+def test_one_constant_governs_every_gate(spark):
+    """Every size-gated hint reads the one threshold at call time: with
+    ``dictionary.BROADCAST_ROW_THRESHOLD`` at 0, each gated operator the
+    tests above do not drive past its gate plans strictly fewer
+    broadcast hints, with identical rows."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from ontoea_spark.operators.dedup import incremental_exact_dedup
+    from ontoea_spark.operators.dictionary import sharing_ids
+    from ontoea_spark.operators.filters import (
+        links_triples_fixpoint,
+        sup_cv_links,
+        sup_relation_triples,
+    )
+    from ontoea_spark.operators.sampling import corrupt_triples, neg_antijoin
+    from ontoea_spark.pipeline.canonicalize import (
+        canonical_triple_provenance,
+        canonicalize_kg,
+        ingest_canonical_batch,
+        rewrite_triples,
+        vertex_provenance,
+    )
+    from ontoea_spark.pipeline.incremental import extend_dictionary
+    from ontoea_spark.streaming.kg_stream import decoded_edges
+
+    df = spark.createDataFrame
+    spo = "s string, p string, o string"
+    t1 = df([("kg1:a", "p", "kg1:b"), ("kg1:b", "q", "kg1:c")], spo)
+    t2 = df([("kg2:x", "p", "kg2:y"), ("kg2:y", "q", "kg2:z")], spo)
+    links = df([("kg1:a", "kg2:x"), ("kg1:b", "kg2:y")], "e1 string, e2 string")
+    cv = df([("kg1:a", "cls:A"), ("kg2:y", "cls:B")], "entity string, cls string")
+    mapping = df([("kg2:x", "kg1:a")], "entity string, canonical string")
+    ids = "s_id long, p_id long, o_id long"
+    edges = df([(0, 0, 1), (1, 1, 2)], ids)
+    cand = df([(0, 0, 1), (2, 0, 1)], "h_id long, r_id long, t_id long")
+    docs = "doc_id long, text string"
+    old_docs = df([(1, "a b"), (2, "c d")], docs)
+    new_docs = df([(3, "a b"), (4, "e f")], docs)
+    occs = df([(1, "kg1:a"), (1, "kg1:new")], "kg long, elem string")
+    dict_cols = "kg long, elem string, freq long, rank long, id long"
+    ent = df([(1, "kg1:a", 2, 0, 0), (1, "kg1:b", 1, 1, 1)], dict_cols)
+    rel = df([(1, "p", 1, 0, 0)], dict_cols)
+    pages = df(
+        [("u1", datetime(2024, 1, 1), "customer join table and part join table")],
+        "url string, warc_ts timestamp, text string",
+    )
+    merge_part = df([("part", "customer")], "entity string, canonical string")
+
+    def ingest():
+        d = ingest_canonical_batch(
+            rewrite_triples(t1.unionByName(t2), mapping),
+            mapping,
+            df([("kg2:z", "r", "kg1:c")], spo),
+            df([("kg2:z", "kg1:c")], "e1 string, e2 string"),
+        )
+        return d.triples, d.novel_triples, d.mapping
+
+    def canonical():
+        kg = canonicalize_kg(t1, t2, links)
+        return kg.edges, kg.vertices
+
+    cases = {
+        "sharing_ids": lambda: [sharing_ids(t1, t2, links)],
+        "sup_relation_triples": lambda: [sup_relation_triples(links, t1)],
+        "sup_cv_links": lambda: [sup_cv_links(links, cv)],
+        "corrupt_triples": lambda: [
+            corrupt_triples(edges, ent.select("rank", "id"))
+        ],
+        "neg_antijoin": lambda: [neg_antijoin(cand, edges)],
+        "incremental_exact_dedup": lambda: [
+            incremental_exact_dedup(old_docs, new_docs)
+        ],
+        "extend_dictionary": lambda: [extend_dictionary(ent, occs)],
+        "canonical_triple_provenance": lambda: [
+            canonical_triple_provenance(pages, merge_part)
+        ],
+        "vertex_provenance": lambda: [
+            vertex_provenance(t1.select(F.col("s").alias("entity")), mapping)
+        ],
+        "ingest_canonical_batch": ingest,
+        "canonicalize_kg": canonical,
+        "links_triples_fixpoint": lambda: links_triples_fixpoint(links, t1, t2),
+        "decoded_edges": lambda: [
+            decoded_edges(ent, rel, df([(0, 0, 1, 1)], f"{ids}, kg long"))
+        ],
+    }
+    for name, build in cases.items():
+        hinted, want = _gate_hints(spark, build)
+        with past_broadcast_gate():
+            gated, got = _gate_hints(spark, build)
+        assert gated < hinted, (name, hinted, gated)
+        assert got == want, name
 
 
 def test_r6_broadcast_gate_sweep(spark):
@@ -164,9 +288,8 @@ def test_r6_broadcast_gate_sweep(spark):
     # entries, so the anti-join build side is non-empty and the
     # threshold-0 gate genuinely drops the hint
     hinted = ngram_jaccard_pairs(docs, n=3, threshold=0.1, max_shingle_df=1)
-    gated = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.1, max_shingle_df=1, broadcast_threshold=0
-    )
+    with past_broadcast_gate():
+        gated = ngram_jaccard_pairs(docs, n=3, threshold=0.1, max_shingle_df=1)
     assert "broadcast" in plan(hinted), plan(hinted)
     assert "broadcast" not in plan(gated), plan(gated)
     assert rows(hinted) == rows(gated)
@@ -176,9 +299,8 @@ def test_r6_broadcast_gate_sweep(spark):
     doc_hosts = docs.select("doc_id", F.lit("h1").alias("host"))
     ranks = spark.createDataFrame([("h1", 0.5), ("h2", 0.5)], "host string, pagerank double")
     hinted = domain_quality_prior(scored, doc_hosts, ranks)
-    gated = domain_quality_prior(
-        scored, doc_hosts, ranks, broadcast_threshold=0
-    )
+    with past_broadcast_gate():
+        gated = domain_quality_prior(scored, doc_hosts, ranks)
     # the 1-row n_hosts aggregate broadcast is always present; assert on
     # the host-rank JOIN side by plan diff: the gated plan has strictly
     # fewer broadcast hints
@@ -212,7 +334,8 @@ def test_r6_fuse_type_scores_gate(spark):
         return df._jdf.queryExecution().optimizedPlan().toString().lower()
 
     hinted = _fuse_type_scores(scores, data, compat, gamma=0.2)
-    gated = _fuse_type_scores(scores, data, compat, gamma=0.2, broadcast_threshold=0)
+    with past_broadcast_gate():
+        gated = _fuse_type_scores(scores, data, compat, gamma=0.2)
     assert plan(hinted).count("broadcast") > plan(gated).count("broadcast")
     rows = lambda df: sorted(tuple(r) for r in df.collect())
     assert rows(hinted) == rows(gated)
