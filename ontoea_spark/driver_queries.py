@@ -758,6 +758,15 @@ def q_ann_topk(spark, sf_dir):
     )
 
 
+def _csls_greedy(csls):
+    """V2 greedy top-1 over CSLS scores: the (sim desc, rid asc) argmax
+    of evaluation.greedy_alignment_pairs, run on csls. (lid, rid, csls)."""
+    pairs = EV.greedy_alignment_pairs(
+        csls.select("lid", "rid", F.col("csls").alias("sim"))
+    )
+    return pairs.withColumnRenamed("sim", "csls")
+
+
 def q_csls_top1(spark, sf_dir):
     """T4+V2: CSLS-rescaled greedy top-1 match (even ids vs odd ids)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -769,12 +778,7 @@ def q_csls_top1(spark, sf_dir):
     )
     scores = SJ.all_pairs_scores(left, right, metric="cosine")
     csls = SJ.csls_rescale(scores, k=10)
-    w = Window.partitionBy("lid").orderBy(F.desc("csls"), F.asc("rid"))
-    return (
-        csls.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("lid", "rid", "csls")
-    )
+    return _csls_greedy(csls)
 
 
 def q_csls_top1_candidates(spark, sf_dir):
@@ -790,12 +794,7 @@ def q_csls_top1_candidates(spark, sf_dir):
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
     csls = SJ.csls_candidate_scores(left, right, k_cand=10, csls_k=10)
-    w = Window.partitionBy("lid").orderBy(F.desc("csls"), F.asc("rid"))
-    return (
-        csls.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("lid", "rid", "csls")
-    )
+    return _csls_greedy(csls)
 
 
 def q_hits_metrics(spark, sf_dir):

@@ -11,12 +11,15 @@ Two front doors, one core:
 Core flow:
 
     distinct/encode (interleaved dictionary ids)            [distributed]
-    -> ontology tree + class paths from cv classes          [distributed]
+    -> ontology tree, class paths, conflict matrix (once)   [distributed]
     -> collect id-encoded training arrays (KBs at 15K scale)
     -> OntoEATrainer.fit (seeded NumPy, driver)             [driver]
     -> embeddings back to DataFrames
     -> fused evaluation: blocked similarity join +
        gamma * class-compat rescoring + Hits@k/MR/MRR        [distributed]
+
+Prepare builds the ontology once (as check.py:56-100 -> read.py:455-467);
+training and evaluation both read its ``onto_mat`` / ``cls_path_ids``.
 
 Split: gold links divide 7:2:1 train/valid/test by a deterministic
 portable hash of e1 (reference pre-materializes 721_5fold folds,
@@ -38,8 +41,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ontoea_spark.functions.hashing import portable_hash64
+from ontoea_spark.ontology import compat as OC
+from ontoea_spark.ontology import fixture as OF
+from ontoea_spark.ontology import tree as OT
+from ontoea_spark.ontology.pathmask import padding_class_path, path_weighted_embeds
 from ontoea_spark.operators import evaluation as EV
 from ontoea_spark.operators import simjoin as SJ
+from ontoea_spark.operators.dictionary import _fits_broadcast, _gated_broadcast
 from ontoea_spark.operators.dictionary import encode_triples, two_kg_dictionaries
 from ontoea_spark.training.trainer import OntoEATrainer, TrainConfig
 
@@ -83,20 +91,23 @@ def prepare_from_parts(
     cv: DataFrame,
 ) -> AlignmentData:
     """triples*: (s, p, o) URI frames; links: (e1, e2); cv: (entity, cls)."""
-    from ontoea_spark.ontology import fixture as OF
-    from ontoea_spark.ontology import tree as OT
-
-    # one pass over the triple stream for both dictionaries; the
-    # builder localCheckpoints the result, so no extra cache needed
+    # one pass over the triple stream for both dictionaries (checkpointed
+    # by the builder); the per-KG encode union keeps the edge row order
+    # the trainer RNG walks
     both = triples1.withColumn("kgn", F.lit(1)).unionByName(
         triples2.withColumn("kgn", F.lit(2))
     )
-    ent_ids, rel_ids = two_kg_dictionaries(both, F.col("kgn"))
+    ent_ids, rel_ids, n_ent, n_rel = two_kg_dictionaries(
+        both, F.col("kgn"), with_sizes=True
+    )
+    ent_small, rel_small = _fits_broadcast(n_ent), _fits_broadcast(n_rel)
     e1m = ent_ids.filter("kg = 1")
     e2m = ent_ids.filter("kg = 2")
     edges = (
-        encode_triples(triples1, e1m, rel_ids.filter("kg = 1"))
-        .unionByName(encode_triples(triples2, e2m, rel_ids.filter("kg = 2")))
+        encode_triples(triples1, e1m, rel_ids.filter("kg = 1"), ent_small, rel_small)
+        .unionByName(
+            encode_triples(triples2, e2m, rel_ids.filter("kg = 2"), ent_small, rel_small)
+        )
         .cache()
     )
     links_ids = (
@@ -143,22 +154,23 @@ def prepare_from_parts(
     sub_arr = np.array(
         [[r.child_id, r.parent_id] for r in sub_j.collect()], dtype=np.int64
     ).reshape(-1, 2)
-
-    # conflict matrix (G5, check_type_coherence with v5): distributed
-    # pair scoring -> small dense broadcastable matrix for E5
-    from ontoea_spark.ontology import compat as OC
-
-    cpd = OT.disjoint_targets(OT.class_paths(sub, iters=8), _disj)
-    compat = OC.compat_pairs(cpd, version=5, k=1.0)
-    n_cls = cls_ids.count()
-    onto_mat = np.zeros((n_cls, n_cls), dtype=np.float64)
+    # after sub_j: collecting cls_ids first would change sub_j's join plan,
+    # and with it the sub_ids row order the trainer RNG walks
     id_of = {r.cls: r.cls_id for r in cls_ids.collect()}
-    for r in compat.collect():
-        onto_mat[id_of[r.c1], id_of[r.c2]] = r.score
+    n_cls = len(id_of)
+
+    # G2 class paths + G5 conflict matrix (check_type_coherence v5); the
+    # paths collect materializes cpd for the compat cross join
+    cpd = OT.disjoint_targets(OT.class_paths(sub, iters=8), _disj).localCheckpoint(
+        eager=False
+    )
     cls_path_ids = {
         id_of[r.cls]: [id_of[x] for x in r.path]
         for r in cpd.select("cls", "path").collect()
     }
+    onto_mat = np.zeros((n_cls, n_cls), dtype=np.float64)
+    for r in OC.compat_pairs(cpd, version=5, k=1.0).collect():
+        onto_mat[id_of[r.c1], id_of[r.c2]] = r.score
     return AlignmentData(
         edges=edges,
         links_split=links_split,
@@ -167,8 +179,8 @@ def prepare_from_parts(
         sub_ids=sub_arr,
         onto_mat=onto_mat,
         cls_path_ids=cls_path_ids,
-        n_ent=ent_ids.count(),
-        n_rel=rel_ids.count(),
+        n_ent=n_ent,
+        n_rel=n_rel,
         n_cls=n_cls,
         ent_dict=ent_ids,
     )
@@ -220,20 +232,14 @@ def train(data: AlignmentData, cfg: TrainConfig | None = None) -> OntoEATrainer:
     cv = np.array(
         [[r.ent_id, r.cls_id] for r in data.cv_ids.collect()], dtype=np.int64
     ).reshape(-1, 2)
-    tr = np.array(
-        [
-            [r.id1, r.id2]
-            for r in data.links_split.filter("split = 'train'").collect()
-        ],
-        dtype=np.int64,
-    ).reshape(-1, 2)
-    va = np.array(
-        [
-            [r.id1, r.id2]
-            for r in data.links_split.filter("split = 'valid'").collect()
-        ],
-        dtype=np.int64,
-    ).reshape(-1, 2)
+    links = data.links_split.collect()
+
+    def pairs(split: str) -> np.ndarray:
+        return np.array(
+            [[r.id1, r.id2] for r in links if r.split == split], dtype=np.int64
+        ).reshape(-1, 2)
+
+    tr, va = pairs("train"), pairs("valid")
     model = OntoEATrainer(data.n_ent, data.n_rel, data.n_cls, cfg)
     model.fit(
         triples,
@@ -252,9 +258,25 @@ def train(data: AlignmentData, cfg: TrainConfig | None = None) -> OntoEATrainer:
     return model
 
 
-def _embed_df(spark: SparkSession, ids: np.ndarray, vecs: np.ndarray) -> DataFrame:
-    rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
-    return spark.createDataFrame(rows, "id long, vec array<double>")
+def _split_embeds(
+    spark: SparkSession, data: AlignmentData, model: OntoEATrainer, split: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The evaluation prelude: one collect of the split's (id1, id2)
+    links, then the (id, vec) frames of its mapped left and l2-normed
+    right embeddings. Returns (gold[lid, gold_rid], left, right)."""
+    test = data.links_split.filter(F.col("split") == split)
+    links = test.select("id1", "id2").collect()
+    ids1 = np.array([r.id1 for r in links], dtype=np.int64)
+    ids2 = np.array([r.id2 for r in links], dtype=np.int64)
+    e2 = model.ent_rows(ids2)
+    norm2 = e2 / np.linalg.norm(e2, axis=1, keepdims=True)
+
+    def embed(ids: np.ndarray, vecs: np.ndarray) -> DataFrame:
+        rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
+        return spark.createDataFrame(rows, "id long, vec array<double>")
+
+    gold = test.select(F.col("id1").alias("lid"), F.col("id2").alias("gold_rid"))
+    return gold, embed(ids1, model.mapped_embeds(ids1)), embed(ids2, norm2)
 
 
 def evaluate(
@@ -278,28 +300,32 @@ def evaluate(
     embeddings (G2/ontoea.py:656-681, delay_weight semantics).
     csls_k > 0: CSLS-rescale the fused scores before ranking (T4, the
     reference's third evaluation pass, evaluation.py:5-36)."""
-    from ontoea_spark.ontology import compat as OC
-    from ontoea_spark.ontology import fixture as OF
-    from ontoea_spark.ontology import tree as OT
-
-    test = data.links_split.filter(F.col("split") == split)
-    ids1 = np.array([r.id1 for r in test.select("id1").collect()], dtype=np.int64)
-    ids2 = np.array([r.id2 for r in test.select("id2").collect()], dtype=np.int64)
-    e2 = model.ent_rows(ids2)
-    norm2 = e2 / np.linalg.norm(e2, axis=1, keepdims=True)
-    left = _embed_df(spark, ids1, model.mapped_embeds(ids1))
-    right = _embed_df(spark, ids2, norm2)
+    gold, left, right = _split_embeds(spark, data, model, split)
     scores = SJ.all_pairs_scores(left, right, metric="inner", round_to=None)
-
     compat = _compat_table(spark, data, model, type_mode, delay_weight)
     fused = _fuse_type_scores(scores, data, compat, gamma)
     if csls_k > 0:
         fused = SJ.csls_rescale(fused, k=csls_k, round_to=9).select(
             "lid", "rid", F.col("csls").alias("sim")
         )
-    gold = test.select(F.col("id1").alias("lid"), F.col("id2").alias("gold_rid"))
     ranks = EV.ranks_vs_gold(fused, gold)
     return EV.rank_metrics(ranks, top_k=top_k)
+
+
+def _class_pair_frame(
+    spark: SparkSession, data: AlignmentData, mat: np.ndarray, order
+) -> DataFrame:
+    """(c1, c2, score) rows of a class x class matrix whose row/column i
+    is class id ``order[i]``; a local relation, read without a job."""
+    import pandas as pd
+
+    name_of = {r.cls_id: r.cls for r in data.cls_ids.collect()}
+    names = [name_of[c] for c in order]
+    n = len(names)
+    pdf = pd.DataFrame(
+        {"c1": np.repeat(names, n), "c2": np.tile(names, n), "score": np.ravel(mat)}
+    )
+    return spark.createDataFrame(pdf, "c1 string, c2 string, score double")
 
 
 def _compat_table(
@@ -309,37 +335,33 @@ def _compat_table(
     type_mode: str,
     delay_weight: float,
 ) -> DataFrame:
-    """(c1, c2, score) class-pair rescoring table — J11 'compat' (v5
-    class-compatibility) or V6 'path' (decay-mask-weighted class-path
-    embedding cosines). Class-count sized: always broadcastable."""
-    from ontoea_spark.ontology import compat as OC
-    from ontoea_spark.ontology import fixture as OF
-    from ontoea_spark.ontology import tree as OT
+    """(c1, c2, score) class-pair rescoring table — J11 'compat' (the v5
+    conflict matrix prepare built, ``data.onto_mat``) or V6 'path'
+    (decay-mask-weighted class-path embedding cosines). Class-count
+    sized: always broadcastable."""
+    if type_mode != "path":
+        return _class_pair_frame(spark, data, data.onto_mat, range(data.n_cls))
+    _d, pmat, mmat, order = padding_class_path(
+        data.cls_path_ids, delay_weight=delay_weight
+    )
+    W = path_weighted_embeds(model.onto, pmat, mmat)
+    nw = np.linalg.norm(W, axis=1, keepdims=True)
+    nw[nw == 0] = 1.0
+    Wn = W / nw
+    # per-pair dots, not Wn @ Wn.T: BLAS may sum in another order
+    n = len(order)
+    cos = np.array([[Wn[i] @ Wn[j] for j in range(n)] for i in range(n)])
+    return _class_pair_frame(spark, data, cos, order)
 
-    if type_mode == "path":
-        from ontoea_spark.ontology.pathmask import (
-            padding_class_path,
-            path_weighted_embeds,
-        )
 
-        _d, pmat, mmat, order = padding_class_path(
-            data.cls_path_ids, delay_weight=delay_weight
-        )
-        W = path_weighted_embeds(model.onto, pmat, mmat)
-        nw = np.linalg.norm(W, axis=1, keepdims=True)
-        nw[nw == 0] = 1.0
-        Wn = W / nw
-        name_of = {r.cls_id: r.cls for r in data.cls_ids.collect()}
-        rows = [
-            (name_of[ci], name_of[cj], float(Wn[i] @ Wn[j]))
-            for i, ci in enumerate(order)
-            for j, cj in enumerate(order)
-        ]
-        return spark.createDataFrame(rows, "c1 string, c2 string, score double")
-    leaf = data.cls_ids.select("cls").filter(F.col("cls").like("cls%"))
-    sub, disj = OF.synth_ontology(spark, leaf)
-    cpd = OT.disjoint_targets(OT.class_paths(sub, iters=4), disj)
-    return OC.compat_pairs(cpd, version=5, k=1.0)
+def _class_maps(data: AlignmentData) -> tuple[DataFrame, DataFrame]:
+    """The entity -> class-name sides of the type fusion: (lid, c1) and
+    (rid, c2)."""
+    named = data.cv_ids.join(data.cls_ids, "cls_id")
+    return (
+        named.select(F.col("ent_id").alias("lid"), F.col("cls").alias("c1")),
+        named.select(F.col("ent_id").alias("rid"), F.col("cls").alias("c2")),
+    )
 
 
 def _fuse_type_scores(
@@ -353,18 +375,8 @@ def _fuse_type_scores(
     ENTITY-count sized (they grow with the corpus), so their hints are
     row-count-gated on the measured cv_ids size — a hard hint OOMs at
     10^8 entities; past the gate AQE plans the joins."""
-    from ontoea_spark.operators.dictionary import (
-        _fits_broadcast,
-        _gated_broadcast,
-    )
-
     cls_small = _fits_broadcast(data.cv_ids.count())
-    lcls = data.cv_ids.withColumnRenamed("ent_id", "lid").join(
-        data.cls_ids, "cls_id"
-    ).select("lid", F.col("cls").alias("c1"))
-    rcls = data.cv_ids.withColumnRenamed("ent_id", "rid").join(
-        data.cls_ids, "cls_id"
-    ).select("rid", F.col("cls").alias("c2"))
+    lcls, rcls = _class_maps(data)
     return (
         scores.join(_gated_broadcast(lcls, cls_small), "lid", "left")
         .join(_gated_broadcast(rcls, cls_small), "rid", "left")
@@ -405,11 +417,10 @@ def evaluate_candidates(
     ranks_vs_gold_candidates for the full bound semantics). Gold outside
     the pool scores rank k_cand + 1 (hits exact under the margin
     condition, MR lower / MRR upper bound)."""
-    reranked, test = _fused_reranked(
+    reranked, gold = _fused_reranked(
         spark, data, model, split, gamma, type_mode, delay_weight, k_cand,
         cache=reranked_cache,
     )
-    gold = test.select(F.col("id1").alias("lid"), F.col("id2").alias("gold_rid"))
     ranks = EV.ranks_vs_gold_candidates(reranked, gold, k_cand)
     return EV.rank_metrics(ranks, top_k=top_k)
 
@@ -427,7 +438,7 @@ def _fused_reranked(
 ) -> tuple[DataFrame, DataFrame]:
     """Shared candidate chain of evaluate_candidates / predict_matches:
     blocked exact top-k_cand by mapped inner product, J11 type fusion,
-    in-pool rerank. Returns (reranked[lid, rid, sim, rk], split_links).
+    in-pool rerank. Returns (reranked[lid, rid, sim, rk], gold[lid, gold_rid]).
 
     ``cache``: caller-owned dict for jobs that consume the SAME split's
     chain twice (run_job's --align --canonicalize runs the test-split
@@ -437,13 +448,7 @@ def _fused_reranked(
     key = (split, gamma, type_mode, delay_weight, k_cand)
     if cache is not None and key in cache:
         return cache[key]
-    test = data.links_split.filter(F.col("split") == split)
-    ids1 = np.array([r.id1 for r in test.select("id1").collect()], dtype=np.int64)
-    ids2 = np.array([r.id2 for r in test.select("id2").collect()], dtype=np.int64)
-    e2 = model.ent_rows(ids2)
-    norm2 = e2 / np.linalg.norm(e2, axis=1, keepdims=True)
-    left = _embed_df(spark, ids1, model.mapped_embeds(ids1))
-    right = _embed_df(spark, ids2, norm2)
+    gold, left, right = _split_embeds(spark, data, model, split)
     cands = SJ.blocked_topk_join(
         left, right, k=k_cand, metric="inner", round_to=None
     ).select("lid", "rid", "sim")
@@ -453,8 +458,8 @@ def _fused_reranked(
     reranked = fused.withColumn("rk", F.row_number().over(w).cast("long"))
     if cache is not None:
         reranked = reranked.localCheckpoint(eager=True)
-        cache[key] = (reranked, test)
-    return reranked, test
+        cache[key] = (reranked, gold)
+    return reranked, gold
 
 
 def predict_matches(
@@ -517,17 +522,6 @@ def seed_matches(data: AlignmentData) -> DataFrame:
         F.col("id").alias("id2"), F.col("elem").alias("e2")
     )
     return seeds.join(d1, "id1").join(d2, "id2").select("e1", "e2")
-
-
-def run_alignment(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: TrainConfig | None = None,
-    gamma: float = 0.2,
-) -> DataFrame:
-    data = prepare_from_pages(spark, pages)
-    model = train(data, cfg)
-    return evaluate(spark, data, model, gamma=gamma)
 
 
 def run_benchmark_alignment(

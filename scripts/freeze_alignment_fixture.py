@@ -31,17 +31,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    import numpy as np
+    import pandas as pd
 
     from ontoea_spark.session import get_spark
     from ontoea_spark.training.align_pipeline import (
+        _class_maps,
         _compat_table,
+        _split_embeds,
         prepare_from_parts,
         train,
     )
     from ontoea_spark.training.benchgen import generate_two_kg
     from ontoea_spark.training.trainer import TrainConfig
-    from pyspark.sql import functions as F
 
     spark = get_spark("freeze_alignment_fixture", master="local[8]")
     bench = generate_two_kg(spark, n_ent=150, seed=42)
@@ -59,45 +60,19 @@ def main() -> None:
     )
     os.makedirs(out, exist_ok=True)
 
-    test = data.links_split.filter(F.col("split") == "test")
-    ids1 = np.array([r.id1 for r in test.select("id1").collect()], dtype=np.int64)
-    ids2 = np.array([r.id2 for r in test.select("id2").collect()], dtype=np.int64)
-    norm2 = model.ent[ids2] / np.linalg.norm(
-        model.ent[ids2], axis=1, keepdims=True
-    )
-
-    import pandas as pd
-
     def write(name: str, pdf: pd.DataFrame) -> None:
         path = os.path.join(out, f"{name}.parquet")
         pdf.to_parquet(path, index=False)
         print(f"wrote {path} ({len(pdf)} rows)")
 
-    write(
-        "left",
-        pd.DataFrame(
-            {"id": ids1, "vec": [list(map(float, v)) for v in model.mapped_embeds(ids1)]}
-        ),
-    )
-    write(
-        "right",
-        pd.DataFrame({"id": ids2, "vec": [list(map(float, v)) for v in norm2]}),
-    )
-    lcls = (
-        data.cv_ids.withColumnRenamed("ent_id", "lid")
-        .join(data.cls_ids, "cls_id")
-        .select("lid", F.col("cls").alias("c1"))
-    )
-    rcls = (
-        data.cv_ids.withColumnRenamed("ent_id", "rid")
-        .join(data.cls_ids, "cls_id")
-        .select("rid", F.col("cls").alias("c2"))
-    )
+    # the same prelude, class maps and compat table evaluate() reads
+    gold, left, right = _split_embeds(spark, data, model, "test")
+    lcls, rcls = _class_maps(data)
+    write("left", left.toPandas())
+    write("right", right.toPandas())
     write("lcls", lcls.toPandas())
     write("rcls", rcls.toPandas())
-    compat = _compat_table(spark, data, model, "compat", 1.0)
-    write("compat", compat.toPandas())
-    gold = test.select(F.col("id1").alias("lid"), F.col("id2").alias("gold_rid"))
+    write("compat", _compat_table(spark, data, model, "compat", 1.0).toPandas())
     write("gold", gold.toPandas())
 
 

@@ -166,6 +166,69 @@ def test_alignment_quality(spark, bench_data, bench_model):
     assert m.mrr >= 0.93, m.asDict()
 
 
+def _compat_rows(spark, data) -> dict:
+    from ontoea_spark.training.align_pipeline import _compat_table
+
+    rows = _compat_table(spark, data, None, "compat", 1.0).collect()
+    out = {(r.c1, r.c2): r.score for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
+def _onto_mat_rows(data) -> dict:
+    name = {r.cls_id: r.cls for r in data.cls_ids.collect()}
+    return {
+        (name[i], name[j]): float(data.onto_mat[i, j])
+        for i in name
+        for j in name
+    }
+
+
+def test_compat_table_is_prepared_onto_mat(spark, bench_data):
+    """Evaluation scores exactly the conflict matrix the trainer saw:
+    one (c1, c2) row per pair of prepared classes, with onto_mat's
+    score — also for a cv class without a ``cls`` prefix (``type:b``),
+    which an eval-time ontology rebuild over ``cls%`` leaves dropped."""
+    t1 = spark.createDataFrame(
+        [("a1", "r", "a2"), ("a2", "r", "a3")], "s string, p string, o string"
+    )
+    t2 = spark.createDataFrame(
+        [("b1", "q", "b2"), ("b2", "q", "b3")], "s string, p string, o string"
+    )
+    links = spark.createDataFrame(
+        [("a1", "b1"), ("a2", "b2"), ("a3", "b3")], "e1 string, e2 string"
+    )
+    cv = spark.createDataFrame(
+        [("a1", "cls:a"), ("b1", "type:b")], "entity string, cls string"
+    )
+    data = prepare_from_parts(spark, t1, t2, links, cv)
+    expected = _onto_mat_rows(data)
+    assert ("type:b", "type:b") in expected
+    assert _compat_rows(spark, data) == expected
+
+    # the generate_two_kg benchmark: 26 leaves + 6 tree classes
+    expected = _onto_mat_rows(bench_data)
+    assert bench_data.n_cls == 32 and len(expected) == 1024
+    assert _compat_rows(spark, bench_data) == expected
+
+
+def test_compat_table_runs_no_ontology_job(spark, bench_data):
+    """Building and reading the compat table costs at most one Spark job
+    (the class-name collect): no ontology plan runs at eval."""
+    from ontoea_spark.training.align_pipeline import _compat_table
+
+    sc = spark.sparkContext
+    group = "test-compat-table-jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        _compat_table(spark, bench_data, None, "compat", 1.0).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
 def test_training_determinism(bench_data):
     """Same seed => byte-identical embeddings (BASELINE determinism)."""
     cfg = TrainConfig(dim=16, epochs=10, seed=7)
