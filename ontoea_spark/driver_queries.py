@@ -39,6 +39,7 @@ from ontoea_spark.ontology import fixture as OF
 from ontoea_spark.ontology import tree as OT
 from ontoea_spark.pipeline import extract as EX
 from ontoea_spark.pipeline.kg_build import gold_links, split_two_kgs
+from ontoea_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # shared fixtures (Spark side)
@@ -1126,7 +1127,8 @@ def q_triple_pr(spark, sf_dir):
     n_sys = sys_t.count()
     n_gold = gold_t.count()
     n_common = common.count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_sys,
@@ -1462,7 +1464,7 @@ def _attr_lines(spark, sf_dir):
             F.col("entity"), F.lit(" p:word "), word, F.lit("."),
         ).alias("value")
     )
-    bad = spark.createDataFrame([("bad line",)], "value string")
+    bad = local_frame(spark, [("bad line",)], "value string")
     return l1.unionByName(l2).unionByName(bad)
 
 
@@ -1678,9 +1680,7 @@ def q_word2vec_parse(spark, sf_dir):
             (F.ascii(word) / 10.0).cast("string"), F.lit(" 1.5"),
         ).alias("value")
     ).unionByName(
-        spark.createDataFrame(
-            [("badline 1.0",), ("word x y z",)], "value string"
-        )
+        local_frame(spark, [("badline 1.0",), ("word x y z",)], "value string")
     )
     toks = F.split(F.col("value"), " ")
     parsed = lines.select(toks.alias("t")).filter(F.size("t") == 4)

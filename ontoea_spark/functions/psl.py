@@ -36,6 +36,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ontoea_spark.session import local_frame
+
 PSL_PATH = os.path.join(os.path.dirname(__file__), "..", "data", "public_suffix_list.dat")
 
 
@@ -71,14 +73,14 @@ _SUFFIX_DF_MEMO: dict = {}
 
 def _suffix_df(spark: SparkSession, k: int) -> DataFrame:
     """The k-label exact-suffix dimension table, one row per suffix,
-    localCheckpoint-materialized once per session (a few thousand rows —
+    memoized per session as a ``local_frame`` (a few thousand rows —
     broadcast-sized by construction, the list itself caps it)."""
     key = (id(spark), k)
     if key not in _SUFFIX_DF_MEMO:
         rules = load_psl_rules()["exact"][k]
-        _SUFFIX_DF_MEMO[key] = spark.createDataFrame(
-            [(s,) for s in rules], f"_psl_tail{k} string"
-        ).localCheckpoint(eager=True)
+        _SUFFIX_DF_MEMO[key] = local_frame(
+            spark, [(s,) for s in rules], f"_psl_tail{k} string"
+        )
     return _SUFFIX_DF_MEMO[key]
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ontoea_spark.ontology.tree import THING_URI
+from ontoea_spark.session import local_frame
 
 _STATIC_EDGES = [
     ("band:af", "kind:early"),
@@ -58,11 +59,9 @@ def synth_ontology(
     leaf_edges = leaf_classes.select(
         F.col("cls").alias("child"), leaf_parent_expr("cls").alias("parent")
     ).distinct()
-    static = spark.createDataFrame(_STATIC_EDGES, "child string, parent string")
+    static = local_frame(spark, _STATIC_EDGES, "child string, parent string")
     subclass = leaf_edges.unionByName(static)
-    disjoint = spark.createDataFrame(
-        _STATIC_DISJOINT, "child string, target string"
-    )
+    disjoint = local_frame(spark, _STATIC_DISJOINT, "child string, target string")
     return subclass, disjoint
 
 

@@ -3,7 +3,7 @@ J2-J4 (§2.4), expressed as semi/anti joins so Catalyst plans them as
 broadcast joins when the link side is small.
 
 Reference semantics:
-* P1 ``parse_triples`` (kg.py:1-7): distinct subjects/objects/predicates.
+* P1 ``parse_triples`` (kg.py:1-7): distinct entities (subjects ∪ objects).
 * P6 ``remove_unlinked_triples`` (kgs.py:643-654): keep triples whose BOTH
   endpoints appear in the link set.
 * P7 ``remove_no_triples_link`` (kgs.py:623-640): keep links whose both
@@ -36,10 +36,6 @@ def parse_entities(triples: DataFrame) -> DataFrame:
         .unionAll(triples.select(F.col("o").alias("entity")))
         .distinct()
     )
-
-
-def parse_relations(triples: DataFrame) -> DataFrame:
-    return triples.select(F.col("p").alias("relation")).distinct()
 
 
 def linked_entity_set(links: DataFrame, side: str) -> DataFrame:

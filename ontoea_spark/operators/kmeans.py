@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontoea_spark.functions.hashing import portable_hash64
+from ontoea_spark.session import local_frame
 
 
 def _nearest(
@@ -120,8 +121,8 @@ def kmeans_init(
         .limit(k)
     )
     w_rows = seeds.collect()
-    spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         [(i, list(r.cvec)) for i, r in enumerate(w_rows)],
         "cid long, cvec array<double>",
     )
@@ -213,7 +214,8 @@ def kmeans_fit(
     quantizer DuckDB-oracle-checkable (driver query
     ``ann_ivf_kmeans_top1`` uses round_to=9)."""
     cents = _lloyd(emb, k, n_iter, id_col, vec_col, round_to)
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         [(cid, v) for (_, cid), v in sorted(cents.items())],
         "cid long, cvec array<double>",
     )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontoea_spark.operators.kmeans import _lloyd, _nearest
+from ontoea_spark.session import local_frame
 
 
 def subvectors(
@@ -100,7 +101,8 @@ def pq_train_codebooks(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     cents = _lloyd(emb, k, n_iter, id_col, vec_col, round_to, m=m, dim=dim)
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         [(j, cid, v) for (j, cid), v in sorted(cents.items())],
         "j int, cid long, cvec array<double>",
     )
@@ -218,7 +220,8 @@ def ivfpq_topk_join(
         # built PER PROBED CELL from the query's residual w.r.t. that
         # cell (FAISS IVFADC semantics)
         base = F.broadcast(
-            left.sparkSession.createDataFrame(
+            local_frame(
+                left.sparkSession,
                 [(cid, v) for (_, cid), v in cents.items()],
                 "cell long, cvec array<double>",
             )

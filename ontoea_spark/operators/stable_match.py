@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ontoea_spark.session import local_frame
+
 
 def gale_shapley(scores: DataFrame, max_rounds: int = 100) -> DataFrame:
     """scores: DataFrame[lid, rid, sim] candidate pairs (proposers = lid).
@@ -40,7 +42,7 @@ def gale_shapley(scores: DataFrame, max_rounds: int = 100) -> DataFrame:
         .select("lid", F.lit(1).alias("nxt"), "n_prefs")
         .localCheckpoint(eager=True)
     )
-    holds = spark.createDataFrame([], "lid long, rid long, sim double")
+    holds = local_frame(spark, [], "lid long, rid long, sim double")
 
     for _ in range(max_rounds):
         free = (

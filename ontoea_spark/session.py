@@ -4,13 +4,18 @@ Local-mode defaults mirror what we would set per-executor on a real
 cluster: shuffle partitions ~ cores, AQE on (runtime coalesce + skew-join
 splitting), Arrow on for every pandas-UDF boundary, UTC session time zone
 so timestamp semantics are stable across driver hosts.
+
+Package code turns a driver-held row list into a DataFrame only through
+``local_frame``: a plain ``createDataFrame(rows)`` re-runs a Python
+worker task per slice on every job that scans it, while the checkpointed
+frame pays that Python pass once and serves later scans from JVM blocks.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -49,3 +54,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """The DataFrame of a driver-held row list (DDL ``schema``), read by
+    Python once.
+
+    The lazy local checkpoint keeps ``createDataFrame``'s slicing and size
+    statistics, so join plans are those of the plain frame; the first job
+    that scans it runs the one Python pass, later jobs read its blocks (a
+    lost block fails the job, as with every local checkpoint). No rows
+    give a zero-partition frame built in the JVM, which starts no task."""
+    if not rows:
+        struct = spark._jvm.org.apache.spark.sql.types.StructType.fromDDL(schema)
+        jdf = spark._jsparkSession.createDataFrame(spark._jsc.emptyRDD(), struct)
+        return DataFrame(jdf, spark)
+    return spark.createDataFrame(rows, schema).localCheckpoint(eager=False)

@@ -52,6 +52,8 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontoea_spark.session import local_frame
+
 ENT_SCHEMA = "kg long, elem string, freq long, rank long, id long"
 REL_SCHEMA = ENT_SCHEMA
 EDGE_SCHEMA = "s_id long, p_id long, o_id long, kg long"
@@ -171,9 +173,9 @@ def read_kg_state(
 
 def _empty_state(spark) -> tuple[DataFrame, DataFrame, DataFrame]:
     return (
-        spark.createDataFrame([], ENT_SCHEMA),
-        spark.createDataFrame([], REL_SCHEMA),
-        spark.createDataFrame([], EDGE_SCHEMA),
+        local_frame(spark, [], ENT_SCHEMA),
+        local_frame(spark, [], REL_SCHEMA),
+        local_frame(spark, [], EDGE_SCHEMA),
     )
 
 
@@ -400,7 +402,7 @@ def ingest_canonical_stream_batch(
     if state is None:
         mapping = canonical_entity_map(delta_links).localCheckpoint(eager=True)
         novel = rewrite_triples(delta_triples, mapping)
-        retracted = spark.createDataFrame([], "s string, p string, o string")
+        retracted = local_frame(spark, [], "s string, p string, o string")
         changed_map = mapping
     else:
         cur_t, cur_m = state

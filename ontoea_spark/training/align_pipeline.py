@@ -49,6 +49,7 @@ from ontoea_spark.operators import evaluation as EV
 from ontoea_spark.operators import simjoin as SJ
 from ontoea_spark.operators.dictionary import _fits_broadcast, _gated_broadcast
 from ontoea_spark.operators.dictionary import encode_triples, two_kg_dictionaries
+from ontoea_spark.session import local_frame
 from ontoea_spark.training.trainer import OntoEATrainer, TrainConfig
 
 
@@ -273,7 +274,7 @@ def _split_embeds(
 
     def embed(ids: np.ndarray, vecs: np.ndarray) -> DataFrame:
         rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
-        return spark.createDataFrame(rows, "id long, vec array<double>")
+        return local_frame(spark, rows, "id long, vec array<double>")
 
     gold = test.select(F.col("id1").alias("lid"), F.col("id2").alias("gold_rid"))
     return gold, embed(ids1, model.mapped_embeds(ids1)), embed(ids2, norm2)

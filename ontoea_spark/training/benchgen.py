@@ -20,6 +20,8 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from ontoea_spark.session import local_frame
+
 
 @dataclass
 class TwoKGBenchmark:
@@ -102,7 +104,10 @@ def generate_two_kg(
     ]
     def df(rows: list, schema: str) -> DataFrame:
         # >100k rows: go through pandas (Arrow-batched when enabled) —
-        # the row-list converter is driver-bound at benchmark scale
+        # the row-list converter is driver-bound at benchmark scale.
+        # Smaller lists go through local_frame: every consumer job scans
+        # these inputs, and a plain row-list frame re-runs a Python worker
+        # per slice on each scan
         if len(rows) > 100_000:
             import pandas as pd
 
@@ -110,7 +115,7 @@ def generate_two_kg(
             return spark.createDataFrame(
                 pd.DataFrame(rows, columns=cols), schema
             )
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     return TwoKGBenchmark(
         triples1=df(t1, "s string, p string, o string"),

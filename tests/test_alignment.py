@@ -229,6 +229,46 @@ def test_compat_table_runs_no_ontology_job(spark, bench_data):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
 
 
+# md5s of the trainer inputs prepare_from_parts builds from
+# generate_two_kg(n_ent=200, seed=11, vectorized=True) in the local[4]
+# test session. The trainer RNG walks these arrays in row order, so a
+# plan change that reorders any of them changes every trained model
+# even though each is the same set of rows.
+_TRAINER_INPUT_MD5 = {
+    "cls_path_ids": "c81c5b51cafe246126ee621baa6d5f90",
+    "cv_ids": "d45b42144257b38865632ed0bf40e133",
+    "edges": "090e16700996d41fe36793e8a090c160",
+    "links_split": "e7f947c14fe63cd531e8faf6c566131a",
+    "onto_mat": "c7955608c70b8439f800f2d1b55b880d",
+    "sub_ids": "9582b5440d69bf2ce235535fa691ffbc",
+}
+
+
+def test_trainer_inputs_keep_their_order(spark):
+    """Edges, cv, split links, subclass pairs, the conflict matrix and
+    the class paths come out of prepare in the pinned row order."""
+    import hashlib
+
+    def md5(x) -> str:
+        raw = x.tobytes() if isinstance(x, np.ndarray) else repr(x).encode()
+        return hashlib.md5(raw).hexdigest()
+
+    b = generate_two_kg(spark, n_ent=200, seed=11, vectorized=True)
+    d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
+    edges = d.edges.select("s_id", "p_id", "o_id").collect()
+    got = {
+        "cls_path_ids": md5(
+            sorted((int(k), [int(x) for x in v]) for k, v in d.cls_path_ids.items())
+        ),
+        "cv_ids": md5([(r.ent_id, r.cls_id) for r in d.cv_ids.collect()]),
+        "edges": md5([(r.s_id, r.p_id, r.o_id) for r in edges]),
+        "links_split": md5([(r.id1, r.id2, r.split) for r in d.links_split.collect()]),
+        "onto_mat": md5(np.ascontiguousarray(d.onto_mat, dtype=np.float64)),
+        "sub_ids": md5(np.ascontiguousarray(d.sub_ids, dtype=np.int64)),
+    }
+    assert got == _TRAINER_INPUT_MD5
+
+
 def test_training_determinism(bench_data):
     """Same seed => byte-identical embeddings (BASELINE determinism)."""
     cfg = TrainConfig(dim=16, epochs=10, seed=7)

@@ -4,7 +4,7 @@ joins staying equi-joins (never a row-level cartesian product)."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_CORRECT, past_broadcast_gate
+from tests.conftest import REPO, SF_CORRECT, past_broadcast_gate
 
 
 def _plan(df) -> str:
@@ -370,3 +370,85 @@ def test_r6_ranks_vs_gold_unforced(spark):
     assert "broadcasthashjoin" not in unforced, unforced
     out = sorted(tuple(r) for r in ranks_vs_gold(scores, gold).collect())
     assert out == [(0, 1)]
+
+
+def _reads_python(df) -> bool:
+    """After one job, does the frame's RDD lineage still hold a Python
+    worker stage (re-run by every later job that scans it)?"""
+    df.count()
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_rows_frames_read_python_once(spark):
+    """Frames built from driver-held rows pay one Python pass: once a
+    job has scanned them, no later job starts a Python worker to re-read
+    the rows, and an empty frame never starts one."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from ontoea_spark.ontology.fixture import synth_ontology
+    from ontoea_spark.session import local_frame
+    from ontoea_spark.training.align_pipeline import _split_embeds
+
+    leaves = spark.range(3).selectExpr("concat('cls:', char(97 + id)) AS cls")
+    subclass, disjoint = synth_ontology(spark, leaves)
+    links = spark.range(4).selectExpr("id AS id1", "id + 10 AS id2", "'test' AS split")
+    data = SimpleNamespace(links_split=links)
+    model = SimpleNamespace(
+        ent_rows=lambda ids: np.ones((len(ids), 3)),
+        mapped_embeds=lambda ids: np.ones((len(ids), 3)),
+    )
+    _, left, right = _split_embeds(spark, data, model, "test")
+    empty = local_frame(spark, [], "lid long, rid long, sim double")
+    frames = dict(
+        subclass=subclass, disjoint=disjoint, left=left, right=right, empty=empty
+    )
+    assert [k for k, df in frames.items() if _reads_python(df)] == []
+    assert empty.rdd.getNumPartitions() == 0 and empty.collect() == []
+    assert left.count() == right.count() == 4
+
+
+def test_row_lists_become_frames_only_through_local_frame():
+    """Source guard: outside ``session.local_frame``, package code hands
+    ``createDataFrame`` only pandas frames (an Arrow local relation, no
+    Python worker), never a Python row list."""
+    import ast
+    import pathlib
+
+    def is_pandas(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "DataFrame"
+        )
+
+    bad = []
+    for path in sorted(pathlib.Path(REPO, "ontoea_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        skip = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+            for n in ast.walk(fn)
+        }
+        pandas_names = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign) and is_pandas(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(tree):
+            if (
+                id(n) in skip
+                or not isinstance(n, ast.Call)
+                or not isinstance(n.func, ast.Attribute)
+                or n.func.attr != "createDataFrame"
+            ):
+                continue
+            arg = n.args[0]
+            named = isinstance(arg, ast.Name) and arg.id in pandas_names
+            if not (is_pandas(arg) or named):
+                bad.append(f"{path.relative_to(REPO)}:{n.lineno}")
+    assert bad == [], bad
