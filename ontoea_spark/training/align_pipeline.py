@@ -217,7 +217,7 @@ def train(data: AlignmentData, cfg: TrainConfig | None = None) -> OntoEATrainer:
     seed-scale (collected); the triple set is collected ONLY in the
     default driver-side gradient_mode — under gradient_mode='spark' the
     edge DataFrame goes to fit() as-is and E2 gradients are computed on
-    the executors (distributed_gradients), so nothing KG-sized ever
+    the executors (OntoEATrainer._hash_step), so nothing KG-sized ever
     lands on the driver (VERDICT r02 'What's wrong' #3)."""
     spark_mode = cfg is not None and cfg.gradient_mode == "spark"
     if spark_mode:

@@ -12,11 +12,12 @@ Per optimizer step the driver moves only O(touched)·dim bytes:
   gather  — the step's touched rows come down via a broadcast semi-join
             against the store (``gather``), exactly the slice the
             executors need;
-  apply   — the reduced touched-row gradients go back up and the
-            Adagrad + row-L2 update runs *inside* the store
-            (``apply_grads``: broadcast left join + one Arrow
-            ``mapInPandas`` pass), rewriting each partition in place and
-            cutting lineage with an eager ``localCheckpoint``.
+  apply   — the reduced touched-row gradients (driver rows, or the E2
+            step's summed frame, which never visits the driver) join
+            into the store and the Adagrad + row-L2 update runs *inside*
+            it (``apply``: broadcast left join + one Arrow
+            ``mapInPandas`` pass), rewriting the touched buckets and
+            cutting lineage with a ``localCheckpoint``.
 
 The update math is bit-identical to the driver path (trainer.Adagrad,
 reference ``optimizers.py:4-20``; row re-normalization per
@@ -79,32 +80,16 @@ class SparkEntStore:
     """Entity weights + Adagrad state as idx-range-bucketed
     ``(idx, w, g2)`` DataFrames (one materialized frame per bucket)."""
 
-    def __init__(self, spark, df, n_ent: int, dim: int, lr: float,
-                 eps: float = 1e-8, n_buckets: int = STORE_N_BUCKETS,
-                 _parts: list | None = None):
+    def __init__(self, spark, parts: list, n_ent: int, dim: int, lr: float,
+                 eps: float = 1e-8):
         self.spark = spark
+        self._parts = parts             # one materialized frame per bucket
         self.n_ent = int(n_ent)
         self.dim = int(dim)
         self.lr = float(lr)
         self.eps = float(eps)
-        self.n_buckets = _effective_buckets(n_ent, n_buckets)
+        self.n_buckets = len(parts)
         self._bw = max(1, -(-self.n_ent // self.n_buckets))  # bucket width
-        if _parts is not None:
-            self._parts = _parts
-        else:
-            # compat path: split an externally-supplied store frame into
-            # range buckets, materialized in ONE union-count job. The
-            # source is checkpointed FIRST so the n_buckets range
-            # filters scan one materialized frame instead of re-running
-            # the source derivation once per bucket.
-            df = df.localCheckpoint(eager=True)
-            self._parts = [
-                df.filter(
-                    (df["idx"] >= b * self._bw) & (df["idx"] < (b + 1) * self._bw)
-                ).localCheckpoint(eager=False)
-                for b in range(self.n_buckets)
-            ]
-            self._materialize(self._parts)
 
     def _bucket_of(self, ids: np.ndarray) -> np.ndarray:
         return np.minimum(
@@ -166,8 +151,7 @@ class SparkEntStore:
                 .localCheckpoint(eager=False)
             )
         cls._materialize(bucket_parts)
-        return cls(spark, None, n, dim, lr, eps, n_buckets=n_buckets,
-                   _parts=bucket_parts)
+        return cls(spark, bucket_parts, n, dim, lr, eps)
 
     @classmethod
     def distributed_init(cls, spark, n_ent: int, dim: int, lr: float,
@@ -218,19 +202,13 @@ class SparkEntStore:
                 ).localCheckpoint(eager=False)
             )
         cls._materialize(bucket_parts)
-        return cls(spark, None, n_ent, dim, lr, eps, n_buckets=n_buckets,
-                   _parts=bucket_parts)
+        return cls(spark, bucket_parts, n_ent, dim, lr, eps)
 
     # -- access -----------------------------------------------------------
     def _union(self, parts: list | None = None):
         from functools import reduce
 
         return reduce(lambda a, b: a.unionAll(b), parts or self._parts)
-
-    @property
-    def df(self):
-        """The full (idx, w, g2) view — a union of the bucket frames."""
-        return self._union()
 
     def ent_df(self):
         """(id, vec) projection for distributed consumers (pool refresh,
@@ -283,84 +261,45 @@ class SparkEntStore:
         return out
 
     # -- update -----------------------------------------------------------
-    def apply_grads(self, ids: np.ndarray, grad_rows: np.ndarray,
-                    scale: float = 1.0) -> None:
-        """One Adagrad + row-L2 step over the touched rows, in place in
-        the store: ``g2 += g²; w -= lr·g/(√g2+eps); w /= ‖w‖`` — the same
-        float64 ops as trainer.Adagrad.step + _l2_rows, so store-mode
-        training matches the driver loop bit-for-bit on touched rows.
-        Untouched rows pass through the Arrow batch unchanged (they are
-        already unit-norm — the driver loop's re-normalization of the
-        whole matrix is a numeric no-op there).
+    def apply(self, ids: np.ndarray, grads) -> None:
+        """One Adagrad + row-L2 step over the rows ``ids`` (sorted
+        unique), in place in the store: ``g2 += g²; w -= lr·g/(√g2+eps);
+        w /= ‖w‖`` — the same float64 ops as trainer.Adagrad.step +
+        _l2_rows, so store-mode training matches the driver side
+        bit-for-bit on touched rows. Untouched rows pass through the
+        Arrow batch unchanged (they are already unit-norm — the driver's
+        re-normalization of the whole matrix is a numeric no-op there).
 
-        O(touched·dim) upload; only the range buckets containing
-        touched ids are rewritten (the touched-bucket set comes free
-        from the driver-resident ids — no extra job)."""
+        ``grads`` is either the driver rows aligned to ``ids`` (E4/E6, an
+        O(touched·dim) upload) or an ``(idx, g)`` DataFrame over exactly
+        ``ids`` (the E2 step's summed gradient, which then never visits the
+        driver). Only the range buckets holding ``ids`` are rewritten; the
+        driver already knows them, so no job looks them up. All rewritten
+        buckets materialize in ONE union-count job.
+
+        The gradient joins as an UNGATED broadcast, unlike the
+        corpus-derived dictionary joins (operators/dictionary.py): it is
+        bounded by *config*, not data — ≤ batch·(2+2·neg_per_pos) rows ×
+        dim × 8 B (32768·22·dim doubles ≈ 180 MB at dim 300; shrink
+        batch_size to shrink it) — and broadcasting it keeps the store's
+        partitions in place so the rewrite is partition-local, where a
+        shuffled join would re-shuffle the touched buckets every step."""
         import pandas as pd
+        from pyspark.sql import functions as F
 
         if len(ids) == 0:
             return
         _require_sorted_unique(ids)
-        g = np.asarray(grad_rows, dtype=np.float64)
-        if scale != 1.0:
-            g = scale * g
-        ids = np.asarray(ids, dtype=np.int64)
-        g_df = self.spark.createDataFrame(
-            pd.DataFrame({"idx": ids, "g": [row.tolist() for row in g]}),
-            schema="idx long, g array<double>",
-        )
-        self._rewrite_buckets(
-            g_df, sorted(set(self._bucket_of(ids).tolist()))
-        )
-
-    def apply_grads_df(self, grad_df) -> None:
-        """:meth:`apply_grads` with the gradient already living in Spark
-        as an ``(idx, g)`` DataFrame — the E2 path: the by-key-reduced
-        gradient frame from ``distributed_gradients`` joins straight
-        into the store, so the entity gradient NEVER visits the driver
-        (only the loss scalar and the small relation rows do). grad_df
-        must be touched-row-sized (O(batch·neg_per_pos)) — it ships as a
-        broadcast join against the store.
-
-        The broadcast hint is deliberate and UNGATED, unlike the
-        corpus-derived dictionary joins (operators/dictionary.py): the
-        gradient frame is bounded by *config*, not data —
-        ≤ batch·(2+2·neg_per_pos) rows × dim × 8 B (32768·22·dim
-        doubles ≈ 180 MB at dim 300; shrink batch_size to shrink it) —
-        and broadcasting it is what keeps the store's partitions in
-        place so the mapInPandas rewrite is partition-local. A shuffled
-        join would re-shuffle the touched buckets' frames every step,
-        which is the actual scale-killer.
-
-        The touched-BUCKET set is read from the gradient frame with one
-        tiny distinct-collect (O(n_buckets) rows — it also materializes
-        the frame for the per-bucket re-reads); only those buckets are
-        rewritten."""
-        from pyspark.sql import functions as F
-
-        grad_df = grad_df.localCheckpoint(eager=False)
-        bw, nb = self._bw, self.n_buckets
-        touched = sorted(
-            r["b"]
-            for r in grad_df.select(
-                F.least(F.expr(f"idx DIV {bw}"), F.lit(nb - 1)).alias("b")
+        if isinstance(grads, np.ndarray):
+            grads = self.spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "idx": np.asarray(ids, dtype=np.int64),
+                        "g": [row.tolist() for row in grads.astype(np.float64)],
+                    }
+                ),
+                schema="idx long, g array<double>",
             )
-            .distinct()
-            .collect()
-        )
-        self._rewrite_buckets(grad_df, touched)
-
-    def _rewrite_buckets(self, grad_df, touched: list) -> None:
-        """Adagrad + row-L2 rewrite of the ``touched`` bucket frames
-        against a broadcast (idx, g) gradient frame; untouched buckets
-        keep their already-materialized frames untouched (no lineage
-        growth, no recompute). All rewritten buckets materialize in ONE
-        union-count job."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        if not touched:
-            return
         lr, eps = self.lr, self.eps
 
         def upd(pdf_iter):
@@ -386,12 +325,12 @@ class SparkEntStore:
 
         new_parts = list(self._parts)
         rewritten = []
-        for b in touched:
-            g_b = grad_df.filter(
+        for b in sorted(set(self._bucket_of(ids).tolist())):
+            g_b = grads.filter(
                 (F.col("idx") >= b * self._bw)
                 & (F.col("idx") < (b + 1) * self._bw)
             )
-            new_b = (
+            new_parts[b] = (
                 self._parts[b]
                 .join(F.broadcast(g_b), "idx", "left")
                 .mapInPandas(
@@ -399,8 +338,7 @@ class SparkEntStore:
                 )
                 .localCheckpoint(eager=False)
             )
-            new_parts[b] = new_b
-            rewritten.append(new_b)
+            rewritten.append(new_parts[b])
         self._materialize(rewritten)
         self._parts = new_parts
 
@@ -412,7 +350,7 @@ class SparkNeighborPool:
     self-join (the existing distributed refresh path) — but never
     collected and never broadcast: the hash-negative draws only need
     ``pool[entity, j]`` for the step's batch rows, served by
-    :meth:`fetch` as an entry-level broadcast join, O(batch·neg_per_pos)
+    ``pool[ids, j]`` as an entry-level broadcast join, O(batch·neg_per_pos)
     values per step. This removes the last O(n_ent) broadcast the
     touched-slice tier still carried (per-refresh pool shipping).
 
@@ -451,7 +389,7 @@ class SparkNeighborPool:
     def df(self):
         return self._df
 
-    def fetch(self, ids: np.ndarray, j: np.ndarray) -> np.ndarray:
+    def __getitem__(self, key) -> np.ndarray:
         """``pool[ids, j]`` — the drawn entries only. Deduplicates the
         (id, j) request pairs, broadcast-joins them against the pool,
         evaluates ``element_at(nbrs, j+1)`` executor-side, and maps the
@@ -459,6 +397,7 @@ class SparkNeighborPool:
         import pandas as pd
         from pyspark.sql import functions as F
 
+        ids, j = key
         if len(ids) == 0:
             return np.zeros(0, dtype=np.int64)
         ids = np.asarray(ids, dtype=np.int64)
@@ -494,10 +433,11 @@ class _SparsePool:
     pool backed by just the entries one step draws: supports the two ops
     the hash-negative kernel uses — ``pool.shape[1]`` and
     ``pool[ids, j]`` — resolving ``(id, j)`` pairs via searchsorted on
-    ``id*width + j``. distributed_gradients broadcasts one per step
-    (O(batch·neg_per_pos) longs), built from the entries the driver's
-    own negative derivation fetched — the executors re-derive the same
-    (h, r, t, replica, salt) hash, so every lookup is present."""
+    ``id*width + j``. The hash-mode E2 step hands one per step to its
+    gradient kernel (broadcast in 'spark' mode, O(batch·neg_per_pos)
+    longs), built from the entries the driver's own negative derivation
+    read — the kernel re-derives the same (h, r, t, replica, salt) hash,
+    so every lookup is present."""
 
     __slots__ = ("keys", "vals", "shape")
 
@@ -521,17 +461,17 @@ class _SparsePool:
 
 
 class _RecordingPoolView:
-    """Driver-side pool adapter for the store tier: serves
-    ``pool[ids, j]`` through :meth:`SparkNeighborPool.fetch` and RECORDS
-    every entry it returned, so after the driver derives one step's
-    negatives, :meth:`sparse` is exactly the entry set the executors
-    will look up (they replay the same hash, including both the
-    ``pool[hh, j]`` and ``pool[tt, j]`` branches of the corrupt-side
-    select)."""
+    """Driver-side pool adapter for the hash-mode E2 step: serves
+    ``pool[ids, j]`` from the driver pool array or a
+    :class:`SparkNeighborPool` and RECORDS every entry it returned, so
+    after the driver derives one step's negatives, :meth:`sparse` is
+    exactly the entry set the gradient kernel will look up (it replays
+    the same hash and the same one lookup per negative)."""
 
-    def __init__(self, spark_pool: SparkNeighborPool, n_ent: int):
-        self._p = spark_pool
-        self.shape = (int(n_ent), spark_pool.width)
+    def __init__(self, pool, n_ent: int):
+        self._p = pool
+        width = pool.width if isinstance(pool, SparkNeighborPool) else pool.shape[1]
+        self.shape = (int(n_ent), int(width))
         self._keys: list = []
         self._vals: list = []
 
@@ -539,18 +479,14 @@ class _RecordingPoolView:
         ids, j = key
         ids = np.asarray(ids, dtype=np.int64)
         j = np.asarray(j, dtype=np.int64)
-        v = self._p.fetch(ids, j)
+        v = self._p[ids, j]
         self._keys.append(ids * self.shape[1] + j)
         self._vals.append(v)
         return v
 
     def sparse(self) -> _SparsePool:
-        if not self._keys:
-            return _SparsePool(
-                np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
-                self.shape[0], self.shape[1],
-            )
-        k = np.concatenate(self._keys)
-        v = np.concatenate(self._vals)
+        empty = [np.zeros(0, dtype=np.int64)]
+        k = np.concatenate(self._keys or empty)
+        v = np.concatenate(self._vals or empty)
         uk, ui = np.unique(k, return_index=True)
-        return _SparsePool(uk, v[ui], self.shape[0], self.shape[1])
+        return _SparsePool(uk, v[ui], *self.shape)

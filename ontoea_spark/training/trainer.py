@@ -33,8 +33,8 @@ This trainer is driver-side: at reference scale (15K-100K entities,
 dim 300) the model is MBs — the *data* is what needs a cluster, not the
 parameters. The Spark integration (align_pipeline.py) does all
 entity-scale work distributed and collects only the encoded training
-arrays; distributed_gradients() shows the applyInPandas scale-out path
-for the gradient computation itself.
+arrays; the hash-mode E2 step (``OntoEATrainer._hash_step``) is the
+mapInPandas scale-out path for the gradient computation itself.
 """
 
 from __future__ import annotations
@@ -104,39 +104,33 @@ class TrainConfig:
     #   'local'      reference semantics — RNG minibatches on the driver
     #                (ontoea.py:369-411's producer/consumer feed collapsed
     #                to one process)
-    #   'spark'      distributed_gradients(): executors compute full-batch
-    #                gradients per shard over a triples DataFrame against
-    #                broadcast TOUCHED-ROW weight slices (O(batch·negs·
-    #                dim) per step, never O(n_ent·dim)); Spark reduces
-    #                (id, grad) by key; driver applies Adagrad.
-    #                Negatives are hash-derived
-    #                (deterministic, partition-invariant) instead of RNG —
-    #                a documented deviation required for reproducibility
-    #                across cluster sizes.
-    #   'local_hash' driver-side mirror of 'spark' (same hash negatives,
-    #                same full-batch step) — the equivalence oracle:
-    #                fit() under 'spark' must match fit() under
-    #                'local_hash' to ~1e-9 (tests/test_alignment.py).
+    #   'spark'      one hash-mode step per minibatch (_hash_step):
+    #                executors compute the gradients per shard of a
+    #                triples DataFrame against broadcast TOUCHED-ROW weight
+    #                slices (O(batch·negs·dim) per step, never
+    #                O(n_ent·dim)) and Spark reduces (id, grad) by key.
+    #                Negatives are hash-derived (deterministic,
+    #                partition-invariant) instead of RNG — a documented
+    #                deviation required for reproducibility across cluster
+    #                sizes.
+    #   'local_hash' the same step with the gradients computed on the
+    #                driver — the equivalence oracle: fit() under 'spark'
+    #                must match fit() under 'local_hash' to ~1e-9
+    #                (tests/test_alignment.py).
     gradient_mode: str = "local"
-    # Where the ENTITY weights + their Adagrad state live:
+    # Where the ENTITY weights + their Adagrad state live (the side the
+    # E2/E4/E6 steps gather from and apply to):
     #   'driver'  NumPy on the driver (reference shape; all modes)
-    #   'spark'   paramstore.SparkEntStore — a (idx, w, g2) DataFrame;
-    #             the driver holds only per-step touched slices, the
-    #             Adagrad+renorm update runs inside the store, and the
-    #             B7 pool stays a DataFrame served by entry-level fetch
+    #   'spark'   paramstore.SparkEntStore — idx-range-bucketed (idx, w,
+    #             g2) DataFrames; the driver holds only per-step touched
+    #             slices, the Adagrad+renorm update runs inside the store,
+    #             and the B7 pool stays a DataFrame read entry by entry
     #             (no O(n_ent) broadcast anywhere). Requires
     #             gradient_mode='spark' (+ pool_mode='spark' when
     #             neg_sampling='truncated'). Same math as the driver
-    #             loop — fit() under the store matches 'local_hash'
-    #             to ~1e-9 (tests/test_param_store.py).
+    #             side — fit() matches 'local_hash' to ~1e-9
+    #             (tests/test_param_store.py).
     param_store: str = "driver"
-    store_parts: int | None = None    # store partitions (default: parallelism)
-    # Skip the driver-side ent/_opt_ent allocation entirely (store mode
-    # at scales where n_ent·dim no longer fits one machine); fit() then
-    # needs an injected ent_store (paramstore.distributed_init). NOTE:
-    # skipping the ent draw shifts the init RNG stream for rel/onto, so
-    # equivalence tests leave this off.
-    defer_ent_init: bool = False
     # Gather the trained matrix back to self.ent after a store-mode fit
     # (small-scale convenience). At real scale turn off and read
     # trainer._ent_store.ent_df() / write parquet instead.
@@ -234,6 +228,13 @@ class OntoEATrainer:
       sub_edges    [m, 2]  (child_cls, parent_cls) ids
       cv_links     [c, 2]  (entity, cls) ids
       train_links  [k, 2]  (e1, e2) seed alignment ids
+
+    ``ent_store``: a :class:`paramstore.SparkEntStore` holding the entity
+    weights from the start (``paramstore.distributed_init`` at scales
+    where n_ent·dim does not fit one machine; requires
+    param_store='spark'). The driver then draws no ``ent``, which shifts
+    the init RNG stream for rel/onto, so equivalence tests build their
+    store inside fit() instead.
     """
 
     def __init__(
@@ -242,20 +243,20 @@ class OntoEATrainer:
         n_rel: int,
         n_cls: int,
         cfg: TrainConfig | None = None,
+        ent_store=None,
     ):
         self.cfg = cfg or TrainConfig()
         c = self.cfg
         self.rng = np.random.default_rng(c.seed)
         self.n_ent = n_ent
         self.n_rel = n_rel
-        self._ent_store = None          # set by fit() under param_store='spark'
-        self._spark_pool = None
-        if c.defer_ent_init:
-            # store-mode-only scale path: the matrix never exists on the
-            # driver; fit() requires an injected SparkEntStore
-            self.ent = None
-            self._opt_ent = None
-        else:
+        self._ent_store = ent_store     # else set by fit() in store mode
+        # B7 pool: a driver [n_ent, width] id array, or a
+        # paramstore.SparkNeighborPool in store mode
+        self._neighbor_pool = None
+        self.ent = None
+        self._opt_ent = None
+        if ent_store is None:
             self.ent = _unit_init(self.rng, n_ent, c.dim)
             self._opt_ent = Adagrad((n_ent, c.dim), c.lr)
         self.rel = _unit_init(self.rng, n_rel, c.dim)
@@ -288,14 +289,12 @@ class OntoEATrainer:
         nr = np.repeat(r, reps)
         nt = np.repeat(t, reps).copy()
         corrupt_head = self.rng.random(n * reps) < 0.5
-        pool = getattr(self, "_neighbor_pool", None)
+        pool = self._neighbor_pool
         if pool is not None:
             # B7 truncated sampling: hard negatives from the corrupted
             # entity's nearest-neighbor pool (batch.py 'truncated' path)
             draws = self.rng.integers(0, pool.shape[1], size=n * reps)
-            rand_ids = np.where(
-                corrupt_head, pool[nh, draws], pool[nt, draws]
-            )
+            rand_ids = pool[np.where(corrupt_head, nh, nt), draws]
         else:
             rand_ids = self.rng.integers(0, self.n_ent, size=n * reps)
         nh[corrupt_head] = rand_ids[corrupt_head]
@@ -365,53 +364,40 @@ class OntoEATrainer:
         self.onto = _l2_rows(self.onto)
         return float(loss)
 
-    # -- E4: membership (cv links) -------------------------------------
-    # -- param_store dispatch ---------------------------------------------
-    def _ent_view(self, ids: np.ndarray):
-        """Read access to entity rows in both storage modes: the dense
-        driver matrix when resident, else a :class:`_GatherView` over
-        exactly the (sorted-unique) ids gathered from the SparkEntStore
-        — O(len(ids)·dim) driver traffic, never O(n_ent)."""
-        if self.ent is not None:
-            return self.ent
-        if self._ent_store is None:
-            raise RuntimeError("no entity weights: ent is None and no store")
-        uniq = np.unique(np.asarray(ids, dtype=np.int64).ravel())
-        return _GatherView(uniq, self._ent_store.gather(uniq), self.n_ent)
-
-    def _apply_ent_grads(self, ids: np.ndarray, rows: np.ndarray,
-                         scale: float = 1.0) -> None:
-        """Dispatch one compact entity-gradient step (sorted-unique ids,
-        one grad row each). Driver mode scatters into the dense matrix
-        and runs the shared Adagrad + full-matrix row renorm — the
-        reference bit order; store mode applies the same float64 math to
-        the touched rows inside the store (untouched rows are already
-        unit-norm, so skipping their renorm drifts ≤1 ulp/step —
-        covered by the 1e-9 equivalence gate)."""
+    # -- the entity-weight side ------------------------------------------
+    def _ent_side(self):
+        """The entity weights every E2 hash step and every E4/E6 step
+        gathers from and applies to: the driver arrays while ``ent`` is
+        resident, else the SparkEntStore (store mode)."""
         if self.ent is None:
-            self._ent_store.apply_grads(ids, rows, scale)
-            return
-        ge = np.zeros_like(self.ent)
-        ge[ids] = rows
-        self._opt_ent.step(self.ent, scale * ge if scale != 1.0 else ge)
-        self.ent = _l2_rows(self.ent)
+            return self._ent_store
+        return _DriverEnt(self.ent, self._opt_ent)
 
+    def _gather_rows(self, ids: np.ndarray):
+        """``(uniq, inv, rows)``: the sorted-unique ids, the inverse that
+        maps them back to ``ids``, and their rows from the entity side —
+        O(len(ids)·dim) traffic in store mode, never O(n_ent)."""
+        uniq, inv = np.unique(np.asarray(ids, dtype=np.int64), return_inverse=True)
+        return uniq, inv, self._ent_side().gather(uniq)
+
+    # -- E4: membership (cv links) -------------------------------------
     def step_membership(self, cv_links: np.ndarray) -> float:
         c = self.cfg
         if len(cv_links) == 0:
             return 0.0
         e, cl = cv_links[:, 0], cv_links[:, 1]
         ncl = self.rng.integers(0, len(self.onto), size=len(cv_links))
-        E = self._ent_view(e)
+        uniq_e, inv, rows = self._gather_rows(e)
+        Ee = rows[inv]
         if self.cv_mlp is not None:
             # ent2onto path (losses.py:118-137): entity projected into
             # class space through its own MLP before the limited loss
-            z, cache = self.cv_mlp.forward(E[e])
+            z, cache = self.cv_mlp.forward(Ee)
             pos_d = z - self.onto[cl]
             neg_d = z - self.onto[ncl]
         else:
-            pos_d = E[e] - self.onto[cl]
-            neg_d = E[e] - self.onto[ncl]
+            pos_d = Ee - self.onto[cl]
+            neg_d = Ee - self.onto[ncl]
         loss, pc, nc = limited_loss_grads(
             pos_d, neg_d, c.pos_margin, c.neg_margin, c.balance
         )
@@ -420,8 +406,7 @@ class OntoEATrainer:
         ng = 2.0 * nc[:, None] * neg_d
         # compact entity gradient over the touched ids only (same
         # np.add.at accumulation order as a dense scatter — bit-equal)
-        uniq_e, inv = np.unique(e, return_inverse=True)
-        ge_rows = np.zeros((len(uniq_e), E.shape[1]))
+        ge_rows = np.zeros_like(rows)
         if self.cv_mlp is not None:
             dX = self.cv_mlp.backward(cache, pg + ng)
             np.add.at(ge_rows, inv, dX)
@@ -429,7 +414,7 @@ class OntoEATrainer:
             np.add.at(ge_rows, inv, pg + ng)
         np.add.at(go, cl, -pg)
         np.add.at(go, ncl, -ng)
-        self._apply_ent_grads(uniq_e, ge_rows)
+        self._ent_side().apply(uniq_e, ge_rows)
         self._opt_onto.step(self.onto, go)
         return float(loss)
 
@@ -602,31 +587,31 @@ class OntoEATrainer:
         e1, e2 = train_links[:, 0], train_links[:, 1]
         ne2 = self._seed_negatives(e2)
         m = self.mapping
-        ids_all = np.concatenate([e1, e2, ne2])
-        E = self._ent_view(ids_all)
-        p1 = E[e1] @ m
-        pos_d = p1 - E[e2]
-        neg_d = p1 - E[ne2]
+        n = len(e1)
+        uniq_e, inv, rows = self._gather_rows(np.concatenate([e1, e2, ne2]))
+        X = rows[inv]
+        E1, E2, NE2 = X[:n], X[n : 2 * n], X[2 * n :]
+        p1 = E1 @ m
+        pos_d = p1 - E2
+        neg_d = p1 - NE2
         loss, pc, nc = limited_loss_grads(
             pos_d, neg_d, c.pos_margin, c.neg_margin, c.balance
         )
         pg = 2.0 * pc[:, None] * pos_d
         ng = 2.0 * nc[:, None] * neg_d
-        gm = E[e1].T @ (pg + ng)
+        gm = E1.T @ (pg + ng)
         # orthogonal regularizer d/dM ‖MMᵀ−I‖² = 4(MMᵀ−I)M
         ortho = m @ m.T - np.eye(c.dim)
         gm += 4.0 * ortho @ m
         loss += float(np.sum(ortho * ortho))
         # compact entity gradient (add.at runs in the same e1, e2, ne2
-        # element order as the old dense scatter — bit-equal)
-        n = len(e1)
-        uniq_e, inv = np.unique(ids_all, return_inverse=True)
-        ge_rows = np.zeros((len(uniq_e), E.shape[1]))
+        # element order as a dense scatter — bit-equal)
+        ge_rows = np.zeros_like(rows)
         np.add.at(ge_rows, inv[:n], (pg + ng) @ m.T)
         np.add.at(ge_rows, inv[n : 2 * n], -pg)
         np.add.at(ge_rows, inv[2 * n :], -ng)
         self._opt_map.step(self.mapping, c.alpha * gm)
-        self._apply_ent_grads(uniq_e, ge_rows, scale=c.alpha)
+        self._ent_side().apply(uniq_e, c.alpha * ge_rows)
         return float(loss)
 
     # -- E8: schedule ----------------------------------------------------
@@ -650,21 +635,18 @@ class OntoEATrainer:
         iteration start. ``self.step_counts`` records invocations per
         loss type (asserted by the schedule unit test).
 
-        cfg.gradient_mode selects where E2 runs (see TrainConfig):
-        'spark' requires a SparkSession and computes each E2 epoch as one
-        distributed_gradients() pass over ``triples_df`` (built from
+        cfg.gradient_mode selects where E2 runs (see TrainConfig). Both
+        hash modes split each epoch into hash minibatches and run one
+        :meth:`_hash_step` per batch: 'local_hash' over ``triples``,
+        'spark' (needs a SparkSession) over ``triples_df`` (built from
         ``triples`` if not given — at real scale pass the id-encoded edge
-        DataFrame directly so the driver never holds the triple set); the
-        driver applies Adagrad + row-L2 to the broadcastable weights.
+        DataFrame directly so the driver never holds the triple set).
         E3-E6 stay driver-side: their inputs are class- and
         seed-link-sized (thousands of rows at 10^12-document scale), not
-        KG-sized. 'local_hash' is the no-cluster mirror of 'spark'.
-        In both hash modes step_counts['triples'] counts full-batch
-        epochs, not minibatches, and B3 RNG corruption is replaced by
-        the deterministic hash scheme; the B7 truncated-neighbor pool
-        IS still built and refreshed every truncated_freq epochs, and
-        the hash-negative kernels draw hard negatives from it via the
-        hash index (pool_bc / _neighbor_pool)."""
+        KG-sized. In both hash modes B3 RNG corruption is replaced by the
+        deterministic hash scheme; the B7 truncated-neighbor pool IS still
+        built and refreshed every truncated_freq epochs, and the hash
+        negatives draw hard negatives from it via the hash index."""
         c = self.cfg
         mode = c.gradient_mode
         if mode not in ("local", "local_hash", "spark"):
@@ -674,9 +656,13 @@ class OntoEATrainer:
         store_mode = c.param_store == "spark"
         if store_mode and mode != "spark":
             raise ValueError("param_store='spark' requires gradient_mode='spark'")
+        # the E2 hash modes' triple source and its (h, r, t) id columns
+        source, cols = triples, (triples[:, 0], triples[:, 1], triples[:, 2])
         if mode == "spark":
             if spark is None:
                 raise ValueError("gradient_mode='spark' needs a SparkSession")
+            from pyspark.sql import functions as F
+
             if triples_df is None:
                 import pandas as pd
 
@@ -689,8 +675,10 @@ class OntoEATrainer:
                         }
                     )
                 ).repartition(spark.sparkContext.defaultParallelism)
-            triples_df = triples_df.localCheckpoint(eager=True)
-            self._n_hash_triples = triples_df.count()
+            source = triples_df.select(
+                *(F.col(k).cast("long") for k in "hrt")
+            ).localCheckpoint(eager=True)
+            cols = (F.col("h"), F.col("r"), F.col("t"))
             if store_mode:
                 if c.neg_sampling == "truncated" and c.pool_mode != "spark":
                     raise ValueError(
@@ -700,21 +688,14 @@ class OntoEATrainer:
                 from ontoea_spark.training.paramstore import SparkEntStore
 
                 if self._ent_store is None:
-                    if self.ent is None:
-                        raise ValueError(
-                            "defer_ent_init: inject a SparkEntStore "
-                            "(paramstore.distributed_init) as _ent_store "
-                            "before fit()"
-                        )
                     self._ent_store = SparkEntStore.from_numpy(
-                        spark, self.ent, c.lr, n_parts=c.store_parts
+                        spark, self.ent, c.lr
                     )
                 # drop every driver-resident O(n_ent) array for the
                 # duration of training — the point of the tier
                 self.ent = None
                 self._opt_ent = None
-        elif mode == "local_hash":
-            self._n_hash_triples = len(triples)
+        n_tri = source.count() if mode == "spark" else len(triples)
         best, declines = -1.0, 0
         bs = c.batch_size
         if c.seed_neg_method == "type_based" and len(cv_links):
@@ -727,7 +708,6 @@ class OntoEATrainer:
             ("triples", "hierarchy", "likelihood", "membership", "mapping"), 0
         )
         epochs_done = 0
-        pool_bc = None
         for it in range(1, iters + 1):
             if (
                 c.neg_sampling == "truncated"
@@ -735,8 +715,7 @@ class OntoEATrainer:
             ):
                 # B7 refresh — all modes: hard negatives are the quality
                 # driver at scale (uniform corruption loses ~8 Hits@1
-                # points at 5k entities). In spark gradient mode the pool
-                # ships once per refresh, not per step.
+                # points at 5k entities)
                 if c.pool_mode == "spark":
                     if spark is None:
                         raise ValueError(
@@ -746,13 +725,13 @@ class OntoEATrainer:
                     if store_mode:
                         # the pool never leaves the cluster: built from
                         # the store's (id, vec) view by the same blocked
-                        # top-k join, kept as a DataFrame, served to the
-                        # negative derivation entry-by-entry
+                        # top-k join, kept as a DataFrame, read by the
+                        # negative derivation entry by entry
                         from ontoea_spark.training.paramstore import (
                             SparkNeighborPool,
                         )
 
-                        self._spark_pool = SparkNeighborPool.build(
+                        self._neighbor_pool = SparkNeighborPool.build(
                             spark,
                             self._ent_store.ent_df(),
                             self._pool_width(),
@@ -761,12 +740,6 @@ class OntoEATrainer:
                         self.refresh_neighbor_pool_spark(spark)
                 else:
                     self.refresh_neighbor_pool()
-                if mode == "spark" and not store_mode:
-                    if pool_bc is not None:
-                        pool_bc.destroy()
-                    pool_bc = spark.sparkContext.broadcast(
-                        self._neighbor_pool
-                    )
             # E2: sub_epoch epochs of minibatched triples
             # (launch_training_k_epo, ontoea.py:585)
             for ep in range(sub):
@@ -775,77 +748,20 @@ class OntoEATrainer:
                     for i in range(0, len(triples), bs):
                         self.step_triples(triples[order[i : i + bs]])
                         self.step_counts["triples"] += 1
-                else:
-                    # hash modes keep the reference's minibatch SGD:
-                    # each epoch splits the triples into
-                    # ceil(n / batch_size) DISJOINT hash batches
-                    # (re-salted per epoch so the split rotates) with
-                    # one gradient step per batch — a single full-batch
-                    # step per epoch plateaus well short of minibatch
-                    # quality (Hits@1 0.91 vs 0.99 at 5k entities).
-                    n_tri = self._n_hash_triples
-                    n_b = max(1, -(-n_tri // bs))
-                    epoch_salt = (it * 1000 + ep) * 7919
-                    if mode == "spark":
-                        from pyspark.sql import functions as SF
-
-                        bexpr = SF.pmod(
-                            (
-                                SF.col("h") * SF.lit(2654435761)
-                                + SF.col("r") * SF.lit(97)
-                                + SF.col("t") * SF.lit(1000003)
-                                + SF.lit(epoch_salt)
-                            ).bitwiseAND(SF.lit(0x7FFFFFFF)),
-                            SF.lit(n_b),
-                        )
-                    else:
-                        bmix = (
-                            triples[:, 0] * 2654435761
-                            + triples[:, 1] * 97
-                            + triples[:, 2] * 1000003
-                            + epoch_salt
-                        ) & 0x7FFFFFFF
-                        bids = bmix % n_b
-                    for b in range(n_b):
-                        step_salt = self.step_counts["triples"]
-                        if mode == "spark" and store_mode:
-                            # ENT update runs inside the store; only the
-                            # small rel gradient + loss reach the driver
-                            gr, loss = distributed_gradients_store(
-                                spark,
-                                triples_df.filter(bexpr == b),
-                                self._ent_store,
-                                self.rel,
-                                c,
-                                step_salt,
-                                self._spark_pool,
-                            )
-                            self._opt_rel.step(self.rel, gr)
-                            self.step_counts["triples"] += 1
-                            continue
-                        if mode == "spark":
-                            ge, gr, loss = distributed_gradients(
-                                spark,
-                                triples_df.filter(bexpr == b),
-                                self.ent,
-                                self.rel,
-                                c,
-                                step_salt,
-                                pool_bc,
-                            )
-                        else:
-                            ge, gr, loss = local_hash_gradients(
-                                triples[bids == b],
-                                self.ent,
-                                self.rel,
-                                c,
-                                step_salt,
-                                getattr(self, "_neighbor_pool", None),
-                            )
-                        self._opt_ent.step(self.ent, ge)
-                        self._opt_rel.step(self.rel, gr)
-                        self.ent = _l2_rows(self.ent)
-                        self.step_counts["triples"] += 1
+                    continue
+                # hash modes keep the reference's minibatch SGD: each
+                # epoch splits the triples into ceil(n / batch_size)
+                # DISJOINT hash batches (re-salted per epoch so the split
+                # rotates) with one gradient step per batch — a single
+                # full-batch step per epoch plateaus well short of
+                # minibatch quality (Hits@1 0.91 vs 0.99 at 5k entities).
+                n_b = max(1, -(-n_tri // bs))
+                bid = _batch_index(*cols, (it * 1000 + ep) * 7919, n_b)
+                for b in range(n_b):
+                    # ``source[mask]`` filters a DataFrame by a Column
+                    # and selects array rows alike
+                    self._hash_step(source[bid == b], self.step_counts["triples"])
+                    self.step_counts["triples"] += 1
             # E3 (launch_onto_training_k_epo, ontoea.py:588)
             for _ in range(sub):
                 self.step_hierarchy(sub_edges)
@@ -883,8 +799,6 @@ class OntoEATrainer:
                         break
                 else:
                     best, declines = h1, 0
-        if pool_bc is not None:
-            pool_bc.destroy()
         if store_mode and c.store_final_gather:
             # small-scale convenience: bring the trained matrix back so
             # downstream eval helpers see the usual dense self.ent. At
@@ -893,10 +807,113 @@ class OntoEATrainer:
             self.ent = self._ent_store.to_numpy()
         return self
 
+    # -- E2 hash mode: one minibatch step ------------------------------
+    def _hash_step(self, batch, salt: int, stats: dict | None = None) -> float:
+        """One hash-negative E2 step (``limited_loss``, losses.py:79-93)
+        over the entity-weight side; returns the batch loss.
+
+        ``batch`` holds the step's triples: an ``[n, 3]`` id array
+        ('local_hash': gradients on the driver) or an (h, r, t) DataFrame
+        ('spark': gradients on the executors; the ids come to the driver
+        once, O(batch) longs). The driver derives the step's negatives
+        with the same (h, r, t, replica, salt) hash the gradient kernel
+        replays, so the touched entity and relation ids are known before
+        any weight moves, and the kernel gets only their rows plus the
+        pool entries the derivation read — O(batch·neg_per_pos·dim),
+        never O(n_ent·dim). The summed entity gradient goes to the side's
+        ``apply``: as driver rows for the driver arrays, as the reduced
+        (idx, g) frame for the store, so in store mode it never visits
+        the driver. Relation rows (n_rel is small) and the loss come back
+        to the driver, which steps the relation Adagrad.
+
+        ``salt`` MUST advance per step (fit() passes its E2 step count):
+        with a constant salt every epoch corrupts each positive into the
+        SAME negatives and the margin stops teaching anything new.
+        ``stats``, when given, records ``batch_rows``, ``slice_ent_rows``
+        and ``slice_rel_rows`` (slice rows are bounded by the batch, not
+        by n_ent)."""
+        from ontoea_spark.training.paramstore import _RecordingPoolView
+
+        c = self.cfg
+        side = self._ent_side()
+        resident = isinstance(side, _DriverEnt)
+        on_spark = not isinstance(batch, np.ndarray)
+        if on_spark:
+            from pyspark.sql import functions as F
+
+            batch = batch.select(*(F.col(k).cast("long") for k in "hrt"))
+            ids = batch.toPandas()
+            h, r, t = (ids[k].to_numpy() for k in "hrt")
+        else:
+            h, r, t = batch[:, 0], batch[:, 1], batch[:, 2]
+        if stats is not None:
+            stats["batch_rows"] = len(h)
+        if not len(h):
+            return 0.0
+        pool = self._neighbor_pool
+        rec = None if pool is None else _RecordingPoolView(pool, self.n_ent)
+        _, rr, _, nh, nt = _hashneg_negatives(h, r, t, self.n_ent, c, salt, rec)
+        touched_e = np.unique(np.concatenate([h, t, nh, nt]))
+        touched_r = np.unique(np.concatenate([r, rr]))
+        if stats is not None:
+            stats["slice_ent_rows"] = len(touched_e)
+            stats["slice_rel_rows"] = len(touched_r)
+        ent_slice = (touched_e, side.gather(touched_e))
+        rel_slice = (touched_r, self.rel[touched_r])
+        pool_slice = None if rec is None else rec.sparse()
+        if on_spark:
+            sc = batch.sparkSession.sparkContext
+            bcs = [sc.broadcast(v) for v in (ent_slice, rel_slice, pool_slice)]
+            try:
+                summed = _grad_sum_frame(
+                    batch, *bcs, self.n_ent, self.n_rel, c, salt
+                )
+                if not resident:
+                    # the entity rows join straight into the store; the
+                    # frame is materialized once for its two consumers
+                    summed = summed.localCheckpoint(eager=True)
+                    side.apply(
+                        touched_e,
+                        summed.filter(F.col("kind") == K_ENT).select(
+                            "idx", F.col("grad").alias("g")
+                        ),
+                    )
+                    summed = summed.filter(F.col("kind") != K_ENT)
+                # Arrow transfer: the touched-id set approaches n_ent at
+                # 100K+ scale, where a Row-object loop would dominate
+                got = summed.toPandas()
+            finally:
+                for b in bcs:
+                    b.destroy()
+            kind = got["kind"].to_numpy()
+            idx = got["idx"].to_numpy()
+            grad = np.array(got["grad"].to_list(), dtype=np.float64).reshape(
+                len(got), c.dim
+            )
+            if resident:
+                ge = np.empty((len(touched_e), c.dim))
+                ge[np.searchsorted(touched_e, idx[kind == K_ENT])] = grad[
+                    kind == K_ENT
+                ]
+                side.apply(touched_e, ge)
+            r_ids, gr = idx[kind == K_REL], grad[kind == K_REL]
+            loss = float(grad[kind == K_LOSS, 0].sum())
+        else:
+            _, ge, r_ids, gr, loss = _hashneg_batch_grads(
+                h, r, t,
+                _GatherView(*ent_slice, self.n_ent),
+                _GatherView(*rel_slice, self.n_rel),
+                c, salt, pool_slice,
+            )
+            side.apply(touched_e, ge)
+        g = np.zeros_like(self.rel)
+        g[r_ids] = gr
+        self._opt_rel.step(self.rel, g)
+        return loss
+
     # -- evaluation helpers ---------------------------------------------
     def mapped_embeds(self, ids: np.ndarray) -> np.ndarray:
-        E = self._ent_view(ids)
-        return _l2_rows(E[ids] @ self.mapping)
+        return _l2_rows(self.ent_rows(ids) @ self.mapping)
 
     def ent_rows(self, ids: np.ndarray) -> np.ndarray:
         """Raw (un-mapped) entity rows for an id array, in request order —
@@ -904,17 +921,24 @@ class OntoEATrainer:
         store gather otherwise: O(len(ids)·dim) traffic, never O(n_ent)).
         The eval helpers read through this so store-mode pipelines can
         leave ``store_final_gather=False`` and still evaluate."""
-        E = self._ent_view(ids)
-        return E[np.asarray(ids, dtype=np.int64)]
+        _, inv, rows = self._gather_rows(ids)
+        return rows[inv]
 
     def hits_at_1(self, links: np.ndarray) -> float:
         """Driver-side Hits@1 over link candidates (for early stopping;
         the full evaluation runs distributed via the simjoin operator)."""
         e1 = self.mapped_embeds(links[:, 0])
-        E2 = self._ent_view(links[:, 1])
-        e2 = _l2_rows(E2[links[:, 1]])
+        e2 = _l2_rows(self.ent_rows(links[:, 1]))
         sim = e1 @ e2.T
         return float(np.mean(np.argmax(sim, axis=1) == np.arange(len(links))))
+
+
+def _batch_index(h, r, t, salt: int, n_b: int):
+    """The E2 hash minibatch of each triple for one epoch: a salted hash
+    of (h, r, t) split into ``n_b`` disjoint batches. One formula for
+    NumPy id arrays and Spark long Columns alike — every term is
+    non-negative, so ``% 2**31`` is the 31-bit mask and ``%`` is pmod."""
+    return ((h * 2654435761 + r * 97 + t * 1000003 + salt) % 2**31) % n_b
 
 
 def _hashneg_negatives(h, r, t, n_ent, cfg, salt=0, pool=None):
@@ -922,8 +946,9 @@ def _hashneg_negatives(h, r, t, n_ent, cfg, salt=0, pool=None):
     ``(hh, rr, tt, nh, nt)`` — the positives tiled ``neg_per_pos`` times
     and their corrupted copies. Pure id arithmetic, no weight access:
     the driver calls this to learn the step's touched-id set BEFORE any
-    weights ship (distributed_gradients' slice gather), and
-    _hashneg_batch_grads calls it on each executor shard — both sides
+    weights ship (``OntoEATrainer._hash_step``), and
+    _hashneg_batch_grads calls it again on the batch or on each executor
+    shard — both
     derive bit-identical negatives because the draw is a hash of
     (h, r, t, replica, salt), never an RNG."""
     reps = max(1, cfg.neg_per_pos)
@@ -941,9 +966,10 @@ def _hashneg_negatives(h, r, t, n_ent, cfg, salt=0, pool=None):
         # corrupted entity's nearest-neighbor pool (hard negatives) —
         # the quality driver at scale (Hits@1 0.99 vs 0.91 uniform at
         # 5k entities); the draw index is hash-derived like everything
-        # else so partition-invariance is preserved
+        # else so partition-invariance is preserved. One lookup per
+        # negative, so a sparse pool holds only the entries drawn.
         j = (mix % pool.shape[1]).ravel()
-        rand_ids = np.where(corrupt_head, pool[hh, j], pool[tt, j])
+        rand_ids = pool[np.where(corrupt_head, hh, tt), j]
     nh, nt = hh.copy(), tt.copy()
     nh[corrupt_head] = rand_ids[corrupt_head]
     nt[~corrupt_head] = rand_ids[~corrupt_head]
@@ -956,8 +982,9 @@ class _GatherView:
     resolves global ids to slice rows via searchsorted (O(log u) per
     lookup, vectorized). ``len()``/``shape`` report the GLOBAL extent so
     hash-negative draws (``mix % len(E)``) are unchanged. Every id looked
-    up must be in the subset — distributed_gradients guarantees that by
-    deriving the step's negatives on the driver with the same hash."""
+    up must be in the subset — ``OntoEATrainer._hash_step`` guarantees
+    that by deriving the step's negatives on the driver with the same
+    hash."""
 
     __slots__ = ("ids", "rows", "n_global")
 
@@ -979,21 +1006,17 @@ class _GatherView:
 
 def _hashneg_batch_grads(h, r, t, E, R, cfg, salt=0, pool=None):
     """Shared E2 kernel for the hash-negative gradient paths: given one
-    batch of (h, r, t) and the full weight matrices, score each positive
+    batch of (h, r, t) and weight views that resolve every id the batch
+    touches, score each positive
     ONCE and draw ``cfg.neg_per_pos`` negatives per positive (exactly
     step_triples' weighting — over-counting the positive term reps times
     drowns the balance-weighted margin and collapses training, observed
     Hits@1 0.26 vs 0.94), corrupting head or tail per replica from a hash
     of (h, r, t, replica, salt) — deterministic and partition-invariant,
     no RNG. Returns the COMPACT gradient ``(uniq_e, ge, uniq_r, gr,
-    loss)`` over touched ids only, never O(n_ent). Both
-    distributed_gradients (per executor shard) and local_hash_gradients
-    (whole batch on the driver) call this, so the two paths cannot drift.
-
-    ``salt`` MUST advance per optimizer step (fit() passes its E2 epoch
-    counter): with a constant salt every epoch corrupts each positive
-    into the SAME negatives and the margin stops teaching anything new.
-    """
+    loss)`` over touched ids only, never O(n_ent). The hash step calls
+    it on the whole batch ('local_hash') or per executor shard
+    ('spark'), so the two modes cannot drift."""
     n = len(h)
     dim = E.shape[1]
     reps = max(1, cfg.neg_per_pos)
@@ -1023,49 +1046,24 @@ def _hashneg_batch_grads(h, r, t, E, R, cfg, salt=0, pool=None):
     return uniq_e, ge, uniq_r, gr, float(loss)
 
 
-def local_hash_gradients(triples, ent, rel, cfg, salt=0, pool=None):
-    """Driver-side mirror of distributed_gradients — the same hash-negative
-    full-batch step with no Spark in the loop. fit(gradient_mode=
-    'local_hash') uses it; the spark-mode equivalence test compares a full
-    fit() under 'spark' against one under 'local_hash' (weights must agree
-    to ~1e-9 — only float summation order differs)."""
-    h, r, t = triples[:, 0], triples[:, 1], triples[:, 2]
-    uniq_e, ge_c, uniq_r, gr_c, loss = _hashneg_batch_grads(
-        h, r, t, ent, rel, cfg, salt, pool
-    )
-    ge = np.zeros_like(ent)
-    gr = np.zeros_like(rel)
-    ge[uniq_e] = ge_c
-    gr[uniq_r] = gr_c
-    return ge, gr, loss
-
-
 # Row tags in the (kind, idx, grad) gradient frame the E2 shard pipeline
 # emits: entity rows, relation rows, and one loss scalar per shard
 # (padded to dim so the frame stays single-schema).
 K_ENT, K_REL, K_LOSS = 0, 1, 2
 
 
-def _grad_sum_frame(
-    spark, triples_df, b_ent, b_rel, n_ent, n_rel, dim, cfg, salt, pool_b
-):
-    """The shared E2 shard-compute + by-key-reduce pipeline: executors
-    run :func:`_hashneg_batch_grads` per Arrow shard against the
-    broadcast ``(ids, rows)`` weight slices (resolved through
-    :class:`_GatherView`), emit compact ``(kind, idx, grad)`` rows, and
-    a hash repartition on (kind, idx) + vectorized partition-local sum
-    produces one globally-summed row per touched id. Returns the summed
-    frame LAZY — callers decide whether it lands on the driver
-    (:func:`distributed_gradients`) or joins back into the parameter
-    store without ever visiting it
-    (:func:`distributed_gradients_store`).
-
-    ``pool_b``: optional broadcast whose ``.value`` supports
-    ``pool.shape[1]`` and ``pool[ids, j]`` — the dense [n_ent, width]
-    matrix in slice mode, a :class:`paramstore._SparsePool` of just this
-    step's prefetched entries in store mode."""
+def _grad_sum_frame(triples_df, b_ent, b_rel, b_pool, n_ent, n_rel, cfg, salt):
+    """The E2 shard-compute + by-key-reduce pipeline of a 'spark' hash
+    step: executors run :func:`_hashneg_batch_grads` per Arrow shard of
+    the (long) ``triples_df`` against the broadcast ``(ids, rows)``
+    weight slices (resolved through :class:`_GatherView`) and the
+    broadcast :class:`paramstore._SparsePool` (or None), emit compact
+    ``(kind, idx, grad)`` rows, and a hash repartition on (kind, idx) +
+    vectorized partition-local sum produces one globally-summed row per
+    touched id. Returns the summed frame LAZY."""
     import pandas as pd
-    from pyspark.sql import functions as F
+
+    dim = cfg.dim
 
     def shard(pdf_iter):
         for pdf in pdf_iter:
@@ -1079,7 +1077,7 @@ def _grad_sum_frame(
                 R,
                 cfg,
                 salt,
-                pool_b.value if pool_b is not None else None,
+                b_pool.value,
             )
             # loss rides along as a kind-2 row padded to dim
             lrow = np.zeros(dim)
@@ -1098,9 +1096,9 @@ def _grad_sum_frame(
                 }
             )
 
-    parts = triples_df.select(
-        F.col("h").cast("long"), F.col("r").cast("long"), F.col("t").cast("long")
-    ).mapInPandas(shard, schema="kind int, idx long, grad array<double>")
+    parts = triples_df.mapInPandas(
+        shard, schema="kind int, idx long, grad array<double>"
+    )
 
     def reduce_partition(pdf_iter):
         # Vectorized by-key sum of the shard gradients. The frame arrives
@@ -1132,195 +1130,29 @@ def _grad_sum_frame(
             }
         )
 
-    n_red = max(1, spark.sparkContext.defaultParallelism)
+    n_red = max(1, triples_df.sparkSession.sparkContext.defaultParallelism)
     return parts.repartition(n_red, "kind", "idx").mapInPandas(
         reduce_partition, schema="kind int, idx long, grad array<double>"
     )
 
 
-def distributed_gradients(
-    spark, triples_df, ent, rel, cfg, salt=0, pool_bc=None, stats=None
-) -> tuple:
-    """The mapInPandas scale-out path for E2: executors compute the
-    triple-loss gradient per shard, emitting ONLY the touched (id, grad)
-    rows — O(shard batch), never O(n_ent) — which Spark reduces by key
-    before one small driver collect. (A dense per-shard gradient would
-    be shards x n_ent x dim driver traffic — VERDICT r01 'What's wrong'
-    #3.)
+class _DriverEnt:
+    """The entity-weight side held as driver arrays: the dense ``ent``
+    matrix and its Adagrad. ``apply`` keeps the reference bit order —
+    dense scatter, Adagrad on the full matrix, row renorm of the full
+    matrix (ontoea.py:193-198) — and updates ``ent`` in place. The store
+    counterpart is :class:`paramstore.SparkEntStore`, with the same
+    ``gather``/``apply``."""
 
-    Weights ship as TOUCHED-ROW SLICES, not full matrices (VERDICT r4
-    'wrong' #3): the minibatch ids are pulled to the driver (O(batch)
-    longs), the step's negatives are re-derived there with the same
-    (h, r, t, replica, salt) hash the executors use, and only
-    ``ent[touched]`` / ``rel[touched]`` broadcast — O(batch·neg_per_pos
-    ·dim) per step regardless of n_ent, where the full matrices are
-    n_ent·dim (480 MB/step at 200K entities x dim 300, and simply
-    impossible at web-scale entity counts). Executors resolve global ids
-    against the slice through a sorted-id :class:`_GatherView`. The
-    remaining O(n_ent) per-REFRESH (not per-step) artifact is the
-    neighbor pool broadcast; :func:`distributed_gradients_store`
-    (param_store='spark') is the next tier, which removes it along with
-    the driver-resident weights and Adagrad state.
+    def __init__(self, ent: np.ndarray, opt: Adagrad):
+        self.ent = ent
+        self.opt = opt
 
-    Deterministic: negatives are derived per-row from a hash of
-    (h, r, t, replica), not an RNG, so the result is
-    partitioning-independent (up to float summation order ~1e-15) and
-    honors cfg.neg_per_pos like the local minibatch path.
+    def gather(self, ids: np.ndarray) -> np.ndarray:
+        return self.ent[ids]
 
-    ``pool_bc``: an ALREADY-BROADCAST truncated-neighbor pool
-    (sc.broadcast of the [n_ent, pool_width] id matrix) for B7 hard
-    negatives. The caller owns its lifecycle — fit() re-broadcasts only
-    on pool refresh (every truncated_freq epochs), so the pool does NOT
-    re-ship per gradient step like the weights do.
-
-    ``stats``: optional dict; when given, records ``slice_ent_rows`` /
-    ``slice_rel_rows`` / ``batch_rows`` for the step (the scale gate the
-    tests assert: slice rows are bounded by the batch, not n_ent).
-
-    Returns (ge, gr, loss) summed over all shards; ge/gr are dense
-    arrays with nonzero rows only at touched ids.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    n_ent, dim = ent.shape
-    n_rel = rel.shape[0]
-
-    # O(batch) driver pull of the minibatch ids (the triples frame is
-    # already the hash-filtered step batch) + same-hash negative
-    # derivation = the exact touched-row set, known before any weight
-    # bytes move.
-    mb = triples_df.select(
-        F.col("h").cast("long"), F.col("r").cast("long"), F.col("t").cast("long")
-    ).toPandas()
-    mh = mb["h"].to_numpy()
-    mr = mb["r"].to_numpy()
-    mt = mb["t"].to_numpy()
-    pool_local = pool_bc.value if pool_bc is not None else None
-    if len(mh):
-        nhh, nrr, _, nnh, nnt = _hashneg_negatives(
-            mh, mr, mt, n_ent, cfg, salt, pool_local
-        )
-        touched_e = np.unique(np.concatenate([mh, mt, nnh, nnt]))
-        touched_r = np.unique(np.concatenate([mr, nrr]))
-    else:
-        touched_e = np.zeros(0, dtype=np.int64)
-        touched_r = np.zeros(0, dtype=np.int64)
-    if stats is not None:
-        stats["batch_rows"] = int(len(mh))
-        stats["slice_ent_rows"] = int(len(touched_e))
-        stats["slice_rel_rows"] = int(len(touched_r))
-
-    b_ent = spark.sparkContext.broadcast((touched_e, ent[touched_e]))
-    b_rel = spark.sparkContext.broadcast((touched_r, rel[touched_r]))
-
-    summed = _grad_sum_frame(
-        spark, triples_df, b_ent, b_rel, n_ent, n_rel, dim, cfg, salt, pool_bc
-    )
-    ge = np.zeros_like(ent)
-    gr = np.zeros_like(rel)
-    try:
-        # Arrow transfer + vectorized scatter: the touched-id set is
-        # O(batch * negatives) and approaches n_ent at 100K+ scale — a
-        # Row-object loop would dominate the step wall there. Same
-        # float64 values either way (Arrow is exact).
-        pdf = summed.toPandas()
-        kinds = pdf["kind"].to_numpy()
-        idxs = pdf["idx"].to_numpy()
-        grads = np.array(pdf["grad"].to_list(), dtype=np.float64).reshape(
-            len(pdf), dim
-        )
-        ge[idxs[kinds == K_ENT]] = grads[kinds == K_ENT]
-        gr[idxs[kinds == K_REL]] = grads[kinds == K_REL]
-        loss = float(grads[kinds == K_LOSS][:, 0].sum())
-    finally:
-        # fit() calls this once per E2 epoch — without cleanup the
-        # per-call weight broadcasts accumulate on the executors
-        b_ent.destroy()
-        b_rel.destroy()
-    return ge, gr, loss
-
-
-def distributed_gradients_store(
-    spark, triples_df, store, rel, cfg, salt=0, spark_pool=None, stats=None
-) -> tuple:
-    """The param_store='spark' E2 step: like :func:`distributed_gradients`
-    but the entity weights live in a :class:`paramstore.SparkEntStore`
-    and the ENTITY gradient never visits the driver — the by-key-reduced
-    (idx, grad) frame joins straight into the store, where the Adagrad +
-    row-L2 update runs executor-side (``apply_grads_df``). The driver
-    only sees: the minibatch ids (O(batch) longs, to derive the
-    hash-negatives and thus the touched-id set), the gathered touched
-    ENT rows (O(batch·neg_per_pos·dim), broadcast back out as the
-    compute slice), the summed RELATION rows (n_rel is small — the
-    driver keeps rel and its Adagrad), and the loss scalar.
-
-    ``spark_pool``: a :class:`paramstore.SparkNeighborPool` (B7 pool as
-    a DataFrame). The driver's negative derivation reads it through a
-    recording view, and exactly the entries it consumed broadcast to
-    the executors as a :class:`paramstore._SparsePool` — O(batch·
-    neg_per_pos) longs per step, so NOTHING O(n_ent) ships anywhere.
-
-    Returns ``(gr, loss)``; the caller applies ``gr`` to the
-    driver-resident relation matrix. Equivalence with the driver loop is
-    gated by tests/test_param_store.py (full fit ≡ 'local_hash' ~1e-9).
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ontoea_spark.training.paramstore import _RecordingPoolView
-
-    n_ent, dim = store.n_ent, store.dim
-    n_rel = rel.shape[0]
-
-    mb = triples_df.select(
-        F.col("h").cast("long"), F.col("r").cast("long"), F.col("t").cast("long")
-    ).toPandas()
-    mh = mb["h"].to_numpy()
-    mr = mb["r"].to_numpy()
-    mt = mb["t"].to_numpy()
-    if not len(mh):
-        return np.zeros_like(rel), 0.0
-    rec = (
-        _RecordingPoolView(spark_pool, n_ent) if spark_pool is not None else None
-    )
-    nhh, nrr, _, nnh, nnt = _hashneg_negatives(mh, mr, mt, n_ent, cfg, salt, rec)
-    touched_e = np.unique(np.concatenate([mh, mt, nnh, nnt]))
-    touched_r = np.unique(np.concatenate([mr, nrr]))
-    if stats is not None:
-        stats["batch_rows"] = int(len(mh))
-        stats["slice_ent_rows"] = int(len(touched_e))
-        stats["slice_rel_rows"] = int(len(touched_r))
-
-    b_ent = spark.sparkContext.broadcast((touched_e, store.gather(touched_e)))
-    b_rel = spark.sparkContext.broadcast((touched_r, rel[touched_r]))
-    b_pool = (
-        spark.sparkContext.broadcast(rec.sparse()) if rec is not None else None
-    )
-    try:
-        # materialize the summed gradient ONCE — it feeds two consumers
-        # (the store join and the driver's rel/loss collect)
-        summed = _grad_sum_frame(
-            spark, triples_df, b_ent, b_rel, n_ent, n_rel, dim, cfg, salt,
-            b_pool,
-        ).localCheckpoint(eager=True)
-        store.apply_grads_df(
-            summed.filter(F.col("kind") == K_ENT).select(
-                "idx", F.col("grad").alias("g")
-            )
-        )
-        pdf = summed.filter(F.col("kind") != K_ENT).toPandas()
-    finally:
-        b_ent.destroy()
-        b_rel.destroy()
-        if b_pool is not None:
-            b_pool.destroy()
-    gr = np.zeros_like(rel)
-    kinds = pdf["kind"].to_numpy()
-    idxs = pdf["idx"].to_numpy()
-    grads = np.array(pdf["grad"].to_list(), dtype=np.float64).reshape(
-        len(pdf), dim
-    )
-    gr[idxs[kinds == K_REL]] = grads[kinds == K_REL]
-    loss = float(grads[kinds == K_LOSS][:, 0].sum())
-    return gr, loss
+    def apply(self, ids: np.ndarray, grads: np.ndarray) -> None:
+        g = np.zeros_like(self.ent)
+        g[ids] = grads
+        self.opt.step(self.ent, g)
+        self.ent[...] = _l2_rows(self.ent)

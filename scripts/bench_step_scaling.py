@@ -1,24 +1,23 @@
-"""Per-step traffic/wall vs n_ent at FIXED batch — the VERDICT r4 #3
-'done' evidence: with touched-row slice shipping, a distributed gradient
-step's cost is O(batch·neg_per_pos·dim) and must stay ~flat as the
-entity count grows 16x, where the old full-matrix broadcast grew
-linearly with n_ent·dim (and was simply impossible at web-scale entity
-counts).
+"""Per-step traffic/wall vs n_ent at FIXED batch: with touched-row slice
+shipping, a distributed E2 step moves O(batch·neg_per_pos·dim) bytes, so
+its shipped slice must stay flat as the entity count grows 16x, where a
+full-matrix broadcast would grow linearly with n_ent·dim (and is simply
+impossible at web-scale entity counts).
 
 Method: synthetic uniform edge sets over n_ent ∈ {100k, 400k, 1.6M}
 (dim 32, batch 8192, neg_per_pos 10 ⇒ ≤ 180k touched refs/step), same
-SparkSession, N_STEPS timed distributed_gradients calls each (first
-call per size discarded as warmup). Reports median step wall, the
-shipped slice rows, and the full-matrix rows the old path would have
-broadcast.
+SparkSession, N_STEPS timed ``OntoEATrainer._hash_step`` calls each
+(first call per size discarded as warmup) — the step fit() runs under
+gradient_mode='spark'. Reports median step wall, the shipped slice rows,
+and the full-matrix rows a dense broadcast would ship.
 
-STEP_SCALING_MODE=store benches the param_store='spark' tier instead
-(distributed_gradients_store against a SparkEntStore built with
-distributed_init — the driver never allocates n_ent·dim): its step has
-NO O(n_ent) driver or broadcast term at all, but the store update is a
-distributed scan+rewrite, so step wall grows ~linearly with n_ent /
-cluster-size — the expected trade, reported honestly side by side with
-slice mode's flat-wall/driver-bounded profile.
+STEP_SCALING_MODE picks the entity-weight side the step runs over:
+'slice' — driver arrays; the step's wall includes the driver's Adagrad
++ row renorm over the full matrix (O(n_ent·dim) driver CPU, no traffic).
+'store' — a SparkEntStore built with distributed_init (the driver never
+allocates n_ent·dim): no O(n_ent) driver or broadcast term at all, but
+the store update is a distributed scan+rewrite of the touched buckets,
+so step wall grows with n_ent / cluster-size.
 
 Usage:  python scripts/bench_step_scaling.py   [prints one JSON line]
 Env:    STEP_SCALING_SIZES (comma ints), STEP_SCALING_STEPS,
@@ -40,11 +39,7 @@ def main() -> None:
     import numpy as np
 
     from ontoea_spark.session import get_spark
-    from ontoea_spark.training.trainer import (
-        TrainConfig,
-        distributed_gradients,
-        distributed_gradients_store,
-    )
+    from ontoea_spark.training.trainer import OntoEATrainer, TrainConfig
 
     sizes = [
         int(s)
@@ -63,17 +58,14 @@ def main() -> None:
 
     rows = []
     for n_ent in sizes:
-        rel = rng.normal(size=(n_rel, dim))
+        store = None
         if mode == "store":
             from ontoea_spark.training.paramstore import SparkEntStore
 
-            ent = None
             store = SparkEntStore.distributed_init(
                 spark, n_ent, dim, lr=cfg.lr, seed=7
             )
-        else:
-            ent = rng.normal(size=(n_ent, dim))
-            store = None
+        model = OntoEATrainer(n_ent, n_rel, 1, cfg, ent_store=store)
         import pandas as pd
 
         mb = pd.DataFrame(
@@ -91,14 +83,7 @@ def main() -> None:
         for step in range(n_steps + 1):
             stats = {}
             t0 = time.perf_counter()
-            if mode == "store":
-                distributed_gradients_store(
-                    spark, edges, store, rel, cfg, salt=step, stats=stats
-                )
-            else:
-                distributed_gradients(
-                    spark, edges, ent, rel, cfg, salt=step, stats=stats
-                )
+            model._hash_step(edges, salt=step, stats=stats)
             w = time.perf_counter() - t0
             if step > 0:  # step 0 = warmup (codegen, first shuffle)
                 walls.append(w)

@@ -50,7 +50,7 @@ def main() -> None:
         samples = []
         for _ in range(3):
             t0 = time.perf_counter()
-            store.apply_grads(ids, g)
+            store.apply(ids, g)
             samples.append(time.perf_counter() - t0)
         samples.sort()
         print(

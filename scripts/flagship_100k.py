@@ -6,11 +6,11 @@ Everything in the run takes the at-scale path:
 
 * benchmark: generate_two_kg(n_ent=100000, n_rel=60, n_triples=800000)
   — the 15K flagship's ~8 triples/entity density, vectorized sampler;
-* training: gradient_mode='spark' (E2 gradients on executors via
-  distributed_gradients, hash-minibatched; driver applies Adagrad) with
+* training: gradient_mode='spark' (E2 gradients on executors in the
+  hash-minibatched E2 step; driver applies Adagrad) with
   pool_mode='spark' (B7 refresh as a blocked top-k self-join — the
   n x n similarity never materializes on one machine) and pool_cap
-  bounding the broadcast pool;
+  bounding the pool width;
 * evaluation: evaluate_candidates (blocked_topk_join k_cand candidates
   + within-pool type rescoring + ranks_vs_gold_candidates) — no n1 x n2
   materialization anywhere in the run.

@@ -19,9 +19,8 @@ from ontoea_spark.training.trainer import (
     MLPHead,
     OntoEATrainer,
     TrainConfig,
-    distributed_gradients,
+    _batch_index,
     limited_loss_grads,
-    local_hash_gradients,
 )
 
 
@@ -297,22 +296,39 @@ def test_training_determinism(bench_data):
 
 
 def test_distributed_gradients_match_driver(spark, bench_data):
-    """The applyInPandas gradient shards must sum to the same global
-    gradient regardless of partitioning (scale-out correctness)."""
+    """The mapInPandas gradient shards of one spark-mode E2 step must sum
+    to the same update regardless of partitioning (scale-out
+    correctness), over either entity-weight side: the driver arrays and
+    the SparkEntStore."""
+    from ontoea_spark.training.paramstore import SparkEntStore
+
     cfg = TrainConfig(dim=16, seed=3)
     model = OntoEATrainer(bench_data.n_ent, bench_data.n_rel, bench_data.n_cls, cfg)
     edges = bench_data.edges.selectExpr(
         "s_id AS h", "p_id AS r", "o_id AS t"
     )
-    ge1, gr1, l1 = distributed_gradients(
-        spark, edges.repartition(2), model.ent, model.rel, cfg
-    )
-    ge8, gr8, l8 = distributed_gradients(
-        spark, edges.repartition(8), model.ent, model.rel, cfg
-    )
-    assert abs(l1 - l8) < 1e-6 * max(1.0, abs(l1))
-    assert np.allclose(ge1, ge8, atol=1e-9)
-    assert np.allclose(gr1, gr8, atol=1e-9)
+    runs = {}
+    for side in ("driver", "store"):
+        for parts in (2, 8):
+            store = (
+                SparkEntStore.from_numpy(spark, model.ent, cfg.lr)
+                if side == "store" else None
+            )
+            m = OntoEATrainer(
+                bench_data.n_ent, bench_data.n_rel, bench_data.n_cls, cfg,
+                ent_store=store,
+            )
+            if store is None:
+                m.ent = model.ent.copy()
+            m.rel = model.rel.copy()
+            loss = m._hash_step(edges.repartition(parts), salt=0)
+            ent = m.ent if store is None else store.to_numpy()
+            runs[side, parts] = (loss, ent, m.rel)
+    l1, e1, r1 = runs["driver", 2]
+    for l8, e8, r8 in runs.values():
+        assert abs(l1 - l8) < 1e-6 * max(1.0, abs(l1))
+        assert np.allclose(e1, e8, atol=1e-9)
+        assert np.allclose(r1, r8, atol=1e-9)
 
 
 def test_distributed_gradients_sparse_output(spark):
@@ -333,11 +349,13 @@ def test_distributed_gradients_sparse_output(spark):
         ],
         "h long, r long, t long",
     )
+    m = OntoEATrainer(n_ent, 4, 1, cfg)
+    m.ent, m.rel = ent, rel
     stats = {}
-    ge, gr, loss = distributed_gradients(
-        spark, edges.repartition(3), ent, rel, cfg, stats=stats
-    )
-    touched = int(np.count_nonzero(np.any(ge != 0.0, axis=1)))
+    loss = m._hash_step(edges.repartition(3), salt=0, stats=stats)
+    # a row's Adagrad accumulator is g² after the first step: nonzero
+    # exactly where the summed gradient is
+    touched = int(np.count_nonzero(np.any(m._opt_ent.acc != 0.0, axis=1)))
     assert 0 < touched <= 2 * (1 + cfg.neg_per_pos) * n_edges
     assert loss > 0.0
     # VERDICT r4 #3: the weights SHIPPED are also O(batch), never O(n_ent)
@@ -348,6 +366,27 @@ def test_distributed_gradients_sparse_output(spark):
     assert 0 < stats["slice_ent_rows"] <= 2 * (1 + cfg.neg_per_pos) * n_edges
     assert stats["slice_ent_rows"] < n_ent // 100
     assert 0 < stats["slice_rel_rows"] <= 4
+
+
+def test_batch_index_spark_matches_numpy(spark, bench_data):
+    """The E2 minibatch split is one formula: evaluated as a Spark
+    Column over the triples frame and over the NumPy id arrays, it puts
+    every triple in the same batch, for more than one epoch salt."""
+    from pyspark.sql import functions as F
+
+    df = bench_data.edges.selectExpr(
+        "CAST(s_id AS long) AS h", "CAST(p_id AS long) AS r",
+        "CAST(o_id AS long) AS t",
+    )
+    for salt, n_b in ((7919, 3), (2003 * 7919, 5)):
+        pdf = df.select(
+            "h", "r", "t",
+            _batch_index(F.col("h"), F.col("r"), F.col("t"), salt, n_b).alias("b"),
+        ).toPandas()
+        tri = pdf[["h", "r", "t"]].to_numpy()
+        want = _batch_index(tri[:, 0], tri[:, 1], tri[:, 2], salt, n_b)
+        assert len(tri) > 0 and len(set(want.tolist())) == n_b
+        assert np.array_equal(pdf["b"].to_numpy(), want)
 
 
 def _fit_arrays(bench_data):
@@ -371,7 +410,7 @@ def _fit_arrays(bench_data):
 
 def test_fit_spark_mode_matches_local_hash(spark, bench_data):
     """VERDICT r02 #2 gate: a FULL fit() under gradient_mode='spark'
-    (every E2 epoch computed by executors via distributed_gradients,
+    (every E2 step's gradients computed by executors in _hash_step,
     Adagrad applied on the driver) must reproduce the 'local_hash'
     driver loop's weights to ~1e-9 — the two paths share the hash-negative
     kernel, so only float summation order across shards may differ."""

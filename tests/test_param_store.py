@@ -72,7 +72,7 @@ def test_store_roundtrip_and_gather(spark):
 
 
 def test_store_apply_matches_driver_adagrad(spark):
-    """apply_grads must be bit-compatible with the driver update on the
+    """apply must be bit-compatible with the driver update on the
     touched rows: Adagrad.step + row renorm, float64 throughout."""
     rng = np.random.default_rng(5)
     ent = _unit_init(rng, 40, 6)
@@ -87,7 +87,7 @@ def test_store_apply_matches_driver_adagrad(spark):
         g[ids] = rows
         opt.step(ref, g)
         ref = _l2_rows(ref)
-        store.apply_grads(ids, rows)
+        store.apply(ids, rows)
     got = store.to_numpy()
     # untouched rows: driver renorms every step (numeric no-op on unit
     # rows, ≤1 ulp), store leaves them bit-identical
@@ -128,18 +128,18 @@ def test_spark_pool_matches_driver_pool(spark):
     got = np.array(pdf["nbrs"].to_list(), dtype=np.int64)
     assert np.array_equal(got, local)
 
-    # entry-level fetch resolves pool[ids, j] including duplicates
+    # entry-level reads resolve pool[ids, j] including duplicates
     rng = np.random.default_rng(0)
     ids = rng.integers(0, 80, size=25)
     j = rng.integers(0, sp.width, size=25)
-    assert np.array_equal(sp.fetch(ids, j), local[ids, j])
+    assert np.array_equal(sp[ids, j], local[ids, j])
 
 
 def test_recording_view_replay(spark):
     """The driver's recording view must capture exactly the entries the
-    executors will replay (both branches of the corrupt-side select),
-    and the sparse pool must serve them back bit-identically — and
-    refuse anything un-prefetched."""
+    gradient kernel will replay (one lookup per negative), and the
+    sparse pool must serve them back bit-identically — and refuse
+    anything un-prefetched."""
     cfg = TrainConfig(dim=8, seed=11, truncated_epsilon=0.8)
     m = OntoEATrainer(n_ent=80, n_rel=4, n_cls=3, cfg=cfg)
     m.refresh_neighbor_pool()
@@ -233,20 +233,21 @@ def test_fit_store_mode_driver_free(spark, bench_data):
 
 def test_fit_defer_ent_init(spark, bench_data):
     """The at-scale entry: distributed_init builds the store on the
-    executors, the trainer is constructed with defer_ent_init=True (no
-    driver ent draw at all), and fit() trains against the injected
-    store."""
+    executors, the trainer is constructed with it as ``ent_store`` (no
+    driver ent draw at all), and fit() trains against that store."""
     tri, cv, tr = _fit_arrays(bench_data)
     cfg = TrainConfig(
         dim=16, epochs=5, sub_epoch=5, seed=7, gradient_mode="spark",
-        param_store="spark", pool_mode="spark", defer_ent_init=True,
-        store_final_gather=False,
+        param_store="spark", pool_mode="spark", store_final_gather=False,
     )
-    m = OntoEATrainer(bench_data.n_ent, bench_data.n_rel, bench_data.n_cls, cfg)
-    assert m.ent is None
-    m._ent_store = SparkEntStore.distributed_init(
+    store = SparkEntStore.distributed_init(
         spark, bench_data.n_ent, cfg.dim, cfg.lr, seed=cfg.seed
     )
+    m = OntoEATrainer(
+        bench_data.n_ent, bench_data.n_rel, bench_data.n_cls, cfg,
+        ent_store=store,
+    )
+    assert m.ent is None
     m.fit(tri, bench_data.sub_ids, cv, tr, spark=spark)
     assert m.step_counts["triples"] > 0
     got = m._ent_store.to_numpy()
@@ -265,3 +266,54 @@ def test_store_mode_config_validation(spark, bench_data):
             bench_data.n_ent, bench_data.n_rel, bench_data.n_cls,
             TrainConfig(param_store="spark", gradient_mode="spark"),
         ).fit(tri, bench_data.sub_ids, cv, tr, spark=spark)
+
+
+def _jobs(spark, name, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_e2_step_job_counts(spark, bench_data):
+    """One hash-mode E2 step with B7 pool negatives, as fit() runs it.
+    A slice step (driver arrays) is the batch pull plus one collect of
+    the summed gradient. A store step adds the pool read, the touched-row
+    gather, the summed frame's checkpoint and the bucket rewrite; it
+    reads each drawn pool entry once and takes its touched buckets from
+    the ids the driver already holds, with no job to rediscover them."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from ontoea_spark.training.trainer import _batch_index
+
+    tri, _, _ = _fit_arrays(bench_data)
+    triples_df = (
+        spark.createDataFrame(pd.DataFrame(tri, columns=["h", "r", "t"]))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+    n_b = max(1, -(-len(tri) // TrainConfig().batch_size))
+    batch = triples_df.filter(
+        _batch_index(F.col("h"), F.col("r"), F.col("t"), 7919, n_b) == 0
+    )
+    counts = {}
+    for side in ("slice", "store"):
+        cfg = TrainConfig(dim=16, seed=7, gradient_mode="spark")
+        m = OntoEATrainer(bench_data.n_ent, bench_data.n_rel, bench_data.n_cls, cfg)
+        m.refresh_neighbor_pool()
+        if side == "store":
+            m._ent_store = SparkEntStore.from_numpy(spark, m.ent, cfg.lr)
+            m._neighbor_pool = SparkNeighborPool.build(
+                spark, m._ent_store.ent_df(), m._pool_width()
+            )
+            m.ent = m._opt_ent = None
+        counts[side] = _jobs(
+            spark, f"e2-step-{side}", lambda: m._hash_step(batch, salt=0)
+        )
+    assert counts["slice"] <= 3, counts
+    assert counts["store"] <= 11, counts
