@@ -249,14 +249,15 @@ class SparkEntStore:
         order = np.argsort(pdf["idx"].to_numpy())
         return rows[order]
 
-    def to_numpy(self) -> np.ndarray:
+    def to_numpy(self, col: str = "w") -> np.ndarray:
         """Materialize the full matrix on the driver — small-scale
         convenience (tests, post-fit evaluation at bench sizes). At real
-        scale read :meth:`ent_df` or write it to parquet instead."""
-        pdf = self._union().select("idx", "w").toPandas()
+        scale read :meth:`ent_df` or write it to parquet instead.
+        ``col='g2'`` returns the Adagrad accumulator instead."""
+        pdf = self._union().select("idx", col).toPandas()
         out = np.empty((self.n_ent, self.dim))
         out[pdf["idx"].to_numpy()] = np.asarray(
-            pdf["w"].to_list(), dtype=np.float64
+            pdf[col].to_list(), dtype=np.float64
         )
         return out
 

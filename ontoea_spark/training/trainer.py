@@ -472,11 +472,23 @@ class OntoEATrainer:
         pool row distributed, and only the n x pool_width id matrix (the
         thing that must be broadcast for sampling anyway) is collected.
         Same (sim desc, id asc) row order as the local refresh —
-        pool-parity is unit-tested."""
+        pool-parity is unit-tested.
+
+        With the weights in a SparkEntStore the pool never leaves the
+        cluster: the same blocked top-k join over the store's (id, vec)
+        view, kept as a SparkNeighborPool that the negative derivation
+        reads entry by entry."""
         import pandas as pd
 
         from ontoea_spark.operators import simjoin as SJ
 
+        if self.ent is None:
+            from ontoea_spark.training.paramstore import SparkNeighborPool
+
+            self._neighbor_pool = SparkNeighborPool.build(
+                spark, self._ent_store.ent_df(), self._pool_width()
+            )
+            return
         n, dim = self.ent.shape
         num = self._pool_width()
         e_df = spark.createDataFrame(
@@ -722,22 +734,7 @@ class OntoEATrainer:
                             "pool_mode='spark' needs a SparkSession "
                             "(use gradient_mode='spark')"
                         )
-                    if store_mode:
-                        # the pool never leaves the cluster: built from
-                        # the store's (id, vec) view by the same blocked
-                        # top-k join, kept as a DataFrame, read by the
-                        # negative derivation entry by entry
-                        from ontoea_spark.training.paramstore import (
-                            SparkNeighborPool,
-                        )
-
-                        self._neighbor_pool = SparkNeighborPool.build(
-                            spark,
-                            self._ent_store.ent_df(),
-                            self._pool_width(),
-                        )
-                    else:
-                        self.refresh_neighbor_pool_spark(spark)
+                    self.refresh_neighbor_pool_spark(spark)
                 else:
                     self.refresh_neighbor_pool()
             # E2: sub_epoch epochs of minibatched triples
@@ -936,9 +933,13 @@ class OntoEATrainer:
 def _batch_index(h, r, t, salt: int, n_b: int):
     """The E2 hash minibatch of each triple for one epoch: a salted hash
     of (h, r, t) split into ``n_b`` disjoint batches. One formula for
-    NumPy id arrays and Spark long Columns alike — every term is
-    non-negative, so ``% 2**31`` is the 31-bit mask and ``%`` is pmod."""
-    return ((h * 2654435761 + r * 97 + t * 1000003 + salt) % 2**31) % n_b
+    NumPy id arrays and Spark long Columns alike. Ids above ~3.47e9
+    overflow the int64 sum: NumPy and non-ANSI Spark both wrap it (ANSI
+    Spark raises). NumPy's ``%`` floors but Spark's keeps the sign, so
+    the ``+ 2**31`` round makes the 31-bit residue non-negative on both,
+    and every triple lands in one of ``range(n_b)``."""
+    x = (h * 2654435761 + r * 97 + t * 1000003 + salt) % 2**31
+    return ((x + 2**31) % 2**31) % n_b
 
 
 def _hashneg_negatives(h, r, t, n_ent, cfg, salt=0, pool=None):

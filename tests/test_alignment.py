@@ -297,9 +297,11 @@ def test_training_determinism(bench_data):
 
 def test_distributed_gradients_match_driver(spark, bench_data):
     """The mapInPandas gradient shards of one spark-mode E2 step must sum
-    to the same update regardless of partitioning (scale-out
+    to the same gradient regardless of partitioning (scale-out
     correctness), over either entity-weight side: the driver arrays and
-    the SparkEntStore."""
+    the SparkEntStore. After one step from a zero Adagrad accumulator
+    the accumulator is g², so its square root is |g|, and the weights
+    moved by about -lr·sign(g): together they pin the summed gradient."""
     from ontoea_spark.training.paramstore import SparkEntStore
 
     cfg = TrainConfig(dim=16, seed=3)
@@ -322,11 +324,19 @@ def test_distributed_gradients_match_driver(spark, bench_data):
                 m.ent = model.ent.copy()
             m.rel = model.rel.copy()
             loss = m._hash_step(edges.repartition(parts), salt=0)
-            ent = m.ent if store is None else store.to_numpy()
-            runs[side, parts] = (loss, ent, m.rel)
-    l1, e1, r1 = runs["driver", 2]
-    for l8, e8, r8 in runs.values():
+            if store is None:
+                ent, acc = m.ent, m._opt_ent.acc
+            else:
+                ent, acc = store.to_numpy(), store.to_numpy("g2")
+            runs[side, parts] = (
+                loss, ent, m.rel, np.sqrt(acc), np.sqrt(m._opt_rel.acc)
+            )
+    l1, e1, r1, ge1, gr1 = runs["driver", 2]
+    assert np.count_nonzero(ge1) > 0 and np.count_nonzero(gr1) > 0
+    for l8, e8, r8, ge8, gr8 in runs.values():
         assert abs(l1 - l8) < 1e-6 * max(1.0, abs(l1))
+        assert np.allclose(ge1, ge8, atol=1e-9)
+        assert np.allclose(gr1, gr8, atol=1e-9)
         assert np.allclose(e1, e8, atol=1e-9)
         assert np.allclose(r1, r8, atol=1e-9)
 
@@ -387,6 +397,27 @@ def test_batch_index_spark_matches_numpy(spark, bench_data):
         want = _batch_index(tri[:, 0], tri[:, 1], tri[:, 2], salt, n_b)
         assert len(tri) > 0 and len(set(want.tolist())) == n_b
         assert np.array_equal(pdf["b"].to_numpy(), want)
+    # ids past ~3.47e9 overflow the int64 hash sum; NumPy and non-ANSI
+    # Spark wrap it alike, and the batch must still be in range(n_b)
+    big = np.array(
+        [[4_000_000_000 + 7 * i, i % 3, 2**40 + 13 * i] for i in range(64)],
+        dtype=np.int64,
+    )
+    want = _batch_index(big[:, 0], big[:, 1], big[:, 2], 7919, 5)
+    assert ((0 <= want) & (want < 5)).all() and len(set(want.tolist())) > 1
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = (
+            spark.createDataFrame(
+                [tuple(int(v) for v in row) for row in big], "h long, r long, t long"
+            )
+            .select(_batch_index(F.col("h"), F.col("r"), F.col("t"), 7919, 5).alias("b"))
+            .toPandas()["b"].to_numpy()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert np.array_equal(got, want)
 
 
 def _fit_arrays(bench_data):
