@@ -27,8 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ontoea_spark.session import get_spark
 
 
 def _timed(fn, runs: int = 3) -> float:
@@ -46,15 +47,7 @@ def main() -> None:
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     n_verts = max(n_edges // 16, 1)
 
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("bench-canonical-tables")
-        .config("spark.sql.shuffle.partitions", str(n_buckets))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("bench-canonical-tables", master="local[*]", shuffle_partitions=n_buckets)
 
     # hub-skewed subjects: id^2 / n keeps ~sqrt-density at the low end
     edges = spark.range(n_edges).select(

@@ -20,8 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ontoea_spark.session import get_spark
 
 
 def main() -> None:
@@ -29,15 +30,7 @@ def main() -> None:
     n_delta = int(sys.argv[2]) if len(sys.argv) > 2 else 40_000
     n_ent = max(n_base // 4, 1)
 
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("bench-incremental-canonical")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("bench-incremental-canonical", master="local[*]", shuffle_partitions=32)
 
     from ontoea_spark.pipeline.canonicalize import (
         canonical_entity_map,

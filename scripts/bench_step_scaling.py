@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     import numpy as np
 
+    import __spark_entry__ as entrymod
     from ontoea_spark.session import get_spark
     from ontoea_spark.training.trainer import OntoEATrainer, TrainConfig
 
@@ -53,6 +54,7 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("bench-step-scaling", master=f"local[{cpus}]")
+    entrymod._ensure_shipped(spark)
     cfg = TrainConfig(dim=dim, seed=7)  # neg_per_pos default 10
     rng = np.random.default_rng(7)
 

@@ -50,6 +50,7 @@ def main() -> None:
     param_store = os.environ.get("FLAGSHIP_PARAM_STORE", "driver")
     store_gather = os.environ.get("FLAGSHIP_STORE_GATHER", "1") == "1"
 
+    import __spark_entry__ as entrymod
     from ontoea_spark.session import get_spark
     from ontoea_spark.training.align_pipeline import (
         evaluate_candidates,
@@ -61,6 +62,7 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     spark = get_spark("flagship_100k", master=f"local[{cpus}]")
+    entrymod._ensure_shipped(spark)
 
     t0 = time.time()
     b = generate_two_kg(
