@@ -241,13 +241,6 @@ def ranked_elements(
     return _rank(element_frequencies(triples, roles), [])
 
 
-def single_kg_ids(
-    triples: DataFrame, roles: tuple[str, ...] = ("s", "o")
-) -> DataFrame:
-    """D3: one-KG dictionary, id == rank. DataFrame[elem, freq, id]."""
-    return ranked_elements(triples, roles).withColumnRenamed("rank", "id")
-
-
 def _two_kg_occurrences(
     triples1: DataFrame, triples2: DataFrame, roles: tuple[str, ...]
 ) -> DataFrame:
@@ -331,8 +324,8 @@ def combined_dictionary_frame(all_triples: DataFrame, kg_expr) -> DataFrame:
     ``kg_expr``: Column mapping a triple row to its KG (1 or 2). An
     intermediate frame is cache()d (two consumers inside the rank);
     materialize the RESULT before fanning out to broadcast joins —
-    :func:`two_kg_dictionaries` does exactly that, and the checkpointed
-    pipeline snapshots it to parquet instead.
+    :func:`two_kg_dictionaries` does exactly that, and ``build_kg`` run
+    by the checkpointed runner snapshots it to parquet instead.
     """
     base = all_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     occs = (
@@ -343,6 +336,23 @@ def combined_dictionary_frame(all_triples: DataFrame, kg_expr) -> DataFrame:
         )
     )
     return _dictionary(occs, ["grp"])
+
+
+def dictionary_part(frame: DataFrame, grp: str) -> DataFrame:
+    """One dictionary (``grp`` 'ent' or 'rel') of the combined frame:
+    DataFrame[kg, elem, freq, rank, id]."""
+    return frame.filter(f"grp = '{grp}'").select("kg", "elem", "freq", "rank", "id")
+
+
+def dictionary_sizes(frame: DataFrame) -> tuple[int, int]:
+    """(n_ent, n_rel) row counts of the combined frame in ONE aggregate
+    job — callers feed them to the encode joins' broadcast gates instead
+    of paying one count job per dictionary side per encode call."""
+    sizes = {
+        r["grp"]: r["n"]
+        for r in frame.groupBy("grp").agg(F.count("*").alias("n")).collect()
+    }
+    return sizes.get("ent", 0), sizes.get("rel", 0)
 
 
 def two_kg_dictionaries(
@@ -358,10 +368,8 @@ def two_kg_dictionaries(
     |vocab| rows — exactly the thing you want materialized.
 
     Returns (ent_ids, rel_ids), each DataFrame[kg, elem, freq, rank, id].
-    With ``with_sizes=True`` additionally returns (n_ent, n_rel) row
-    counts, computed in ONE aggregate job over the materialized frame —
-    callers feed them to the encode joins' broadcast gates instead of
-    paying one count job per dictionary side per encode call.
+    With ``with_sizes=True`` additionally returns (n_ent, n_rel) from
+    :func:`dictionary_sizes`.
     """
     # with_sizes: lazy checkpoint — the sizes aggregate right below is
     # the materializing job. Without sizes the eager materialization
@@ -369,16 +377,8 @@ def two_kg_dictionaries(
     out = combined_dictionary_frame(all_triples, kg_expr).localCheckpoint(
         eager=not with_sizes
     )
-    cols = ["kg", "elem", "freq", "rank", "id"]
-    ent = out.filter("grp = 'ent'").select(*cols)
-    rel = out.filter("grp = 'rel'").select(*cols)
-    if with_sizes:
-        sizes = {
-            r["grp"]: r["n"]
-            for r in out.groupBy("grp").agg(F.count("*").alias("n")).collect()
-        }
-        return ent, rel, sizes.get("ent", 0), sizes.get("rel", 0)
-    return ent, rel
+    parts = (dictionary_part(out, "ent"), dictionary_part(out, "rel"))
+    return (*parts, *dictionary_sizes(out)) if with_sizes else parts
 
 
 def single_kg_dictionaries(triples: DataFrame, with_sizes: bool = False) -> tuple:

@@ -49,9 +49,10 @@ from ontoea_spark.operators.dictionary import (
     _set_join,
     anti_join_keep_small,
     encode_triples,
-    single_kg_dictionaries,
 )
+from ontoea_spark.operators.filters import parse_entities
 from ontoea_spark.operators.graph import connected_components
+from ontoea_spark.pipeline.kg_build import Stage, in_memory, staged_dictionaries
 
 
 @dataclass
@@ -382,9 +383,13 @@ def canonicalize_kg(
     triples1: DataFrame,
     triples2: DataFrame,
     links: DataFrame,
+    stage: Stage = in_memory,
 ) -> CanonicalKG:
     """Full canonicalization: links -> components -> rewrite -> unified
-    dictionary -> edge/vertex tables.
+    dictionary -> edge/vertex tables, as stages canonical_map,
+    canonical_triples, canonical_{dictionaries,ent_ids,rel_ids},
+    canonical_edges and canonical_vertices, each run by ``stage``
+    (``kg_build.Stage``).
 
     The unified dictionary is the one-KG path (D3 ``mapping_id_oneKG``,
     reference read.py:64-69: id == frequency rank) over the CANONICAL
@@ -392,40 +397,41 @@ def canonicalize_kg(
     exactly the property the downstream adjacency/degree consumers want.
     """
     all_t = triples1.unionByName(triples2)
-    mapping, small = _prepared_map(canonical_entity_map(links))
-    canon = (
-        _rewrite_so(all_t, mapping, small)
-        .select("s", "p", "o")
-        .distinct()
+    # as _prepared_map: materialized once, gated on its actual row count
+    mapping = stage("canonical_map", lambda: canonical_entity_map(links), local="lazy")
+    small = _fits_broadcast(mapping.count())
+    canon = stage(
+        "canonical_triples",
+        lambda: _rewrite_so(all_t, mapping, small).select("s", "p", "o").distinct(),
         # eager: the dictionary builder references this frame from
         # THREE union branches inside its materializing job — lazy
         # checkpointing here was measured to race-recompute the rewrite
         # subtree per branch
-        .localCheckpoint(eager=True)
+        local="eager",
     )
     # both unified dictionaries in ONE grouped-rank pass over the
-    # canonical triples (one freq shuffle + one range shuffle instead of
-    # two full single_kg_ids scans), sizes from one aggregate job feeding
-    # the encode joins' broadcast gates (no per-side count jobs)
-    ent_ids, rel_ids, n_ent, n_rel = single_kg_dictionaries(
-        canon, with_sizes=True
+    # canonical triples (one freq shuffle + one range shuffle), sizes from
+    # one aggregate job feeding the encode joins' broadcast gates
+    ent_ids, rel_ids, n_ent, n_rel = staged_dictionaries(
+        stage, canon, F.lit(1), prefix="canonical_", cols=("elem", "freq", "id")
     )
-    edges = encode_triples(
-        canon,
-        ent_ids,
-        rel_ids,
-        ent_small=_fits_broadcast(n_ent),
-        rel_small=_fits_broadcast(n_rel),
+    edges = stage(
+        "canonical_edges",
+        lambda: encode_triples(
+            canon,
+            ent_ids,
+            rel_ids,
+            ent_small=_fits_broadcast(n_ent),
+            rel_small=_fits_broadcast(n_rel),
+        ),
     )
-    pre_entities = (
-        all_t.select(F.col("s").alias("entity"))
-        .unionAll(all_t.select(F.col("o").alias("entity")))
-        .distinct()
+    prov = vertex_provenance(parse_entities(all_t), mapping, small)
+    vertices = stage(
+        "canonical_vertices",
+        lambda: ent_ids.select(F.col("id"), F.col("elem").alias("uri"), F.col("freq"))
+        .join(prov, "uri")
+        .select("id", "uri", "freq", "srcs"),
     )
-    prov = vertex_provenance(pre_entities, mapping, small)
-    vertices = ent_ids.select(
-        F.col("id"), F.col("elem").alias("uri"), F.col("freq")
-    ).join(prov, "uri").select("id", "uri", "freq", "srcs")
     return CanonicalKG(
         triples=canon,
         ent_ids=ent_ids,

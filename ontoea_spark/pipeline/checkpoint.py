@@ -2,20 +2,33 @@
 (BASELINE.json north rule; SURVEY.md §2.13/§4 — the reference's closest
 analogue is the HDF5 conflict-matrix cache, check.py:94-99).
 
+This module is stage bookkeeping only. The DAGs are ``build_kg`` and
+``canonicalize_kg``; :func:`run_pipeline_checkpointed` and
+:func:`run_canonicalize_checkpointed` run them with
+:meth:`CheckpointManager.run_stage` as their stage runner.
+
 Model: every pipeline stage materializes to parquet under
 ``<base>/<stage>/`` and appends a manifest entry
-(``<base>/_manifest.json``) recording row count, schema, partition
-count, and wall seconds. On re-run, a stage whose manifest entry exists
-and whose parquet is readable is *skipped* — the DataFrame is reloaded
-from the snapshot, so a killed job resumes at the first incomplete
-stage. Manifest writes are atomic (tmp file + rename).
+(``<base>/_manifest.json``) recording row count, schema, and wall
+seconds. On re-run, a stage whose manifest entry exists and whose
+parquet is readable is *skipped* — the DataFrame is reloaded from the
+snapshot, so a killed job resumes at the first incomplete stage.
+Manifest writes are atomic (tmp file + rename).
 
-Lineage/metrics: :func:`with_partition_metrics` materializes a
-per-partition row-count table for a stage (spark_partition_id groupBy —
-one tiny shuffle over already-computed data);
-:func:`drop_metrics` records rows dropped by inner-join dictionary
-encoding (the reference drops silently, read.py:135-136 — we count).
-Metrics land in ``<base>/_metrics/<stage>/`` as parquet.
+Failure policy of the build and canonicalization DAG: consumers read
+each stage's parquet snapshot, so a lost executor or block recomputes
+from the last completed snapshot at most, and a killed job resumes at
+the first incomplete stage. The plain ``build_kg`` / ``canonicalize_kg``
+(runner ``kg_build.in_memory``) keep shared stages as ``localCheckpoint``
+blocks: a lost block fails the job and nothing resumes it. ``run_job.py``
+runs the checkpointed runners, the build's reliable path.
+
+Lineage/metrics: each completed stage also writes a per-partition
+row-count table (spark_partition_id groupBy — one tiny shuffle over the
+snapshot) to ``<base>/_metrics/<stage>/``;
+:meth:`CheckpointManager.record_drop_metrics` records the rows an
+inner-join dictionary encode dropped (the reference drops silently,
+read.py:135-136 — we count), from the manifest's row counts.
 """
 
 from __future__ import annotations
@@ -24,9 +37,15 @@ import json
 import posixpath
 import time
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ontoea_spark.functions.hashing import portable_hash64
+from ontoea_spark.pipeline.canonicalize import canonicalize_kg
+from ontoea_spark.pipeline.kg_build import Stage, build_kg
+from ontoea_spark.session import local_frame
 
 
 class _HadoopFS:
@@ -160,31 +179,49 @@ class CheckpointManager:
         )
         pm.write.mode("overwrite").parquet(self._metrics_path(stage))
 
-    def record_drop_metrics(
-        self, stage: str, rows_in: int, rows_out: int
-    ) -> None:
-        """Silent-filter accounting (P4/P5 inner-join drops)."""
+    def record_drop_metrics(self, stage: str, input_stage: str) -> None:
+        """Silent-filter accounting (P4/P5 inner-join drops): the rows
+        ``stage`` lost against ``input_stage``, both completed — read
+        from the manifest, no count job."""
         m = self.manifest()
-        entry = m["stages"].setdefault(stage, {})
-        entry["rows_in"] = rows_in
-        entry["rows_out"] = rows_out
-        entry["rows_dropped"] = rows_in - rows_out
+        entry = m["stages"][stage]
+        entry["rows_in"] = m["stages"][input_stage]["rows"]
+        entry["rows_out"] = entry["rows"]
+        entry["rows_dropped"] = entry["rows_in"] - entry["rows_out"]
         self._write_manifest(m)
 
     def partition_metrics(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._metrics_path(stage))
 
     def all_partition_metrics(self) -> DataFrame:
+        """(part_id, rows, stage) of every completed stage; no rows
+        before the first stage completes."""
         base = posixpath.join(self.base, "_metrics")
         stages = [
-            s for s in self.fs.listdir(base)
+            s for s in (self.fs.listdir(base) if self.fs.exists(base) else [])
             if self.fs.is_dir(posixpath.join(base, s))
         ]
-        dfs = [self.partition_metrics(s) for s in sorted(stages)]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        if not stages:
+            return local_frame(self.spark, [], "part_id int, rows long, stage string")
+        return reduce(
+            DataFrame.unionByName, [self.partition_metrics(s) for s in sorted(stages)]
+        )
+
+
+def _parquet_stages(
+    cp: CheckpointManager, layouts: dict, suffix: str = ""
+) -> tuple[Stage, dict[str, str]]:
+    """``cp.run_stage`` as a ``kg_build.Stage``: stage ``name`` snapshots to
+    ``name + suffix`` with its parquet layout from ``layouts`` (the
+    snapshot replaces the in-memory ``local`` checkpoint). Also returns
+    the name -> snapshot-name map, filled as the DAG runs."""
+    names: dict[str, str] = {}
+
+    def stage(name: str, build: Callable[[], DataFrame], local=None) -> DataFrame:
+        names[name] = name + suffix
+        return cp.run_stage(names[name], build, **layouts.get(name, {}))
+
+    return stage, names
 
 
 def run_pipeline_checkpointed(
@@ -193,81 +230,22 @@ def run_pipeline_checkpointed(
     base_dir: str,
     partitions: int = 32,
 ) -> dict[str, DataFrame]:
-    """The KG-construction DAG as resumable checkpointed stages:
-
-        pages_text -> triples -> ent_ids/rel_ids -> edges -> vertices/links
-
-    Each stage reloads from its snapshot on resume; edges are
+    """``build_kg`` with every stage a resumable snapshot. Edges are
     repartitioned by s_id and partitioned by kg at the sink (co-located
-    adjacency scans downstream — the Iceberg-shaped layout).
-    """
-    from ontoea_spark.operators.dictionary import (
-        combined_dictionary_frame,
-        encode_triples_two_kg,
-    )
-    from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
-    from ontoea_spark.pipeline.kg_build import gold_links, split_two_kgs
-
+    adjacency scans downstream — the Iceberg-shaped layout), vertices
+    partitioned by kg."""
     cp = CheckpointManager(spark, base_dir)
-
-    docs_text = cp.run_stage(
-        "pages_text", lambda: split_two_kgs(extract_pages_text(pages))
+    stage, _ = _parquet_stages(
+        cp,
+        {
+            "edges": {"partition_by": "kg", "repartition": (partitions, "s_id")},
+            "vertices": {"partition_by": "kg"},
+        },
     )
-    triples = cp.run_stage(
-        "triples",
-        lambda: extract_triples(
-            docs_text.filter(F.col("kg") == "kg1"), namespace_col="kg"
-        )
-        .withColumn("kgn", F.lit(1).cast("long"))
-        .unionByName(
-            extract_triples(
-                docs_text.filter(F.col("kg") == "kg2"), namespace_col="kg"
-            ).withColumn("kgn", F.lit(2).cast("long"))
-        ),
-    )
-    t1 = triples.filter("kgn = 1").select("s", "p", "o")
-    t2 = triples.filter("kgn = 2").select("s", "p", "o")
-    # one pass over the triple snapshot builds BOTH dictionaries for
-    # BOTH KGs; the ent/rel stages are then cheap filters of the snapshot
-    dicts = cp.run_stage(
-        "dictionaries",
-        lambda: combined_dictionary_frame(triples, F.col("kgn")),
-    )
-    cols = ["kg", "elem", "freq", "rank", "id"]
-    ent_ids = cp.run_stage(
-        "ent_ids", lambda: dicts.filter("grp = 'ent'").select(*cols)
-    )
-    rel_ids = cp.run_stage(
-        "rel_ids", lambda: dicts.filter("grp = 'rel'").select(*cols)
-    )
-    edges = cp.run_stage(
-        "edges",
-        lambda: encode_triples_two_kg(triples, ent_ids, rel_ids),
-        partition_by="kg",
-        repartition=(partitions, "s_id"),
-    )
-    if "rows_dropped" not in cp.manifest()["stages"].get("edges", {}):
-        cp.record_drop_metrics(
-            "edges", rows_in=triples.count(), rows_out=edges.count()
-        )
-    vertices = cp.run_stage(
-        "vertices",
-        lambda: ent_ids.select(
-            "id", F.col("elem").alias("uri"), "kg", "freq"
-        ),
-        partition_by="kg",
-    )
-    links = cp.run_stage("links", lambda: gold_links(t1, t2))
-    return {
-        "pages_text": docs_text,
-        "triples": triples,
-        "ent_ids": ent_ids,
-        "rel_ids": rel_ids,
-        "edges": edges,
-        "vertices": vertices,
-        "links": links,
-        "_manager": cp,
-    }
+    kg = build_kg(pages, stage)
+    cp.record_drop_metrics("edges", "triples")
+    keys = ("pages_text", "triples", "ent_ids", "rel_ids", "edges", "vertices", "links")
+    return {**{k: getattr(kg, k) for k in keys}, "_manager": cp}
 
 
 def run_canonicalize_checkpointed(
@@ -275,18 +253,14 @@ def run_canonicalize_checkpointed(
     links: DataFrame | None = None,
     partitions: int = 32,
 ) -> dict[str, DataFrame]:
-    """Canonicalization (pipeline/canonicalize.py) as resumable stages on
-    top of a completed :func:`run_pipeline_checkpointed` build:
-
-        canonical_map -> canonical_triples -> canonical dictionaries
-        -> canonical_edges (partitioned, s_id-repartitioned) /
-           canonical_vertices
+    """``canonicalize_kg`` with every stage a resumable snapshot, over the
+    triples of a completed :func:`run_pipeline_checkpointed` build;
+    canonical edges are repartitioned by s_id. A killed canonicalization
+    resumes without re-running the build OR the component iteration.
 
     ``links``: the (e1, e2) pair table to merge on — the build's own
     gold links by default, or predicted matches from the alignment
-    stage (align_pipeline.predict_matches) plus train seeds. Each stage
-    reloads from its snapshot on resume, so a killed canonicalization
-    resumes without re-running the build OR the component iteration.
+    stage (align_pipeline.predict_matches) plus train seeds.
 
     Stage names carry a FINGERPRINT of the link set (row count + an
     order-independent content hash, one O(|links|) aggregate): a resume
@@ -295,80 +269,30 @@ def run_canonicalize_checkpointed(
     ``--align`` predictions) gets fresh stages instead of silently
     reusing a canonical graph built from the other link set.
     """
-    from ontoea_spark.functions.hashing import portable_hash64
-    from ontoea_spark.operators.dictionary import encode_triples, single_kg_ids
-    from ontoea_spark.pipeline.canonicalize import (
-        canonical_entity_map,
-        rewrite_triples,
-        vertex_provenance,
-    )
-
     cp: CheckpointManager = build["_manager"]
     if links is None:
         links = build["links"]
-    t = build["triples"].select("s", "p", "o")
-
     fp_row = links.agg(
         F.count("*").alias("n"),
         F.sum(portable_hash64(F.concat_ws("\t", "e1", "e2"))).alias("h"),
     ).first()
     fp = f"{fp_row['n']}_{(fp_row['h'] or 0) & 0xFFFFFFFFFFFF:x}"
-
-    def _st(name: str) -> str:
-        return f"{name}_{fp}"
-
-    cmap = cp.run_stage(_st("canonical_map"), lambda: canonical_entity_map(links))
-    canon = cp.run_stage(
-        _st("canonical_triples"), lambda: rewrite_triples(t, cmap)
+    stage, names = _parquet_stages(
+        cp, {"canonical_edges": {"repartition": (partitions, "s_id")}}, f"_{fp}"
     )
-    cent = cp.run_stage(_st("canonical_ent_ids"), lambda: single_kg_ids(canon))
-    crel = cp.run_stage(
-        _st("canonical_rel_ids"), lambda: single_kg_ids(canon, roles=("p",))
+    t = build["triples"]
+    kg = canonicalize_kg(
+        t.filter(F.col("s").startswith("kg1:")),
+        t.filter(F.col("s").startswith("kg2:")),
+        links,
+        stage,
     )
-    cedges = cp.run_stage(
-        _st("canonical_edges"),
-        lambda: encode_triples(canon, cent, crel),
-        repartition=(partitions, "s_id"),
-    )
-    if "rows_dropped" not in cp.manifest()["stages"].get(
-        _st("canonical_edges"), {}
-    ):
-        cp.record_drop_metrics(
-            _st("canonical_edges"), rows_in=canon.count(), rows_out=cedges.count()
-        )
-
-    def _vertices() -> DataFrame:
-        pre = (
-            t.select(F.col("s").alias("entity"))
-            .unionAll(t.select(F.col("o").alias("entity")))
-            .distinct()
-        )
-        prov = vertex_provenance(pre, cmap)
-        return (
-            cent.select(F.col("id"), F.col("elem").alias("uri"), F.col("freq"))
-            .join(prov, "uri")
-            .select("id", "uri", "freq", "srcs")
-        )
-
-    cverts = cp.run_stage(_st("canonical_vertices"), _vertices)
+    cp.record_drop_metrics(names["canonical_edges"], names["canonical_triples"])
+    keys = ("triples", "ent_ids", "rel_ids", "edges", "vertices")
     return {
-        "canonical_map": cmap,
-        "canonical_triples": canon,
-        "canonical_ent_ids": cent,
-        "canonical_rel_ids": crel,
-        "canonical_edges": cedges,
-        "canonical_vertices": cverts,
+        "canonical_map": kg.mapping,
+        **{f"canonical_{k}": getattr(kg, k) for k in keys},
         "link_fingerprint": fp,
-        "_stage_names": {
-            n: _st(n)
-            for n in (
-                "canonical_map",
-                "canonical_triples",
-                "canonical_ent_ids",
-                "canonical_rel_ids",
-                "canonical_edges",
-                "canonical_vertices",
-            )
-        },
+        "_stage_names": names,
         "_manager": cp,
     }

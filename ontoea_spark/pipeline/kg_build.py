@@ -17,6 +17,7 @@ involved.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -24,14 +25,56 @@ from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
     _fits_broadcast,
+    combined_dictionary_frame,
+    dictionary_part,
+    dictionary_sizes,
     encode_triples_two_kg,
-    two_kg_dictionaries,
 )
 from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
+
+#: A stage runner, ``stage(name, build, local=None) -> DataFrame``: the
+#: frame of stage ``name``, from ``build()`` when it must be computed.
+#: :func:`in_memory` is the plain runner; ``pipeline/checkpoint.py``'s
+#: runners snapshot each stage to parquet and resume.
+Stage = Callable[..., DataFrame]
+
+
+def in_memory(
+    name: str, build: Callable[[], DataFrame], local: str | None = None
+) -> DataFrame:
+    """The plain stage runner: ``local='lazy'``/``'eager'`` localCheckpoints
+    the stage so its consumers read one materialization; other stages
+    stay lazy plans."""
+    df = build()
+    return df if local is None else df.localCheckpoint(eager=local == "eager")
+
+
+def staged_dictionaries(
+    stage: Stage, triples: DataFrame, kg_expr, prefix: str = "", cols=None
+) -> tuple:
+    """Stages ``<prefix>dictionaries`` (one grouped-rank pass for both),
+    ``<prefix>ent_ids`` and ``<prefix>rel_ids`` (``cols`` of each, all by
+    default), plus (n_ent, n_rel) from one aggregate job. Under
+    :func:`in_memory` this is ``two_kg_dictionaries(..., with_sizes=True)``."""
+    dicts = stage(
+        f"{prefix}dictionaries",
+        lambda: combined_dictionary_frame(triples, kg_expr),
+        local="lazy",
+    )
+
+    def part(grp: str) -> DataFrame:
+        d = dictionary_part(dicts, grp)
+        return d if cols is None else d.select(*cols)
+
+    ent_ids = stage(f"{prefix}ent_ids", lambda: part("ent"))
+    rel_ids = stage(f"{prefix}rel_ids", lambda: part("rel"))
+    return (ent_ids, rel_ids, *dictionary_sizes(dicts))
 
 
 @dataclass
 class KGBuildResult:
+    pages_text: DataFrame  # (url, warc_ts, lang, text, kg)
+    triples: DataFrame  # (s, p, o) URIs of both KGs, kg<N>: prefixed
     triples1: DataFrame  # (s, p, o) URIs, kg1
     triples2: DataFrame
     ent_ids: DataFrame  # (kg, elem, freq, rank, id)
@@ -64,9 +107,10 @@ def gold_links(triples1: DataFrame, triples2: DataFrame) -> DataFrame:
     return e1.join(e2, "w").select("e1", "e2")
 
 
-def build_kg(pages: DataFrame) -> KGBuildResult:
-    docs_text = extract_pages_text(pages)
-    tagged = split_two_kgs(docs_text)
+def build_kg(pages: DataFrame, stage: Stage = in_memory) -> KGBuildResult:
+    """The build DAG as stages pages_text -> triples -> dictionaries ->
+    ent_ids/rel_ids -> edges -> vertices/links, each run by ``stage``."""
+    tagged = stage("pages_text", lambda: split_two_kgs(extract_pages_text(pages)))
     # ONE extraction + dedup pass over the corpus (the kg tag rides along
     # in the namespace prefix, so a single distinct covers both KGs),
     # shared by every downstream branch (dictionaries, edges, links).
@@ -74,33 +118,39 @@ def build_kg(pages: DataFrame) -> KGBuildResult:
     # sharing, but consumers' plans are truncated to the materialized
     # RDD — measured ~0.8s faster on the cold end-to-end pipeline pass
     # (cache keeps the full extraction lineage in every consumer plan)
-    all_triples = extract_triples(
-        tagged.select("kg", "text"), namespace_col="kg"
-    ).localCheckpoint(eager=False)
+    all_triples = stage(
+        "triples",
+        lambda: extract_triples(tagged.select("kg", "text"), namespace_col="kg"),
+        local="lazy",
+    )
     triples1 = all_triples.filter(F.col("s").startswith("kg1:"))
     triples2 = all_triples.filter(F.col("s").startswith("kg2:"))
     # both dictionaries for both KGs in ONE pass over the triple stream
     # (one freq shuffle + one range shuffle instead of four of each);
-    # with_sizes feeds the encode joins' broadcast gates from one
+    # the sizes feed the encode joins' broadcast gates from one
     # aggregate job instead of one count job per dictionary per call
     kg_expr = F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2))
-    ent_ids, rel_ids, n_ent, n_rel = two_kg_dictionaries(
-        all_triples, kg_expr, with_sizes=True
-    )
+    ent_ids, rel_ids, n_ent, n_rel = staged_dictionaries(stage, all_triples, kg_expr)
     # one-pass encode of BOTH KGs: three gated-broadcast joins total
     # (the per-KG encode pair costs six and scans the triples twice)
-    edges = encode_triples_two_kg(
-        all_triples.withColumn("kgn", kg_expr),
-        ent_ids,
-        rel_ids,
-        ent_small=_fits_broadcast(n_ent),
-        rel_small=_fits_broadcast(n_rel),
+    edges = stage(
+        "edges",
+        lambda: encode_triples_two_kg(
+            all_triples.withColumn("kgn", kg_expr),
+            ent_ids,
+            rel_ids,
+            ent_small=_fits_broadcast(n_ent),
+            rel_small=_fits_broadcast(n_rel),
+        ),
     )
-    vertices = ent_ids.select(
-        F.col("id"), F.col("elem").alias("uri"), F.col("kg"), F.col("freq")
+    vertices = stage(
+        "vertices",
+        lambda: ent_ids.select("id", F.col("elem").alias("uri"), "kg", "freq"),
     )
-    links = gold_links(triples1, triples2)
+    links = stage("links", lambda: gold_links(triples1, triples2))
     return KGBuildResult(
+        pages_text=tagged,
+        triples=all_triples,
         triples1=triples1,
         triples2=triples2,
         ent_ids=ent_ids,

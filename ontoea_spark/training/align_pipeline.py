@@ -3,8 +3,8 @@
 
 Two front doors, one core:
 
-* :func:`prepare_from_pages` — the web corpus path: pages -> build_kg
-  (extract/dedup/encode) -> crossview fixture;
+* :func:`prepare_from_build` — the web corpus path: the triples and
+  gold links of a finished build (extract/dedup) -> crossview fixture;
 * :func:`prepare_from_parts` — any two triple sets + gold links + cv
   links (used by the D-W-15K-style synthetic benchmark, benchgen.py).
 
@@ -187,17 +187,20 @@ def prepare_from_parts(
     )
 
 
-def prepare_from_pages(spark: SparkSession, pages: DataFrame) -> AlignmentData:
-    """Web-corpus path: extraction pipeline feeds the same core."""
-    from ontoea_spark.pipeline.kg_build import build_kg
-
-    kg = build_kg(pages)
+def prepare_from_build(
+    spark: SparkSession, triples: DataFrame, links: DataFrame
+) -> AlignmentData:
+    """Web-corpus path: a finished build's ``triples`` (s, p, o, kg<N>:
+    prefixed; ``KGBuildResult.triples`` or the checkpointed build's
+    snapshot) and gold ``links`` feed the same core."""
+    triples1 = triples.filter(F.col("s").startswith("kg1:")).select("s", "p", "o")
+    triples2 = triples.filter(F.col("s").startswith("kg2:")).select("s", "p", "o")
     word = F.expr("substr(entity, 5)")
-    ents1 = kg.triples1.selectExpr("s AS entity").union(
-        kg.triples1.selectExpr("o")
+    ents1 = triples1.selectExpr("s AS entity").union(
+        triples1.selectExpr("o")
     ).distinct()
-    ents2 = kg.triples2.selectExpr("s AS entity").union(
-        kg.triples2.selectExpr("o")
+    ents2 = triples2.selectExpr("s AS entity").union(
+        triples2.selectExpr("o")
     ).distinct()
     cv = (
         ents1.filter(F.length(word) > 5)
@@ -209,7 +212,7 @@ def prepare_from_pages(spark: SparkSession, pages: DataFrame) -> AlignmentData:
             )
         )
     )
-    return prepare_from_parts(spark, kg.triples1, kg.triples2, kg.links, cv)
+    return prepare_from_parts(spark, triples1, triples2, links, cv)
 
 
 def train(data: AlignmentData, cfg: TrainConfig | None = None) -> OntoEATrainer:
@@ -463,6 +466,18 @@ def _fused_reranked(
     return reranked, gold
 
 
+def _uri_pairs(pairs: DataFrame, ent_dict: DataFrame) -> DataFrame:
+    """(id1, id2) pairs -> (e1, e2) URI pairs through the (kg, elem, id)
+    entity dictionary: id1 looks up kg 1, id2 kg 2."""
+    d1 = ent_dict.filter("kg = 1").select(
+        F.col("id").alias("id1"), F.col("elem").alias("e1")
+    )
+    d2 = ent_dict.filter("kg = 2").select(
+        F.col("id").alias("id2"), F.col("elem").alias("e2")
+    )
+    return pairs.join(d1, "id1").join(d2, "id2").select("e1", "e2")
+
+
 def predict_matches(
     spark: SparkSession,
     data: AlignmentData,
@@ -500,13 +515,7 @@ def predict_matches(
     pred = pred.select(F.col("lid").alias("id1"), F.col("rid").alias("id2"))
     if data.ent_dict is None:
         return pred
-    d1 = data.ent_dict.filter("kg = 1").select(
-        F.col("id").alias("id1"), F.col("elem").alias("e1")
-    )
-    d2 = data.ent_dict.filter("kg = 2").select(
-        F.col("id").alias("id2"), F.col("elem").alias("e2")
-    )
-    return pred.join(d1, "id1").join(d2, "id2").select("e1", "e2")
+    return _uri_pairs(pred, data.ent_dict)
 
 
 def seed_matches(data: AlignmentData) -> DataFrame:
@@ -515,14 +524,9 @@ def seed_matches(data: AlignmentData) -> DataFrame:
     Requires ``data.ent_dict``."""
     if data.ent_dict is None:
         raise ValueError("seed_matches needs data.ent_dict (URI dictionary)")
-    seeds = data.links_split.filter(F.col("split") == "train")
-    d1 = data.ent_dict.filter("kg = 1").select(
-        F.col("id").alias("id1"), F.col("elem").alias("e1")
+    return _uri_pairs(
+        data.links_split.filter(F.col("split") == "train"), data.ent_dict
     )
-    d2 = data.ent_dict.filter("kg = 2").select(
-        F.col("id").alias("id2"), F.col("elem").alias("e2")
-    )
-    return seeds.join(d1, "id1").join(d2, "id2").select("e1", "e2")
 
 
 def run_benchmark_alignment(

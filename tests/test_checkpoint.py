@@ -17,6 +17,12 @@ from tests.conftest import REPO, SF_SMOKE
 from pyspark.sql import functions as F
 
 
+def _rows(df):
+    """A frame's rows as a sorted list, columns in name order (a
+    partitioned snapshot reads its partition column back last)."""
+    return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
 @pytest.fixture()
 def pages(spark):
     from ontoea_spark.pipeline.pages import synthesize_pages
@@ -58,6 +64,13 @@ def test_checkpoint_resume_skips_completed_stages(spark, pages, tmp_path):
     out2 = run_pipeline_checkpointed(spark, pages, base, partitions=4)
     assert out2["links"].count() == n_links
 
+    # the checkpointed runner is build_kg: same rows as the plain path
+    from ontoea_spark.pipeline.kg_build import build_kg
+
+    plain = build_kg(pages)
+    for name in ("edges", "vertices", "links"):
+        assert _rows(out2[name]) == _rows(getattr(plain, name)), name
+
 
 def test_partition_metrics_and_drop_accounting(spark, pages, tmp_path):
     from ontoea_spark.pipeline.checkpoint import run_pipeline_checkpointed
@@ -78,6 +91,16 @@ def test_partition_metrics_and_drop_accounting(spark, pages, tmp_path):
     assert st["rows_dropped"] == st["rows_in"] - st["rows_out"]
     # dictionary coverage is total on this corpus: nothing silently dropped
     assert st["rows_dropped"] == 0
+
+
+def test_partition_metrics_before_any_stage(spark, tmp_path):
+    """A checkpoint dir with no completed stage has no metrics rows yet:
+    an empty (part_id, rows, stage) frame, not an error."""
+    from ontoea_spark.pipeline.checkpoint import CheckpointManager
+
+    pm = CheckpointManager(spark, str(tmp_path / "fresh")).all_partition_metrics()
+    assert pm.columns == ["part_id", "rows", "stage"]
+    assert pm.collect() == []
 
 
 def test_spark_submit_pyfiles_job(tmp_path):
@@ -177,6 +200,21 @@ def test_canonicalize_checkpointed_resume(spark, pages, tmp_path):
     df = cp.run_stage(canon["_stage_names"]["canonical_edges"], boom)
     edges2 = [tuple(r) for r in df.orderBy("s_id", "p_id", "o_id").collect()]
     assert edges1 == edges2
+
+    # the checkpointed runner is canonicalize_kg: same rows as the plain
+    # path over the plain build of the same pages
+    from ontoea_spark.pipeline.canonicalize import canonicalize_kg
+    from ontoea_spark.pipeline.kg_build import build_kg
+
+    kg = build_kg(pages)
+    plain = canonicalize_kg(kg.triples1, kg.triples2, kg.links)
+    for name, attr in (
+        ("canonical_edges", "edges"),
+        ("canonical_vertices", "vertices"),
+        ("canonical_ent_ids", "ent_ids"),
+        ("canonical_rel_ids", "rel_ids"),
+    ):
+        assert _rows(canon[name]) == _rows(getattr(plain, attr)), name
 
     # DIFFERENT links on the same checkpoint dir must NOT reuse the old
     # snapshots: the link fingerprint names fresh stages, so the merge

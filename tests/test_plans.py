@@ -452,3 +452,32 @@ def test_row_lists_become_frames_only_through_local_frame():
             if not (is_pandas(arg) or named):
                 bad.append(f"{path.relative_to(REPO)}:{n.lineno}")
     assert bad == [], bad
+
+
+def test_checkpoint_runs_the_dags_not_their_steps():
+    """Source guard: ``pipeline/checkpoint.py`` runs ``build_kg`` and
+    ``canonicalize_kg`` with its stage runner and calls no extraction,
+    dictionary, encode or canonicalization step itself — each DAG has
+    one definition."""
+    import ast
+    import pathlib
+
+    from ontoea_spark.operators import dictionary
+    from ontoea_spark.pipeline import canonicalize, extract, kg_build
+
+    steps = {
+        name
+        for mod in (extract, dictionary, canonicalize, kg_build)
+        for name, obj in vars(mod).items()
+        if callable(obj) and getattr(obj, "__module__", None) == mod.__name__
+    } - {"build_kg", "canonicalize_kg", "Stage"}
+    tree = ast.parse(
+        pathlib.Path(REPO, "ontoea_spark", "pipeline", "checkpoint.py").read_text()
+    )
+    called = {
+        n.func.id if isinstance(n.func, ast.Name) else n.func.attr
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, (ast.Name, ast.Attribute))
+    }
+    assert {"build_kg", "canonicalize_kg"} <= called
+    assert sorted(called & steps) == []
