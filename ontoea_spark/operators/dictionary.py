@@ -35,6 +35,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ontoea_spark.session import Stage, in_memory
+
 #: Row-count ceiling for a size-gated broadcast hint: the one policy
 #: behind every dictionary join (D5-D7), link/entity filter (P6/P7/J2/J4)
 #: and set difference whose build side grows with the corpus.  The entity
@@ -324,8 +326,8 @@ def combined_dictionary_frame(all_triples: DataFrame, kg_expr) -> DataFrame:
     ``kg_expr``: Column mapping a triple row to its KG (1 or 2). An
     intermediate frame is cache()d (two consumers inside the rank);
     materialize the RESULT before fanning out to broadcast joins —
-    :func:`two_kg_dictionaries` does exactly that, and ``build_kg`` run
-    by the checkpointed runner snapshots it to parquet instead.
+    :func:`two_kg_dictionaries` does exactly that (a checkpointing stage
+    runner snapshots it to parquet instead).
     """
     base = all_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     occs = (
@@ -338,29 +340,16 @@ def combined_dictionary_frame(all_triples: DataFrame, kg_expr) -> DataFrame:
     return _dictionary(occs, ["grp"])
 
 
-def dictionary_part(frame: DataFrame, grp: str) -> DataFrame:
-    """One dictionary (``grp`` 'ent' or 'rel') of the combined frame:
-    DataFrame[kg, elem, freq, rank, id]."""
-    return frame.filter(f"grp = '{grp}'").select("kg", "elem", "freq", "rank", "id")
-
-
-def dictionary_sizes(frame: DataFrame) -> tuple[int, int]:
-    """(n_ent, n_rel) row counts of the combined frame in ONE aggregate
-    job — callers feed them to the encode joins' broadcast gates instead
-    of paying one count job per dictionary side per encode call."""
-    sizes = {
-        r["grp"]: r["n"]
-        for r in frame.groupBy("grp").agg(F.count("*").alias("n")).collect()
-    }
-    return sizes.get("ent", 0), sizes.get("rel", 0)
-
-
 def two_kg_dictionaries(
     all_triples: DataFrame,
     kg_expr,
     with_sizes: bool = False,
+    stage: Stage = in_memory,
+    prefix: str = "",
 ) -> tuple:
-    """:func:`combined_dictionary_frame`, materialized once and split.
+    """:func:`combined_dictionary_frame`, materialized once and split: the
+    stages ``<prefix>dictionaries``, ``<prefix>ent_ids`` and
+    ``<prefix>rel_ids``, run by ``stage`` (``session.Stage``).
 
     The localCheckpoint truncates lineage so downstream every
     broadcast-encode join reads materialized dictionary rows; without it
@@ -368,31 +357,51 @@ def two_kg_dictionaries(
     |vocab| rows — exactly the thing you want materialized.
 
     Returns (ent_ids, rel_ids), each DataFrame[kg, elem, freq, rank, id].
-    With ``with_sizes=True`` additionally returns (n_ent, n_rel) from
-    :func:`dictionary_sizes`.
+    With ``with_sizes=True`` additionally returns (n_ent, n_rel) row
+    counts, computed in ONE aggregate job over the materialized frame —
+    callers feed them to the encode joins' broadcast gates instead of
+    paying one count job per dictionary side per encode call.
     """
     # with_sizes: lazy checkpoint — the sizes aggregate right below is
     # the materializing job. Without sizes the eager materialization
     # stays: callers fan straight out into broadcast builds.
-    out = combined_dictionary_frame(all_triples, kg_expr).localCheckpoint(
-        eager=not with_sizes
+    out = stage(
+        f"{prefix}dictionaries",
+        lambda: combined_dictionary_frame(all_triples, kg_expr),
+        local="lazy" if with_sizes else "eager",
     )
-    parts = (dictionary_part(out, "ent"), dictionary_part(out, "rel"))
-    return (*parts, *dictionary_sizes(out)) if with_sizes else parts
+    cols = ["kg", "elem", "freq", "rank", "id"]
+    ent = stage(f"{prefix}ent_ids", lambda: out.filter("grp = 'ent'").select(*cols))
+    rel = stage(f"{prefix}rel_ids", lambda: out.filter("grp = 'rel'").select(*cols))
+    if with_sizes:
+        sizes = {
+            r["grp"]: r["n"]
+            for r in out.groupBy("grp").agg(F.count("*").alias("n")).collect()
+        }
+        return ent, rel, sizes.get("ent", 0), sizes.get("rel", 0)
+    return ent, rel
 
 
-def single_kg_dictionaries(triples: DataFrame, with_sizes: bool = False) -> tuple:
+def single_kg_dictionaries(
+    triples: DataFrame,
+    with_sizes: bool = False,
+    stage: Stage = in_memory,
+    prefix: str = "",
+) -> tuple:
     """D3 for BOTH the entity (roles s/o) and relation (role p)
     dictionaries of ONE triple set in a single pass: the one-KG case
-    (kg ≡ 1) of :func:`two_kg_dictionaries`. With no partner KG the
-    interleave degenerates to ``id == rank`` — D3's exact contract.
+    (kg ≡ 1) of :func:`two_kg_dictionaries`, with the same stages. With
+    no partner KG the interleave degenerates to ``id == rank`` — D3's
+    exact contract.
 
     Returns (ent_ids, rel_ids), each DataFrame[elem, freq, id],
     localCheckpoint-materialized; ``with_sizes=True`` adds (n_ent,
     n_rel) from one aggregate job (the materializing job) for
     downstream broadcast gates.
     """
-    ent, rel, *sizes = two_kg_dictionaries(triples, F.lit(1), with_sizes)
+    ent, rel, *sizes = two_kg_dictionaries(
+        triples, F.lit(1), with_sizes, stage, prefix
+    )
     cols = ["elem", "freq", "id"]
     return (ent.select(*cols), rel.select(*cols), *sizes)
 

@@ -38,6 +38,7 @@ the same rewrite as two plain left joins.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -49,10 +50,11 @@ from ontoea_spark.operators.dictionary import (
     _set_join,
     anti_join_keep_small,
     encode_triples,
+    single_kg_dictionaries,
 )
 from ontoea_spark.operators.filters import parse_entities
 from ontoea_spark.operators.graph import connected_components
-from ontoea_spark.pipeline.kg_build import Stage, in_memory, staged_dictionaries
+from ontoea_spark.session import Stage, in_memory
 
 
 @dataclass
@@ -96,11 +98,14 @@ def canonical_entity_map(
     )
 
 
-def _prepared_map(mapping: DataFrame) -> tuple[DataFrame, bool]:
-    """Materialize the map once (it feeds several joins) and decide the
-    broadcast gate from its actual row count. Lazy checkpoint + count:
-    one blocking job, not a materialize job followed by a count job."""
-    mapping = mapping.localCheckpoint(eager=False)
+def _prepared_map(
+    build: Callable[[], DataFrame], stage: Stage = in_memory
+) -> tuple[DataFrame, bool]:
+    """The map as stage ``canonical_map``, materialized once (it feeds
+    several joins), and the broadcast gate from its actual row count.
+    Lazy checkpoint + count: one blocking job, not a materialize job
+    followed by a count job."""
+    mapping = stage("canonical_map", build, local="lazy")
     return mapping, _fits_broadcast(mapping.count())
 
 
@@ -140,7 +145,7 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     edges collapse when their endpoints merge). Predicates are left
     untouched: entity alignment merges nodes, not relations.
     """
-    mapping, small = _prepared_map(mapping)
+    mapping, small = _prepared_map(lambda: mapping)
     return _rewrite_so(triples, mapping, small).select("s", "p", "o").distinct()
 
 
@@ -167,7 +172,7 @@ def canonical_triple_provenance(
     from ontoea_spark.pipeline.extract import provenance_agg, provenance_mentions
 
     m = provenance_mentions(pages_text, text_col, namespace_col, url_col, ts_col)
-    mapping, small = _prepared_map(mapping)
+    mapping, small = _prepared_map(lambda: mapping)
     return provenance_agg(_rewrite_so(m, mapping, small))
 
 
@@ -254,7 +259,7 @@ def ingest_canonical_batch(
     Disjoint keys by construction: map keys are never canonicals, remap
     keys never map keys, so the unions need no dedup.
     """
-    mapping, msmall = _prepared_map(mapping)
+    mapping, msmall = _prepared_map(lambda: mapping)
 
     # 1. resolve delta link endpoints through the existing map, then
     #    components over the resolved O(batch) link set only
@@ -381,7 +386,7 @@ def materialize_canonical(
 
 def canonicalize_kg(
     triples1: DataFrame,
-    triples2: DataFrame,
+    triples2: DataFrame | None,
     links: DataFrame,
     stage: Stage = in_memory,
 ) -> CanonicalKG:
@@ -389,17 +394,16 @@ def canonicalize_kg(
     dictionary -> edge/vertex tables, as stages canonical_map,
     canonical_triples, canonical_{dictionaries,ent_ids,rel_ids},
     canonical_edges and canonical_vertices, each run by ``stage``
-    (``kg_build.Stage``).
+    (``session.Stage``). ``triples2`` None: ``triples1`` already holds
+    both KGs' triples.
 
     The unified dictionary is the one-KG path (D3 ``mapping_id_oneKG``,
     reference read.py:64-69: id == frequency rank) over the CANONICAL
     triple set — merged nodes rank by their merged frequency, which is
     exactly the property the downstream adjacency/degree consumers want.
     """
-    all_t = triples1.unionByName(triples2)
-    # as _prepared_map: materialized once, gated on its actual row count
-    mapping = stage("canonical_map", lambda: canonical_entity_map(links), local="lazy")
-    small = _fits_broadcast(mapping.count())
+    all_t = triples1 if triples2 is None else triples1.unionByName(triples2)
+    mapping, small = _prepared_map(lambda: canonical_entity_map(links), stage)
     canon = stage(
         "canonical_triples",
         lambda: _rewrite_so(all_t, mapping, small).select("s", "p", "o").distinct(),
@@ -410,10 +414,11 @@ def canonicalize_kg(
         local="eager",
     )
     # both unified dictionaries in ONE grouped-rank pass over the
-    # canonical triples (one freq shuffle + one range shuffle), sizes from
-    # one aggregate job feeding the encode joins' broadcast gates
-    ent_ids, rel_ids, n_ent, n_rel = staged_dictionaries(
-        stage, canon, F.lit(1), prefix="canonical_", cols=("elem", "freq", "id")
+    # canonical triples (one freq shuffle + one range shuffle instead of
+    # two full single-dictionary scans), sizes from one aggregate job
+    # feeding the encode joins' broadcast gates (no per-side count jobs)
+    ent_ids, rel_ids, n_ent, n_rel = single_kg_dictionaries(
+        canon, with_sizes=True, stage=stage, prefix="canonical_"
     )
     edges = stage(
         "canonical_edges",

@@ -19,7 +19,7 @@ Failure policy of the build and canonicalization DAG: consumers read
 each stage's parquet snapshot, so a lost executor or block recomputes
 from the last completed snapshot at most, and a killed job resumes at
 the first incomplete stage. The plain ``build_kg`` / ``canonicalize_kg``
-(runner ``kg_build.in_memory``) keep shared stages as ``localCheckpoint``
+(runner ``session.in_memory``) keep shared stages as ``localCheckpoint``
 blocks: a lost block fails the job and nothing resumes it. ``run_job.py``
 runs the checkpointed runners, the build's reliable path.
 
@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 
 from ontoea_spark.functions.hashing import portable_hash64
 from ontoea_spark.pipeline.canonicalize import canonicalize_kg
-from ontoea_spark.pipeline.kg_build import Stage, build_kg
-from ontoea_spark.session import local_frame
+from ontoea_spark.pipeline.kg_build import build_kg
+from ontoea_spark.session import Stage, local_frame
 
 
 class _HadoopFS:
@@ -211,7 +211,7 @@ class CheckpointManager:
 def _parquet_stages(
     cp: CheckpointManager, layouts: dict, suffix: str = ""
 ) -> tuple[Stage, dict[str, str]]:
-    """``cp.run_stage`` as a ``kg_build.Stage``: stage ``name`` snapshots to
+    """``cp.run_stage`` as a ``session.Stage``: stage ``name`` snapshots to
     ``name + suffix`` with its parquet layout from ``layouts`` (the
     snapshot replaces the in-memory ``local`` checkpoint). Also returns
     the name -> snapshot-name map, filled as the DAG runs."""
@@ -280,13 +280,7 @@ def run_canonicalize_checkpointed(
     stage, names = _parquet_stages(
         cp, {"canonical_edges": {"repartition": (partitions, "s_id")}}, f"_{fp}"
     )
-    t = build["triples"]
-    kg = canonicalize_kg(
-        t.filter(F.col("s").startswith("kg1:")),
-        t.filter(F.col("s").startswith("kg2:")),
-        links,
-        stage,
-    )
+    kg = canonicalize_kg(build["triples"], None, links, stage)
     cp.record_drop_metrics(names["canonical_edges"], names["canonical_triples"])
     keys = ("triples", "ent_ids", "rel_ids", "edges", "vertices")
     return {

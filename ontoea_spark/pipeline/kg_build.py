@@ -17,7 +17,6 @@ involved.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -25,50 +24,11 @@ from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
     _fits_broadcast,
-    combined_dictionary_frame,
-    dictionary_part,
-    dictionary_sizes,
     encode_triples_two_kg,
+    two_kg_dictionaries,
 )
 from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
-
-#: A stage runner, ``stage(name, build, local=None) -> DataFrame``: the
-#: frame of stage ``name``, from ``build()`` when it must be computed.
-#: :func:`in_memory` is the plain runner; ``pipeline/checkpoint.py``'s
-#: runners snapshot each stage to parquet and resume.
-Stage = Callable[..., DataFrame]
-
-
-def in_memory(
-    name: str, build: Callable[[], DataFrame], local: str | None = None
-) -> DataFrame:
-    """The plain stage runner: ``local='lazy'``/``'eager'`` localCheckpoints
-    the stage so its consumers read one materialization; other stages
-    stay lazy plans."""
-    df = build()
-    return df if local is None else df.localCheckpoint(eager=local == "eager")
-
-
-def staged_dictionaries(
-    stage: Stage, triples: DataFrame, kg_expr, prefix: str = "", cols=None
-) -> tuple:
-    """Stages ``<prefix>dictionaries`` (one grouped-rank pass for both),
-    ``<prefix>ent_ids`` and ``<prefix>rel_ids`` (``cols`` of each, all by
-    default), plus (n_ent, n_rel) from one aggregate job. Under
-    :func:`in_memory` this is ``two_kg_dictionaries(..., with_sizes=True)``."""
-    dicts = stage(
-        f"{prefix}dictionaries",
-        lambda: combined_dictionary_frame(triples, kg_expr),
-        local="lazy",
-    )
-
-    def part(grp: str) -> DataFrame:
-        d = dictionary_part(dicts, grp)
-        return d if cols is None else d.select(*cols)
-
-    ent_ids = stage(f"{prefix}ent_ids", lambda: part("ent"))
-    rel_ids = stage(f"{prefix}rel_ids", lambda: part("rel"))
-    return (ent_ids, rel_ids, *dictionary_sizes(dicts))
+from ontoea_spark.session import Stage, in_memory
 
 
 @dataclass
@@ -127,10 +87,12 @@ def build_kg(pages: DataFrame, stage: Stage = in_memory) -> KGBuildResult:
     triples2 = all_triples.filter(F.col("s").startswith("kg2:"))
     # both dictionaries for both KGs in ONE pass over the triple stream
     # (one freq shuffle + one range shuffle instead of four of each);
-    # the sizes feed the encode joins' broadcast gates from one
+    # with_sizes feeds the encode joins' broadcast gates from one
     # aggregate job instead of one count job per dictionary per call
     kg_expr = F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2))
-    ent_ids, rel_ids, n_ent, n_rel = staged_dictionaries(stage, all_triples, kg_expr)
+    ent_ids, rel_ids, n_ent, n_rel = two_kg_dictionaries(
+        all_triples, kg_expr, with_sizes=True, stage=stage
+    )
     # one-pass encode of BOTH KGs: three gated-broadcast joins total
     # (the per-KG encode pair costs six and scans the triples twice)
     edges = stage(

@@ -10,6 +10,11 @@ Package code turns a driver-held row list into a DataFrame only through
 worker task per slice on every job that scans it, while the checkpointed
 frame pays that Python pass once and serves later scans from JVM blocks.
 
+A multi-step DAG (``build_kg``, ``canonicalize_kg``, the dictionary
+builders) names its shared intermediates as stages and runs each through
+a stage runner: ``in_memory`` here, or the parquet-snapshotting runner
+of ``pipeline/checkpoint.py``.
+
 The driver JVM runs with a fixed JIT and collector profile,
 ``-XX:CICompilerCount=2 -XX:+UseParallelGC``: one C1 and one C2 compiler
 thread (the JVM's default on 4 cores is one C1 and two C2) and the
@@ -51,6 +56,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -116,3 +122,18 @@ def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         jdf = spark._jsparkSession.createDataFrame(spark._jsc.emptyRDD(), struct)
         return DataFrame(jdf, spark)
     return spark.createDataFrame(rows, schema).localCheckpoint(eager=False)
+
+
+#: A stage runner, ``stage(name, build, local=None) -> DataFrame``: the
+#: frame of stage ``name``, from ``build()`` when it must be computed.
+Stage = Callable[..., DataFrame]
+
+
+def in_memory(
+    name: str, build: Callable[[], DataFrame], local: str | None = None
+) -> DataFrame:
+    """The plain stage runner: ``local='lazy'``/``'eager'`` localCheckpoints
+    the stage so its consumers read one materialization; other stages
+    stay lazy plans."""
+    df = build()
+    return df if local is None else df.localCheckpoint(eager=local == "eager")

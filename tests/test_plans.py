@@ -470,7 +470,7 @@ def test_checkpoint_runs_the_dags_not_their_steps():
         for mod in (extract, dictionary, canonicalize, kg_build)
         for name, obj in vars(mod).items()
         if callable(obj) and getattr(obj, "__module__", None) == mod.__name__
-    } - {"build_kg", "canonicalize_kg", "Stage"}
+    } - {"build_kg", "canonicalize_kg"}
     tree = ast.parse(
         pathlib.Path(REPO, "ontoea_spark", "pipeline", "checkpoint.py").read_text()
     )
