@@ -32,19 +32,10 @@ def _ensure_shipped(spark: SparkSession) -> None:
     if getattr(_ensure_shipped, "_done_for", None) is spark:
         return
     import tempfile
-    import zipfile
 
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"ontoea_spark_pkg_{os.getpid()}.zip"
-    )
-    pkgdir = os.path.join(_REPO, "ontoea_spark")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkgdir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zpath)
+    from ontoea_spark.package_zip import versioned_zip
+
+    spark.sparkContext.addPyFile(versioned_zip(tempfile.gettempdir()))
     _ensure_shipped._done_for = spark
 
 

@@ -46,11 +46,17 @@ def pagerank(
     per round so the iterative plan never snowballs. Nothing but the
     vertex count touches the driver.
 
+    An edge with a NULL endpoint is dropped before the vertex count:
+    NULL is no vertex, so it neither gets a rank nor dilutes 1/N. No
+    edges give an empty frame.
+
     Returns DataFrame[id, pagerank] (6dp-rounded at the END only).
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .distinct()
+    )
     verts = (
         e.select(F.col("src").alias("id"))
         .union(e.select("dst"))
@@ -58,6 +64,8 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     n = verts.count()  # materializes the lazy checkpoint in the same job
+    if n == 0:
+        return verts.select("id", F.lit(None).cast("double").alias("pagerank"))
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     ed = e.join(deg, "src").localCheckpoint(eager=False)
     ranks = verts.select("id", F.lit(1.0 / n).alias("rank"))

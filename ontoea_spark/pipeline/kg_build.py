@@ -74,14 +74,15 @@ def build_kg(pages: DataFrame, stage: Stage = in_memory) -> KGBuildResult:
     # ONE extraction + dedup pass over the corpus (the kg tag rides along
     # in the namespace prefix, so a single distinct covers both KGs),
     # shared by every downstream branch (dictionaries, edges, links).
-    # Lazy localCheckpoint instead of cache(): same one-materialization
-    # sharing, but consumers' plans are truncated to the materialized
-    # RDD — measured ~0.8s faster on the cold end-to-end pipeline pass
-    # (cache keeps the full extraction lineage in every consumer plan)
+    # localCheckpoint instead of cache(): consumers' plans are truncated
+    # to the materialized RDD (cache keeps the full extraction lineage in
+    # every consumer plan). Eager: the first consumer is the dictionary
+    # job, whose union branches would each ask for the same partition,
+    # one computing it while the others wait on its block
     all_triples = stage(
         "triples",
         lambda: extract_triples(tagged.select("kg", "text"), namespace_col="kg"),
-        local="lazy",
+        local="eager",
     )
     triples1 = all_triples.filter(F.col("s").startswith("kg1:"))
     triples2 = all_triples.filter(F.col("s").startswith("kg2:"))

@@ -15,6 +15,40 @@ def test_entry_returns_edges(spark):
     assert [f.name for f in df.schema.fields] == ["s_id", "p_id", "o_id", "kg"]
 
 
+def test_build_kg_computes_triples_in_one_task(spark):
+    """The stage that first computes the triples stage runs one task per
+    partition. Checkpointed lazily, the triples were first computed by
+    the dictionary job, whose union branches each asked for the same
+    partition: one task computed it while the others held a core waiting
+    for its block (and at times logged ``Block rdd_N_0 already exists on
+    this machine; not re-adding it``)."""
+    from ontoea_spark.pipeline.kg_build import build_kg
+    from ontoea_spark.pipeline.pages import synthesize_pages
+
+    sc = spark.sparkContext
+    sc.setJobGroup("build_kg_triples", "build_kg")
+    try:
+        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        result = build_kg(synthesize_pages(docs))
+        for df in (result.edges, result.vertices, result.links):
+            df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    rdd = result.triples._jdf.queryExecution().logical().rdd()
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    stages = {
+        s for j in tracker.getJobIdsForGroup("build_kg_triples")
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    first = min(
+        (st.submissionTime().get().getTime(), st.stageId(), st.numTasks())
+        for st in map(store.lastStageAttempt, stages)
+        if st.submissionTime().isDefined() and st.rddIds().contains(rdd.id())
+    )
+    assert first[2] == rdd.getNumPartitions(), first
+
+
 def test_extraction_byte_identical(spark):
     """BASELINE.json:15 invariant: extracted text == gold text per url."""
     from ontoea_spark.pipeline.extract import extract_pages_text
@@ -122,3 +156,26 @@ def test_driver_window_contract(spark):
     no_oracle = [n for n in q if n not in o]
     assert q[-len(no_oracle):] == no_oracle, (
         "no-oracle queries must be last", no_oracle)
+
+
+def test_shipped_package_is_one_file_per_version(tmp_path, monkeypatch):
+    """Sessions of different processes ship one zip, named by the package
+    sources, not one zip per process id."""
+    import os
+    import tempfile
+    import zipfile
+    from types import SimpleNamespace
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    shipped = []
+    for pid in (101, 102):
+        monkeypatch.setattr(os, "getpid", lambda pid=pid: pid)
+        entrymod._ensure_shipped(SimpleNamespace(
+            sparkContext=SimpleNamespace(addPyFile=shipped.append)
+        ))
+    assert len(shipped) == 2 and shipped[0] == shipped[1]
+    assert os.listdir(tmp_path) == [os.path.basename(shipped[0])]
+    with zipfile.ZipFile(shipped[0]) as z:
+        assert "ontoea_spark/session.py" in z.namelist()

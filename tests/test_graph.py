@@ -55,3 +55,31 @@ def test_cc_ignores_pair_endpoints_outside_nodes(spark):
     # id 5 is undeclared: no output row for it, and 9 must not learn a
     # label through it; 7-9 are connected within the declared set
     assert out == {7: 7, 9: 7}
+
+
+def test_pagerank_empty_edges(spark):
+    """No edges give an empty [id, pagerank] frame, not 1/0."""
+    from ontoea_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([], "src string, dst string")
+    out = pagerank(edges)
+    assert out.columns == ["id", "pagerank"]
+    assert out.collect() == []
+
+
+def test_pagerank_drops_null_endpoints(spark):
+    """An edge with a NULL endpoint is dropped before the vertex count:
+    no NULL id row, and the other ranks are those of the graph without
+    it."""
+    from ontoea_spark.operators.graph import pagerank
+
+    clean = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
+    dirty = clean + [("a", None), (None, "b"), (None, None)]
+    ranks = [
+        {r.id: r.pagerank for r in pagerank(
+            spark.createDataFrame(rows, "src string, dst string")
+        ).collect()}
+        for rows in (clean, dirty)
+    ]
+    assert ranks[1] == ranks[0]
+    assert set(ranks[0]) == {"a", "b", "c"}

@@ -1,11 +1,14 @@
-"""The driver JVM profile that ``get_spark`` gives the session it starts.
+"""The driver JVM profile that ``get_spark`` gives the session it starts,
+and the class-data-sharing archive it maps or dumps.
 
 Only the first session of a Python process starts the JVM, so the
-caller-option cases each run ``get_spark`` in a fresh interpreter.
+caller-option and archive cases each run ``get_spark`` in a fresh
+interpreter; the archive cases with their own ``XDG_CACHE_HOME``.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -16,32 +19,55 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROFILE = ["-XX:CICompilerCount=2", "-XX:+UseParallelGC"]
 
 _CHILD = """
-import json, sys
+import json, os, sys
 from ontoea_spark.session import get_spark
+conf_dir = os.environ.get("SPARK_CONF_DIR")
 spark = get_spark("test-session", master="local[1]",
                   extra_conf={"spark.driver.extraJavaOptions": sys.argv[1]})
 mf = spark._jvm.java.lang.management.ManagementFactory
+with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/maps") as f:
+    maps = f.read().splitlines()
 print("RESULT " + json.dumps({
     "args": [str(a) for a in mf.getRuntimeMXBean().getInputArguments()],
     "gcs": [str(g.getName()) for g in mf.getGarbageCollectorMXBeans()],
     "rows": spark.range(100).selectExpr("id % 7 AS k").distinct().count(),
+    "mapped": sorted({ln.split()[-1] for ln in maps if ln.endswith(".jsa")}),
+    "conf_dir_kept": os.environ.get("SPARK_CONF_DIR") == conf_dir,
+    "probe": spark.conf.get("spark.ontoea.probe", None),
 }), flush=True)
 spark.stop()
 """
 
 
-def _fresh_session(java_options: str) -> dict:
-    """JVM arguments, collector names and one job's result of a session
-    that ``get_spark`` starts in a new interpreter with the caller's
-    ``spark.driver.extraJavaOptions``."""
-    env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g")
+def _fresh_session(java_options: str, **env: str) -> dict:
+    """JVM arguments, collector names, mapped archives and one job's
+    result of a session that ``get_spark`` starts in a new interpreter
+    with the caller's ``spark.driver.extraJavaOptions`` and ``env``.
+    Asserts that the result is the only line on stdout."""
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g", **env)
     out = subprocess.run(
         [sys.executable, "-c", _CHILD, java_options],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    line = next(x for x in out.stdout.splitlines() if x.startswith("RESULT "))
-    return json.loads(line[len("RESULT "):])
+    lines = out.stdout.splitlines()
+    assert len(lines) == 1 and lines[0].startswith("RESULT "), out.stdout[-4000:]
+    return json.loads(lines[0][len("RESULT "):])
+
+
+def _archive_base(cache: str) -> str:
+    """The path, less its suffix, of this host's archive under ``cache``."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from ontoea_spark.session import _archive_key, _java_home
+
+    key = _archive_key(_java_home(), _find_spark_home())
+    return os.path.join(cache, "ontoea_spark", "jvm", key)
+
+
+def _flag(args: list[str], name: str) -> str | None:
+    """The value of ``-XX:<name>=...`` in ``args``."""
+    return next((a.split("=", 1)[1] for a in args if a.startswith(f"-XX:{name}=")), None)
 
 
 def test_fixture_jvm_has_profile(spark):
@@ -63,4 +89,71 @@ def test_caller_collector_is_kept():
     assert "-XX:+UseG1GC" in got["args"] and "-XX:CICompilerCount=2" in got["args"]
     assert "-XX:+UseParallelGC" not in got["args"], got["args"]
     assert any(name.startswith("G1 ") for name in got["gcs"]), got["gcs"]
+    assert got["rows"] == 7
+
+
+def test_archive_is_dumped_then_mapped(tmp_path):
+    """The first session dumps the archive as its JVM exits; the next
+    publishes it and maps it, with the caller's options and collector
+    kept. The conf directory swap leaves the caller's environment as it
+    was."""
+    cache = str(tmp_path / "cache")
+    tmpdir = f"-Djava.io.tmpdir={tmp_path}"
+    first = _fresh_session(tmpdir, XDG_CACHE_HOME=cache)
+    part = _flag(first["args"], "ArchiveClassesAtExit")
+    assert part and part.endswith(".part"), first["args"]
+    assert first["rows"] == 7 and first["conf_dir_kept"]
+    base = _archive_base(cache)
+    assert os.path.dirname(part) == os.path.dirname(base)
+    with open(part, "rb") as f:  # whole before the interpreter returned
+        assert f.read(4) == (0xF00BABA8).to_bytes(4, "little")
+
+    second = _fresh_session(f"{tmpdir} -XX:+UseG1GC", XDG_CACHE_HOME=cache)
+    assert _flag(second["args"], "SharedArchiveFile") == base + ".jsa", second["args"]
+    assert base + ".jsa" in second["mapped"], second["mapped"]
+    assert glob.glob(os.path.join(os.path.dirname(base), "*.*")) == [base + ".jsa"]
+    assert tmpdir in second["args"] and "-XX:+UseG1GC" in second["args"]
+    assert "-XX:+UseParallelGC" not in second["args"]
+    assert any(name.startswith("G1 ") for name in second["gcs"]), second["gcs"]
+    assert second["rows"] == 7 and second["conf_dir_kept"]
+
+
+def test_bad_archive_or_dead_dump_still_starts(tmp_path):
+    """A published file the JVM cannot use, or a dump its writer left
+    unfinished, never stops the JVM from starting."""
+    cache = str(tmp_path / "cache")
+    base = _archive_base(cache)
+    os.makedirs(os.path.dirname(base))
+    magic = (0xF00BABA8).to_bytes(4, "little")
+    with open(base + ".jsa", "wb") as f:
+        f.write(magic + os.urandom(4096))
+    got = _fresh_session("-Dx=1", XDG_CACHE_HOME=cache)
+    assert _flag(got["args"], "SharedArchiveFile") == base + ".jsa", got["args"]
+    assert got["rows"] == 7 and base + ".jsa" not in got["mapped"]
+
+    os.unlink(base + ".jsa")
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    stale = f"{base}.{dead.pid}.part"
+    with open(stale, "wb") as f:
+        f.write(b"\0" * 4096)
+    with open(base + ".lock", "w") as f:
+        f.write(f"{dead.pid} {os.path.basename(stale)}\n")
+    got = _fresh_session("-Dx=1", XDG_CACHE_HOME=cache)
+    part = _flag(got["args"], "ArchiveClassesAtExit")
+    assert part and part != stale and not os.path.exists(stale), got["args"]
+    assert got["rows"] == 7
+
+
+def test_conf_file_keeps_the_plain_start(tmp_path):
+    """A real file in the conf directory keeps it on the classpath: the
+    session reads it and starts with no archive flag."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.ontoea.probe 1\n")
+    got = _fresh_session(
+        "-Dx=1", SPARK_CONF_DIR=str(conf), XDG_CACHE_HOME=str(tmp_path / "cache")
+    )
+    assert got["probe"] == "1" and got["conf_dir_kept"]
+    assert not any("Archive" in a or "cds" in a for a in got["args"]), got["args"]
     assert got["rows"] == 7
