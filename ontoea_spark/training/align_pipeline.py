@@ -111,9 +111,16 @@ def prepare_from_parts(
         )
         .cache()
     )
+    # the dictionary sides are hinted: unhinted, AQE broadcasts whichever
+    # side's shuffle stage finishes first, and the build side sets the
+    # row order the trainer RNG walks. The repartition keeps the order
+    # that links had after the plain plan's hash exchange on e1
+    e1_ids = e1m.select(F.col("elem").alias("e1"), F.col("id").alias("id1"))
+    e2_ids = e2m.select(F.col("elem").alias("e2"), F.col("id").alias("id2"))
     links_ids = (
-        links.join(e1m.select(F.col("elem").alias("e1"), F.col("id").alias("id1")), "e1")
-        .join(e2m.select(F.col("elem").alias("e2"), F.col("id").alias("id2")), "e2")
+        links.repartition("e1")
+        .join(_gated_broadcast(e1_ids, ent_small), "e1")
+        .join(_gated_broadcast(e2_ids, ent_small), "e2")
         .select("id1", "id2")
     )
     links_split = split_links(links_ids).cache()
@@ -135,28 +142,26 @@ def prepare_from_parts(
         ).cast("long").alias("cls_id"),
     ).cache()
     all_ent = ent_ids.select(F.col("elem").alias("entity"), F.col("id"))
+    # cv_ids and sub_j are built as links_ids is; the class side is a few
+    # rows (training holds an n_cls x n_cls matrix on the driver)
     cv_ids = (
-        cv.join(cls_ids, "cls")
-        .join(all_ent, "entity")
+        cv.repartition("cls")
+        .join(F.broadcast(cls_ids), "cls")
+        .join(_gated_broadcast(all_ent, ent_small), "entity")
         .select(F.col("id").alias("ent_id"), "cls_id")
         .cache()
     )
+    child_ids = cls_ids.withColumnRenamed("cls", "child").withColumnRenamed("cls_id", "child_id")
+    parent_ids = cls_ids.withColumnRenamed("cls", "parent").withColumnRenamed("cls_id", "parent_id")
     sub_j = (
-        sub.join(
-            cls_ids.withColumnRenamed("cls", "child").withColumnRenamed("cls_id", "child_id"),
-            "child",
-        )
-        .join(
-            cls_ids.withColumnRenamed("cls", "parent").withColumnRenamed("cls_id", "parent_id"),
-            "parent",
-        )
+        sub.repartition("child")
+        .join(F.broadcast(child_ids), "child")
+        .join(F.broadcast(parent_ids), "parent")
         .select("child_id", "parent_id")
     )
     sub_arr = np.array(
         [[r.child_id, r.parent_id] for r in sub_j.collect()], dtype=np.int64
     ).reshape(-1, 2)
-    # after sub_j: collecting cls_ids first would change sub_j's join plan,
-    # and with it the sub_ids row order the trainer RNG walks
     id_of = {r.cls: r.cls_id for r in cls_ids.collect()}
     n_cls = len(id_of)
 

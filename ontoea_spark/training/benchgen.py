@@ -102,25 +102,11 @@ def generate_two_kg(
         for kg in (1, 2)
         for i in range(n_ent)
     ]
-    def df(rows: list, schema: str) -> DataFrame:
-        # >100k rows: go through pandas (Arrow-batched when enabled) —
-        # the row-list converter is driver-bound at benchmark scale.
-        # Smaller lists go through local_frame: every consumer job scans
-        # these inputs, and a plain row-list frame re-runs a Python worker
-        # per slice on each scan
-        if len(rows) > 100_000:
-            import pandas as pd
-
-            cols = [f.split()[0] for f in schema.split(", ")]
-            return spark.createDataFrame(
-                pd.DataFrame(rows, columns=cols), schema
-            )
-        return local_frame(spark, rows, schema)
 
     return TwoKGBenchmark(
-        triples1=df(t1, "s string, p string, o string"),
-        triples2=df(t2, "s string, p string, o string"),
-        links=df(links, "e1 string, e2 string"),
-        cv=df(cv, "entity string, cls string"),
+        triples1=local_frame(spark, t1, "s string, p string, o string"),
+        triples2=local_frame(spark, t2, "s string, p string, o string"),
+        links=local_frame(spark, links, "e1 string, e2 string"),
+        cv=local_frame(spark, cv, "entity string, cls string"),
         n_ent=n_ent,
     )

@@ -243,19 +243,16 @@ _TRAINER_INPUT_MD5 = {
 }
 
 
-def test_trainer_inputs_keep_their_order(spark):
-    """Edges, cv, split links, subclass pairs, the conflict matrix and
-    the class paths come out of prepare in the pinned row order."""
+def _trainer_input_md5(d) -> dict:
+    """md5 of each trainer input of a prepare, in its row order."""
     import hashlib
 
     def md5(x) -> str:
         raw = x.tobytes() if isinstance(x, np.ndarray) else repr(x).encode()
         return hashlib.md5(raw).hexdigest()
 
-    b = generate_two_kg(spark, n_ent=200, seed=11, vectorized=True)
-    d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
     edges = d.edges.select("s_id", "p_id", "o_id").collect()
-    got = {
+    return {
         "cls_path_ids": md5(
             sorted((int(k), [int(x) for x in v]) for k, v in d.cls_path_ids.items())
         ),
@@ -265,7 +262,38 @@ def test_trainer_inputs_keep_their_order(spark):
         "onto_mat": md5(np.ascontiguousarray(d.onto_mat, dtype=np.float64)),
         "sub_ids": md5(np.ascontiguousarray(d.sub_ids, dtype=np.int64)),
     }
-    assert got == _TRAINER_INPUT_MD5
+
+
+def test_trainer_inputs_keep_their_order(spark):
+    """Edges, cv, split links, subclass pairs, the conflict matrix and
+    the class paths come out of prepare in the pinned row order."""
+    b = generate_two_kg(spark, n_ent=200, seed=11, vectorized=True)
+    d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
+    assert _trainer_input_md5(d) == _TRAINER_INPUT_MD5
+
+
+def test_repeated_prepares_keep_their_order(spark):
+    """Back-to-back prepares of one input, in one session, give the same
+    trainer inputs: no join's build side (and so no row order the
+    trainer RNG walks) depends on which shuffle stage AQE sees finish
+    first. The input is the ``align`` benchmark's (600 entities per KG,
+    seed 4, at its 4 shuffle partitions), where an unhinted dictionary
+    join flipped sides in some prepares."""
+    b = generate_two_kg(
+        spark, n_ent=600, n_rel=24, n_triples=4800, seed=4, vectorized=True
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        runs = []
+        for _ in range(5):
+            spark.catalog.clearCache()
+            d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
+            runs.append(_trainer_input_md5(d))
+    finally:
+        spark.catalog.clearCache()
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert all(r == runs[0] for r in runs), runs
 
 
 def test_training_determinism(bench_data):

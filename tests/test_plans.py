@@ -372,24 +372,25 @@ def test_r6_ranks_vs_gold_unforced(spark):
     assert out == [(0, 1)]
 
 
-def _reads_python(df) -> bool:
-    """After one job, does the frame's RDD lineage still hold a Python
-    worker stage (re-run by every later job that scans it)?"""
-    df.count()
+def _holds_python(df) -> bool:
+    """Does the frame's RDD lineage hold a Python worker stage (run by
+    every job that scans it)?"""
     return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
 
 
-def test_driver_rows_frames_read_python_once(spark):
-    """Frames built from driver-held rows pay one Python pass: once a
-    job has scanned them, no later job starts a Python worker to re-read
-    the rows, and an empty frame never starts one."""
+def test_driver_rows_frames_start_no_python_worker(spark):
+    """Frames built from driver-held rows reach the JVM as Arrow: their
+    lineage holds no Python worker stage, before their first job and
+    after it, and neither do the prepared alignment inputs built over
+    them. An empty frame has no partition."""
     from types import SimpleNamespace
 
     import numpy as np
 
     from ontoea_spark.ontology.fixture import synth_ontology
     from ontoea_spark.session import local_frame
-    from ontoea_spark.training.align_pipeline import _split_embeds
+    from ontoea_spark.training.align_pipeline import _split_embeds, prepare_from_parts
+    from ontoea_spark.training.benchgen import generate_two_kg
 
     leaves = spark.range(3).selectExpr("concat('cls:', char(97 + id)) AS cls")
     subclass, disjoint = synth_ontology(spark, leaves)
@@ -401,10 +402,17 @@ def test_driver_rows_frames_read_python_once(spark):
     )
     _, left, right = _split_embeds(spark, data, model, "test")
     empty = local_frame(spark, [], "lid long, rid long, sim double")
+    b = generate_two_kg(spark, n_ent=40, n_triples=160, seed=3, vectorized=True)
     frames = dict(
-        subclass=subclass, disjoint=disjoint, left=left, right=right, empty=empty
+        subclass=subclass, disjoint=disjoint, left=left, right=right, empty=empty,
+        triples1=b.triples1, triples2=b.triples2, links=b.links, cv=b.cv,
     )
-    assert [k for k, df in frames.items() if _reads_python(df)] == []
+    assert [k for k, df in frames.items() if _holds_python(df)] == []
+    d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
+    frames.update(edges=d.edges, links_split=d.links_split, cv_ids=d.cv_ids)
+    for df in frames.values():
+        df.count()
+    assert [k for k, df in frames.items() if _holds_python(df)] == []
     assert empty.rdd.getNumPartitions() == 0 and empty.collect() == []
     assert left.count() == right.count() == 4
 
@@ -412,7 +420,9 @@ def test_driver_rows_frames_read_python_once(spark):
 def test_row_lists_become_frames_only_through_local_frame():
     """Source guard: outside ``session.local_frame``, package code hands
     ``createDataFrame`` only pandas frames (an Arrow local relation, no
-    Python worker), never a Python row list."""
+    Python worker), never a Python row list (a Python RDD, read by a
+    worker task per slice in every job). ``local_frame`` sends its rows
+    to the JVM as Arrow too, but keeps a row-list frame's plans."""
     import ast
     import pathlib
 

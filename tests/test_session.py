@@ -1,5 +1,6 @@
 """The driver JVM profile that ``get_spark`` gives the session it starts,
-and the class-data-sharing archive it maps or dumps.
+the class-data-sharing archive it maps or dumps, and the driver-rows
+frames of ``local_frame``.
 
 Only the first session of a Python process starts the JVM, so the
 caller-option and archive cases each run ``get_spark`` in a fresh
@@ -157,3 +158,78 @@ def test_conf_file_keeps_the_plain_start(tmp_path):
     assert got["probe"] == "1" and got["conf_dir_kept"]
     assert not any("Archive" in a or "cds" in a for a in got["args"]), got["args"]
     assert got["rows"] == 7
+
+
+def test_local_frame_types_and_nulls_match_row_lists(spark):
+    """Driver rows reach the JVM through Arrow with the values, types and
+    NULLs that ``createDataFrame(rows, schema)`` gives them (UTC
+    session); no rows give a zero-partition frame."""
+    import datetime as dt
+
+    from ontoea_spark.session import local_frame
+
+    schema = (
+        "id long, n int, name string, vec array<double>, ts timestamp, "
+        "day date, x double, ok boolean"
+    )
+    utc = dt.timezone.utc
+    rows = [
+        (1, 7, "a", [0.5, -1.25], dt.datetime(2024, 3, 1, 12, 30, 15, 250, tzinfo=utc),
+         dt.date(2024, 3, 1), 0.1, True),
+        (None, None, None, None, None, None, None, None),
+        (2**40, -3, "", [], dt.datetime(1969, 12, 31, 23, 59, 59, tzinfo=utc),
+         dt.date(1970, 1, 1), float("inf"), False),
+        (-5, 0, "ü☃", [None, 2.0], dt.datetime(2000, 1, 1), None, -0.0, None),
+    ]
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert [r.ts for r in got.collect()] == [r.ts for r in want.collect()]
+    empty = local_frame(spark, [], schema)
+    assert empty.rdd.getNumPartitions() == 0 and empty.collect() == []
+    assert empty.schema == want.schema
+
+
+_PREPARE_CHILD = """
+import json, os
+from ontoea_spark.session import get_spark
+from ontoea_spark.training.align_pipeline import prepare_from_parts
+from ontoea_spark.training.benchgen import generate_two_kg
+spark = get_spark("test-prepare", master="local[2]")
+b = generate_two_kg(spark, n_ent=60, n_triples=240, seed=2, vectorized=True)
+d = prepare_from_parts(spark, b.triples1, b.triples2, b.links, b.cv)
+rows = d.edges.count() + d.links_split.count() + d.cv_ids.count()
+
+def tree(pid):
+    kids = []
+    for task in os.listdir(f"/proc/{pid}/task"):
+        with open(f"/proc/{pid}/task/{task}/children") as f:
+            kids += [int(k) for k in f.read().split()]
+    return [pid] + [p for k in kids for p in tree(k)]
+
+def cmdline(pid):
+    with open(f"/proc/{pid}/cmdline", "rb") as f:
+        return f.read().replace(b"\\0", b" ").decode()
+
+workers = [cmdline(p) for p in tree(spark.sparkContext._gateway.proc.pid)
+           if "pyspark.daemon" in cmdline(p) or "pyspark.worker" in cmdline(p)]
+print("RESULT " + json.dumps({"rows": rows, "workers": workers}), flush=True)
+spark.stop()
+"""
+
+
+def test_cold_prepare_starts_no_python_worker():
+    """A fresh session's prepare over ``generate_two_kg`` frames (the
+    ``align`` benchmark's path) starts no Python worker process: every
+    driver-held row list reaches the JVM as Arrow."""
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _PREPARE_CHILD],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    line = next(ln for ln in out.stdout.splitlines() if ln.startswith("RESULT "))
+    got = json.loads(line[len("RESULT "):])
+    assert got["rows"] > 0 and got["workers"] == [], got
